@@ -14,24 +14,18 @@ Two entry points with identical semantics (asserted equal in tests):
 
   * :func:`analyze_text`  — one text → one result dict (the pytest oracle);
   * :func:`analyze_frame` — a pandas Series of texts → a pandas DataFrame,
-    with the pattern layers vectorized via pandas str ops (which use
-    CPython ``re``, preserving regex semantics).  This is the inner loop
-    of the Spark ``mapInPandas`` stage.
+    one call per Arrow batch inside the ``score_turns`` pandas UDF.  Its
+    pattern layers run CPython ``re`` (the reference's engine) only on
+    the rows a literal gate (:mod:`localmod_spark.kernel.literals`)
+    leaves as possible matches.
 """
 
 from __future__ import annotations
 
-import warnings
 from typing import Callable, List, Mapping, NamedTuple, Optional
 
 import numpy as np
 import pandas as pd
-
-# pandas warns that str.contains patterns with groups "may" want extract;
-# we only use truthiness, matching the reference's findall-truthiness.
-warnings.filterwarnings(
-    "ignore", message="This pattern is interpreted as a regular expression"
-)
 
 from localmod_spark.kernel import injection as inj_mod
 from localmod_spark.kernel import nsfw as nsfw_mod
@@ -39,6 +33,7 @@ from localmod_spark.kernel import spam as spam_mod
 from localmod_spark.kernel import toxicity as tox_mod
 from localmod_spark.kernel.injection import injection_result
 from localmod_spark.kernel.langid import detect_language
+from localmod_spark.kernel.literals import gated_search, required_literals
 from localmod_spark.kernel.nsfw import nsfw_result
 from localmod_spark.kernel.pii import pii_result_from, pii_scrub
 from localmod_spark.kernel.quality import quality_flagged, quality_score, quality_stats
@@ -90,6 +85,20 @@ class PipelineConfig(NamedTuple):
 
 
 DEFAULT_CONFIG = PipelineConfig()
+
+# Every regex analyze_frame runs → its necessary literals (see
+# kernel/literals.py), derived once per worker at import from the
+# pattern's own parse tree.
+GATE_LITERALS = {
+    p: required_literals(p)
+    for p in (
+        *(p for _, p, _ in spam_mod._COMPILED),
+        *(p for _, p in inj_mod._CAT_ALT),
+        nsfw_mod._KEYWORD_ALT,
+        nsfw_mod._SUGGESTIVE_ALT,
+        nsfw_mod._SAFE_ALT,
+    )
+}
 
 
 def config_from_env(environ=None) -> PipelineConfig:
@@ -281,12 +290,13 @@ def _severity_bands(conf: np.ndarray, flagged: np.ndarray, bands) -> np.ndarray:
 def analyze_frame(texts: pd.Series, cfg: PipelineConfig = DEFAULT_CONFIG) -> pd.DataFrame:
     """Vectorized batch scoring: one call per Arrow batch on executors.
 
-    Pattern layers (spam/injection/nsfw-keyword) run as pandas ``str``
-    ops — pandas dispatches to CPython ``re``, so match semantics equal the
-    reference's.  PII scan/scrub, toxicity lexicon, langid and quality run
-    as tight per-text loops over the batch (regex-backtracking-bound work
-    that cannot be expressed columnar) — still one Python roundtrip per
-    thousands of rows, never a per-row UDF.
+    Pattern layers (spam/injection/nsfw) run each regex only on its
+    candidate rows: non-ASCII rows and rows whose lowered text contains
+    one of the pattern's :data:`GATE_LITERALS`; every other row provably
+    has no match.  PII scan/scrub, toxicity lexicon, langid and quality
+    run as tight per-text loops over the batch (regex-backtracking-bound
+    work that cannot be expressed columnar) — still one Python roundtrip
+    per thousands of rows, never a per-row UDF.
     """
     raw = texts
     s = texts.fillna("").astype(str)
@@ -314,23 +324,20 @@ def analyze_frame(texts: pd.Series, cfg: PipelineConfig = DEFAULT_CONFIG) -> pd.
             out[nz] = np.fromiter((fn(t) for t in s_arr[nz]), dtype=float, count=k)
         return out
 
-    def _gated_contains(pre_np: np.ndarray, sub: pd.Series, pattern) -> np.ndarray:
-        """Per-pattern mask computed only on the prescreen hits and
-        scattered back — identical truth values (the prescreen union is a
-        superset of every individual pattern), fewer regex scans."""
-        m = np.zeros(n, dtype=bool)
-        if len(sub):
-            m[pre_np] = sub.str.contains(pattern, na=False).to_numpy()
-        return m
+    # the literals' space: lowered text (the NSFW scans' own input, and
+    # what IGNORECASE literals are checked against)
+    lowered = np.fromiter(map(str.lower, s_arr), dtype=object, count=n)
+    non_ascii = ~np.fromiter(map(str.isascii, s_arr), dtype=bool, count=n)
 
-    # ---- spam (vectorized patterns + per-text caps ratio) ----
+    def _search(pattern, scanned: np.ndarray, rows: Optional[np.ndarray] = None) -> np.ndarray:
+        return gated_search(pattern, GATE_LITERALS[pattern], scanned, lowered, non_ascii, rows)
+
+    # ---- spam (gated patterns + per-text caps ratio) ----
     spam_score = np.zeros(n)
     spam_masks = []
     if "spam" in enabled:
-        spam_pre = s.str.contains(spam_mod._ANY_ALT, na=False).to_numpy()
-        spam_sub = s[spam_pre]
         for name, pattern, weight in spam_mod._COMPILED:
-            m = _gated_contains(spam_pre, spam_sub, pattern)
+            m = _search(pattern, s_arr)
             spam_masks.append((name, m))
             spam_score += np.where(m, weight, 0.0)
         caps = np.fromiter(
@@ -344,15 +351,13 @@ def analyze_frame(texts: pd.Series, cfg: PipelineConfig = DEFAULT_CONFIG) -> pd.
         spam_score = np.where(blank, 0.0, spam_score)
     spam_flag = (spam_score >= cfg.spam_threshold) & ~blank_np & ("spam" in enabled)
 
-    # ---- prompt injection (vectorized category masks) ----
+    # ---- prompt injection (gated category masks) ----
     inj_cat_masks = []
     inj_score = np.zeros(n)
     inj_critical = np.zeros(n, dtype=bool)
     if "prompt_injection" in enabled:
-        inj_pre = s.str.contains(inj_mod._ANY_ALT, na=False).to_numpy()
-        inj_sub = s[inj_pre]
         for cat, alt in inj_mod._CAT_ALT:
-            inj_cat_masks.append((cat, _gated_contains(inj_pre, inj_sub, alt)))
+            inj_cat_masks.append((cat, _search(alt, s_arr)))
         inj_n = np.sum([m for _, m in inj_cat_masks], axis=0)
         inj_score = np.where(inj_n > 0, np.minimum(inj_n * 0.3, 0.9), 0.0)
         if cfg.injection_ml_fn is not None:  # `prompt_injection.py:128-132`
@@ -366,16 +371,14 @@ def analyze_frame(texts: pd.Series, cfg: PipelineConfig = DEFAULT_CONFIG) -> pd.
                 inj_critical |= m
     inj_flag = (inj_score >= cfg.injection_threshold) & ~blank_np & ("prompt_injection" in enabled)
 
-    # ---- nsfw (vectorized keyword/safe layers + model-or-surrogate prob) ----
+    # ---- nsfw (gated keyword/safe layers + model-or-surrogate prob) ----
     nsfw_prob = np.zeros(n)
     if "nsfw" in enabled:
-        lowered = s.str.lower()
-        explicit = lowered.str.contains(nsfw_mod._KEYWORD_ALT, na=False).to_numpy()
+        explicit = _search(nsfw_mod._KEYWORD_ALT, lowered)
         if cfg.nsfw_prob_fn is not None:
             # model path: the prob can exceed 0.5 anywhere, so the safe
-            # scan stays a full-batch pass
-            safe_hit = s.str.contains(nsfw_mod._SAFE_ALT, na=False).to_numpy()
-            safe = safe_hit & ~explicit  # `nsfw.py:82-87`
+            # scan covers the whole batch
+            safe = _search(nsfw_mod._SAFE_ALT, s_arr) & ~explicit  # `nsfw.py:82-87`
             nsfw_prob = _ml_probs(cfg.nsfw_prob_fn)
         else:
             # surrogate path, decision-gated scans: suggestive only ever
@@ -383,17 +386,10 @@ def analyze_frame(texts: pd.Series, cfg: PipelineConfig = DEFAULT_CONFIG) -> pd.
             # override only fires where prob > 0.5 — i.e. only on
             # explicit/suggestive rows (everything else scores 0.03) —
             # so both regexes run on those slices only, truth-identical
-            suggestive = np.zeros(n, dtype=bool)
-            rest = ~explicit
-            if rest.any():
-                suggestive[rest] = (
-                    lowered[rest].str.contains(nsfw_mod._SUGGESTIVE_ALT, na=False).to_numpy()
-                )
+            suggestive = _search(nsfw_mod._SUGGESTIVE_ALT, lowered, ~explicit)
             nsfw_prob = np.where(explicit, 0.97, np.where(suggestive, 0.55, 0.03))
-            safe = np.zeros(n, dtype=bool)
-            hot = ~explicit & suggestive  # `safe` is masked by ~explicit anyway
-            if hot.any():
-                safe[hot] = s[hot].str.contains(nsfw_mod._SAFE_ALT, na=False).to_numpy()
+            # `safe` is masked by ~explicit anyway
+            safe = _search(nsfw_mod._SAFE_ALT, s_arr, ~explicit & suggestive)
         nsfw_prob = np.where(  # `nsfw.py:127-129`
             safe & (nsfw_prob > 0.5), np.minimum(nsfw_prob * 0.1, 0.3), nsfw_prob
         )

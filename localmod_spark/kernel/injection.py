@@ -69,13 +69,6 @@ _CAT_ALT = [
     for cat, pats in _INJECTION_SPECS
 ]
 
-# Union of ALL categories' patterns — decision-neutral prescreen for the
-# vectorized path (see kernel/spam._ANY_ALT): one batch scan gates the
-# six per-category scans to the rows that can possibly match.
-_ANY_ALT = re.compile(
-    "|".join(f"(?:{p})" for _, pats in _INJECTION_SPECS for p in pats), re.IGNORECASE
-)
-
 DEFAULT_THRESHOLD = 0.2  # pattern-only config, `tests/test_classifiers/test_prompt_injection.py:14`
 
 # Categories that force CRITICAL severity (`prompt_injection.py:191-194`).

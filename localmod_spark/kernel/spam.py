@@ -29,12 +29,10 @@ _SPAM_SPECS: List[Tuple[str, str, float]] = [
 
 _COMPILED = [(n, re.compile(p, re.IGNORECASE), w) for n, p, w in _SPAM_SPECS]
 
-# Union alternation of every spam pattern — the DECISION-NEUTRAL
-# prescreen: a text not matching the union provably matches no
-# individual pattern (no anchors/backrefs in the specs, so alternation
-# union ≡ OR of searches).  The vectorized path scans the batch once
-# with this and runs the 7 per-pattern scans only on the hits.
-_ANY_ALT = re.compile("|".join(f"(?:{p})" for _, p, _ in _SPAM_SPECS), re.IGNORECASE)
+# No union prescreen: ``excessive_caps`` is ``[A-Z]{5,}`` under IGNORECASE
+# (the reference's flags), so it matches any five letters and a union of
+# the specs passes nearly every row.  The vectorized path gates each
+# pattern on its own necessary literals instead (kernel/literals.py).
 
 DEFAULT_THRESHOLD = 0.3  # pattern-only config, `tests/test_classifiers/test_spam.py:14`
 

@@ -23,7 +23,7 @@ Scale properties:
 
 from __future__ import annotations
 
-from typing import Iterator, Optional
+from typing import Optional
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -93,10 +93,6 @@ SCORE_FIELDS = [
 ]
 
 
-def score_schema(input_schema: StructType) -> StructType:
-    return StructType(list(input_schema.fields) + SCORE_FIELDS)
-
-
 SCORE_STRUCT = StructType(SCORE_FIELDS)
 
 
@@ -138,20 +134,3 @@ def score_turns(
     scored = df.withColumn("_score", _score(F.col(text_col)))
     return scored.select(*df.columns, "_score.*")
 
-
-def score_turns_mapinpandas(
-    df: DataFrame,
-    text_col: str = "text",
-    cfg: Optional[PipelineConfig] = None,
-) -> DataFrame:
-    """mapInPandas variant (whole rows through Python) — kept for cases
-    where the UDF needs other columns (e.g. role-conditional scoring)."""
-    cfg = cfg or DEFAULT_CONFIG
-    out_schema = score_schema(df.schema)
-
-    def _score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            scores = _score_frame(pdf[text_col], cfg)
-            yield pd.concat([pdf.reset_index(drop=True), scores.reset_index(drop=True)], axis=1)
-
-    return df.mapInPandas(_score, schema=out_schema)

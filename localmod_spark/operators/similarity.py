@@ -275,11 +275,12 @@ def with_lsh_bucket(
         ),
     )
     pows = F.lit([1 << i for i in range(n_planes)]).cast("array<int>")
+    # a NULL dot (NULL vector, NULL element, or a length other than dim:
+    # zip_with pads with NULL) makes its bit and so the bucket NULL —
+    # malformed vectors get no bucket and join with nothing
     bits = F.transform(
         p2d,
-        lambda p, i: F.when(
-            _dot(F.col(vec_col), p) > 0, F.element_at(pows, i + 1)
-        ).otherwise(F.lit(0)),
+        lambda p, i: (_dot(F.col(vec_col), p) > 0).cast("int") * F.element_at(pows, i + 1),
     )
     return embeddings.withColumn(
         "lsh_bucket", F.aggregate(bits, F.lit(0), lambda acc, x: acc + x)

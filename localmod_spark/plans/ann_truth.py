@@ -19,6 +19,8 @@ aggregate per table; any changed/added/dropped row or vector flips it.
 from __future__ import annotations
 
 import os
+import warnings
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -72,6 +74,9 @@ def truth_key(
 
 
 def _stored_key(spark: SparkSession, truth_dir: str) -> str | None:
+    """The staged key, or ``None`` when nothing valid is staged.  A key
+    read that fails warns with the key path and the error before it
+    counts as not staged."""
     key_dir = os.path.join(truth_dir, _KEY_SUBDIR)
     if os.path.isdir(key_dir):
         # local-filesystem fast path: the key is one tiny parquet row —
@@ -91,13 +96,25 @@ def _stored_key(spark: SparkSession, truth_dir: str) -> str | None:
             )
             vals = tbl.column("key").to_pylist()
             return vals[0] if vals else None
-        except Exception:  # noqa: BLE001 — unreadable key = not staged
+        except Exception as e:  # noqa: BLE001 — unreadable key = not staged
+            _warn_unreadable(key_dir, e)
             return None
+    if not urlparse(key_dir).scheme:  # a local path with no key dir: nothing staged
+        return None
     try:
         rows = spark.read.parquet(key_dir).collect()
         return rows[0]["key"] if rows else None
-    except Exception:  # noqa: BLE001 — no/unreadable key = not staged
+    except Exception as e:  # noqa: BLE001 — missing/unreadable key = not staged
+        _warn_unreadable(key_dir, e)
         return None
+
+
+def _warn_unreadable(key_dir: str, err: Exception) -> None:
+    warnings.warn(
+        f"cannot read the ANN truth key at {key_dir} ({type(err).__name__}: {err}); "
+        "treating the truth as not staged",
+        stacklevel=3,
+    )
 
 
 def staged_knn_truth(
@@ -132,8 +149,6 @@ def staged_knn_truth(
             f"!= current {key!r}); rerun with on_stale='recompute' after "
             "confirming the corpus/query-set change is intentional"
         )
-    import warnings
-
     warnings.warn(
         f"staged ANN truth at {truth_dir}: "
         + ("no valid key found" if stored is None else "stale key")

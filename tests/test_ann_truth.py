@@ -121,3 +121,32 @@ def test_orphan_data_without_key_is_not_trusted(spark, emb, queries, tmp_path, m
 def test_bad_on_stale_rejected(spark, emb, queries, tmp_path):
     with pytest.raises(ValueError):
         staged_knn_truth(queries, emb, 5, str(tmp_path / "x"), on_stale="maybe")
+
+
+def test_corrupt_key_warns_with_path_and_error(spark, emb, queries, tmp_path):
+    """An unreadable key is never a silent "not staged": the read warns
+    with the key path and the error, then the truth is recomputed."""
+    d = str(tmp_path / "truth_corrupt")
+    staged_knn_truth(queries, emb, 5, d)
+    key_dir = os.path.join(d, "_truth_key")
+    for f in os.listdir(key_dir):
+        if f.endswith(".parquet"):
+            with open(os.path.join(key_dir, f), "wb") as fh:
+                fh.write(b"not a parquet file")
+    with pytest.warns(UserWarning, match="cannot read the ANN truth key") as rec:
+        assert at._stored_key(spark, d) is None
+    assert any(key_dir in str(w.message) for w in rec)
+    # the generic (Spark) read path warns the same way
+    with pytest.warns(UserWarning, match="cannot read the ANN truth key"):
+        assert at._stored_key(spark, "file://" + d) is None
+    with pytest.warns(UserWarning, match="no valid key found"):
+        assert staged_knn_truth(queries, emb, 5, d).count() > 0
+    assert at._stored_key(spark, d) == truth_key(queries, emb, 5)
+
+
+def test_unstaged_local_dir_reads_no_key_without_warning(spark, tmp_path):
+    import warnings
+
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        assert at._stored_key(spark, str(tmp_path / "never_staged")) is None

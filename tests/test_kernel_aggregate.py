@@ -2,12 +2,14 @@
 vectorized-batch ≡ per-text equivalence that the Spark stage relies on."""
 
 import random
+import re
 import string
 
 import pandas as pd
 import pytest
 
 from localmod_spark.kernel.aggregate import OUTPUT_COLUMNS, analyze_frame, analyze_text
+from localmod_spark.kernel.literals import required_literals
 from localmod_spark.sources.transcripts import CORPUS
 
 
@@ -109,3 +111,28 @@ def test_config_from_env_overrides_and_defaults():
     t = "you are a complete idiot and a moron"
     assert analyze_text(t)["tox_flagged"]
     assert not analyze_text(t, cfg2._replace(toxicity_threshold=0.99))["tox_flagged"]
+
+
+@pytest.mark.parametrize(
+    "pattern, flags, want",
+    [
+        ("[A-Z]{5,}", re.IGNORECASE, None),  # a range: no literal
+        ("[$€£¥]\\s*\\d+", 0, ("$",)),  # only '$' can match in ASCII text
+        ("ſ", re.IGNORECASE, ("s",)),  # long s folds onto s/S
+        ("K", re.IGNORECASE, ("k",)),  # Kelvin sign folds onto k/K
+        ("ſ", 0, ()),  # no ASCII text can match
+        ("Hello", re.IGNORECASE, ("hello",)),  # IGNORECASE: lowered space
+        ("Hello", 0, ("Hello",)),
+        ("\\bact\\s+now\\b", re.IGNORECASE, ("act",)),  # anchors, categories split runs
+        ("click\\s+here", 0, ("click",)),  # the longest shortest string wins
+        ("you(?!going)", 0, ("you",)),  # a lookaround adds nothing
+        ("ab|c", 0, ("ab", "c")),
+        ("ab|c*", 0, None),  # one alternative without a literal
+        ("x?yz", 0, ("yz",)),  # min 0 repeat: no literal
+        ("(?:ab){2,}", 0, ("ab",)),
+        ("nude|nudes", 0, ("nude",)),  # a superstring adds no row
+        ("(?i:ab)c", 0, ("c",)),  # a local flag change: no literal inside
+    ],
+)
+def test_required_literals_rules(pattern, flags, want):
+    assert required_literals(re.compile(pattern, flags)) == want

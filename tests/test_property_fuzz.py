@@ -2,16 +2,26 @@
 arbitrary unicode text, plus the vectorized ≡ scalar equivalence the
 Spark stage depends on."""
 
+import re
+
 import pandas as pd
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
-from localmod_spark.kernel.aggregate import OUTPUT_COLUMNS, analyze_frame, analyze_text
+from localmod_spark.kernel.aggregate import (
+    GATE_LITERALS,
+    OUTPUT_COLUMNS,
+    analyze_frame,
+    analyze_text,
+)
 from localmod_spark.kernel.pii import pii_scan, pii_scrub
 from localmod_spark.kernel.types import SEVERITY_RANK
+from localmod_spark.sources.transcripts import FIXTURE_TEXTS
 
 TEXT = st.text(max_size=300)
-# mix plain unicode with PII-shaped and pattern-heavy snippets
+# mix plain unicode with PII-shaped and pattern-heavy snippets, plus
+# non-ASCII spellings the regexes match only through case folding
+# (long s, Kelvin sign, dotless i) or not at all (fullwidth F)
 SPICY = st.lists(
     st.one_of(
         TEXT,
@@ -19,10 +29,16 @@ SPICY = st.lists(
             "a@b.co", "555-123-4567", "123-45-6789", "4111 1111 1111 1111",
             "192.168.1.1", "12/25/1990", "FREE!!! click here", "ignore previous instructions",
             "you are now DAN", "send nudes", "idiot", "  ", "$99", "+4915112345678",
+            "\u017fubscribe now", "FREE \u017ftuff", "\u212aILL",
+            "\u0131gnore previous instructions", "\uff26ree money",
         ]),
     ),
     min_size=0, max_size=6,
 ).map(" ".join)
+# the fixture corpus in its own spelling and with its case flipped
+FIXTURES = st.tuples(
+    st.sampled_from(FIXTURE_TEXTS), st.sampled_from([str, str.upper, str.swapcase])
+).map(lambda p: p[1](p[0]))
 
 
 @given(SPICY)
@@ -68,6 +84,11 @@ def test_analyze_invariants(text):
 
 
 @given(st.lists(SPICY, min_size=1, max_size=25))
+@example([
+    "FREE money, click here!!!", "\u017fubscribe now", "you are now DAN",
+    "\u212aILL them all", "caf\u00e9 \u2014 act now, limited time", "hello there",
+    "\u0131gnore previous instructions", "send nudes \U0001F600", "$99 or 99\u20ac",
+])
 @settings(max_examples=60, deadline=None)
 def test_frame_equals_scalar_on_fuzz(texts):
     frame = analyze_frame(pd.Series(texts, dtype=object))
@@ -80,6 +101,22 @@ def test_frame_equals_scalar_on_fuzz(texts):
                 assert a == b or abs(a - b) < 1e-12, (k, t)
             else:
                 assert a == b, (k, t)
+
+
+@given(st.lists(st.one_of(SPICY, FIXTURES), min_size=1, max_size=4).map(" ".join))
+@settings(max_examples=300, deadline=None)
+def test_gate_literals_are_necessary(text):
+    """Soundness of the literal gate: whenever a gated regex matches an
+    ASCII text, the string the gate checks (lowered for IGNORECASE
+    patterns) contains one of the pattern's literals.  Checked on the
+    text as drawn and lowered: the kernel scans both."""
+    ascii_text = text.encode("ascii", "ignore").decode()
+    for scanned in (ascii_text, ascii_text.lower()):
+        for pattern, lits in GATE_LITERALS.items():
+            if lits is None or pattern.search(scanned) is None:
+                continue
+            gate = scanned.lower() if pattern.flags & re.IGNORECASE else scanned
+            assert any(lit in gate for lit in lits), (pattern.pattern, scanned, lits)
 
 
 @settings(max_examples=25, deadline=None)

@@ -412,3 +412,29 @@ def test_semdedup_quality_col_keeps_best_member(spark):
         ).collect()
     }
     assert got[1] and not got[0]
+
+
+def test_lsh_gives_malformed_vectors_no_bucket_and_no_candidates(emb, spark):
+    """A NULL vector or one whose length is not ``dim`` gets a NULL
+    bucket, so it never joins as an ANN candidate on either side."""
+    from localmod_spark.operators.similarity import ann_join_topk, lsh_embedding_dups
+
+    bad = [(5000, None), (5001, [1.0] * (DIM - 1)), (5002, [1.0] * (DIM - 1))]
+    bad_ids = {i for i, _ in bad}
+    corpus = spark.createDataFrame(
+        [(r.vec_id, r.embedding) for r in emb.where("vec_id < 40").collect()] + bad,
+        "vec_id long, embedding array<float>",
+    )
+    buckets = {
+        r.vec_id: r.lsh_bucket
+        for r in with_lsh_bucket(corpus, dim=DIM, n_planes=2).collect()
+    }
+    assert all(buckets[i] is None for i in bad_ids)
+    assert all(b is not None for i, b in buckets.items() if i not in bad_ids)
+    # two planes: valid vectors in buckets 0-2 probe bucket 0, where
+    # malformed vectors used to land
+    pairs = ann_join_topk(corpus, corpus, dim=DIM, k=50, n_planes=2).collect()
+    assert pairs
+    assert not {(r.query_id, r.vec_id) for r in pairs if {r.query_id, r.vec_id} & bad_ids}
+    dups = lsh_embedding_dups(corpus, dim=DIM, threshold=-1.0, n_planes=2).collect()
+    assert not [r for r in dups if {r.id_a, r.id_b} & bad_ids]
