@@ -1322,6 +1322,39 @@ def _q_ivf_join_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _ann_truth_base() -> str:
+    """The ANN-truth staging base: ``<tmp>/lmspark_ann_truth_<user>``,
+    created 0700.  A shared /tmp dir lets another user plant a
+    key-matching table the key check would trust, so an existing dir is
+    used only if it is a real directory owned by this user that group and
+    others cannot write; otherwise this warns and stages in a fresh
+    private dir (the truth is then recomputed)."""
+    import getpass
+    import stat
+    import tempfile
+    import warnings
+
+    base = os.path.join(tempfile.gettempdir(), f"lmspark_ann_truth_{getpass.getuser()}")
+    try:
+        os.makedirs(base, mode=0o700, exist_ok=True)
+    except FileExistsError:  # a non-directory squats the name
+        pass
+    st = os.lstat(base)
+    if (
+        stat.S_ISDIR(st.st_mode)
+        and st.st_uid == os.getuid()
+        and not st.st_mode & (stat.S_IWGRP | stat.S_IWOTH)
+    ):
+        return base
+    private = tempfile.mkdtemp(prefix="lmspark_ann_truth_")
+    warnings.warn(
+        f"ANN-truth staging dir {base} is not a private dir of this user "
+        f"(uid {st.st_uid}, mode {stat.filemode(st.st_mode)}); staging in {private}",
+        stacklevel=2,
+    )
+    return private
+
+
 def _q_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN recall as a CI metric: join each approximate method's batched
     top-k (LSH probe join / IVF list join) against the exact kNN join's
@@ -1343,17 +1376,7 @@ def _q_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     q = emb.where(F.col("vec_id") % 50 == 0)
     tag = os.path.basename(os.path.normpath(sf_dir))
-    # user-scoped staging dir (ADVICE-r6): the fixed world-writable
-    # /tmp/lmspark_ann_truth was shared across users — a concurrent
-    # writer could cause permission failures or plant a key-matching
-    # table the key check would trust
-    import getpass
-    import tempfile
-
-    base = os.path.join(
-        tempfile.gettempdir(), f"lmspark_ann_truth_{getpass.getuser()}"
-    )
-    truth = staged_knn_truth(q, emb, k=5, truth_dir=os.path.join(base, tag))
+    truth = staged_knn_truth(q, emb, k=5, truth_dir=os.path.join(_ann_truth_base(), tag))
     lsh = ann_join_topk(q, emb, dim=_EMB_DIM, k=5, n_planes=8, hamming=1).select(
         F.lit("lsh").alias("method"), "query_id", "vec_id"
     )

@@ -46,7 +46,22 @@ _COMPILED: List[Tuple[str, "re.Pattern[str]", str]] = [
 ]
 
 _NON_DIGIT = re.compile(r"\D")
-_ANY_DIGIT = re.compile(r"\d")
+
+# Digit windows: maximal runs of the chars the six digit patterns can
+# match, each starting at a digit or at a '+'/'(' right before one.  Why
+# scanning only inside them finds exactly the full-text matches:
+#   * every char that phone_us, phone_intl, ssn, credit_card, ip_address
+#     or date_of_birth can match is in ``[\d+\-.()/\s]``, so a match never
+#     crosses a window's end;
+#   * every such match starts at a digit, or at a '+' or '(' right before
+#     one, so its start lies inside a window (the window runs greedily to
+#     the end of its char run);
+#   * ``pos`` lets ``\b`` see the real previous char, but sre treats
+#     ``endpos`` as the end of the string — so the scan bound is the
+#     window end + 1, the (non-window) char ``\b`` must see.
+# Same engine as the patterns, so ``\d``/``\s`` cover the same Unicode
+# digits and spaces.
+_DIGIT_WINDOW = re.compile(r"[+(]?\d[\d+\-.()/\s]*")
 
 
 class PIIHit(NamedTuple):
@@ -100,26 +115,22 @@ def pii_scan(text: str) -> List[PIIHit]:
     insertion order, validation, stable sort by start (ties keep type
     order), then the last-kept-only overlap filter (`pii.py:180-194`).
     """
-    # Prescreen (pure optimization, decision-identical): the email pattern
-    # requires a literal '@'; every other pattern requires at least one
-    # digit.  Texts lacking both cannot match anything.
-    has_at = "@" in text
-    has_digit = _ANY_DIGIT.search(text) is not None
-    if not has_at and not has_digit:
+    n = len(text)
+    # email keeps its whole-text scan: it needs a literal '@'
+    whole = [(0, n)] if "@" in text else []
+    windows = [(m.start(), min(m.end() + 1, n)) for m in _DIGIT_WINDOW.finditer(text)]
+    if not whole and not windows:
         return []
 
     hits: List[PIIHit] = []
     for pii_type, pattern, label in _COMPILED:
-        if pii_type == "email":
-            if not has_at:
-                continue
-        elif not has_digit:
-            continue
+        spans = whole if pii_type == "email" else windows
         validator = _VALIDATORS.get(pii_type)
-        for m in pattern.finditer(text):
-            if validator is not None and not validator(m.group()):
-                continue
-            hits.append(PIIHit(pii_type, m.group(), m.start(), m.end(), label))
+        for lo, hi in spans:
+            for m in pattern.finditer(text, lo, hi):
+                if validator is not None and not validator(m.group()):
+                    continue
+                hits.append(PIIHit(pii_type, m.group(), m.start(), m.end(), label))
 
     hits.sort(key=lambda h: h.start)  # stable: ties keep pattern order
 

@@ -23,7 +23,7 @@ own column so a corpus builder can filter on it explicitly.
 from __future__ import annotations
 
 import math
-import re
+import string
 from collections import Counter
 from typing import NamedTuple, Optional
 
@@ -89,9 +89,10 @@ def _build_logprob_table() -> np.ndarray:
 _LOGPROB = _build_logprob_table()
 _LOGPROB_FLAT = _LOGPROB.reshape(-1)
 
-_WS_RE = re.compile(r"\s+")
-_ALPHA_RE = re.compile(r"[A-Za-z]")
-_SYMBOL_RE = re.compile(r"[#…]|\.\.\.")
+# Every byte except ASCII A-Z/a-z: deleting these from a text's UTF-8
+# bytes leaves exactly the chars ``[A-Za-z]`` matched (no IGNORECASE, so
+# no Kelvin sign or long s; every byte of a multi-byte char is >= 0x80).
+_NON_ALPHA_BYTES = bytes(b for b in range(256) if chr(b) not in string.ascii_letters)
 
 
 def trigram_counts(text: str) -> np.ndarray:
@@ -198,7 +199,9 @@ class QualityStats(NamedTuple):
 
 
 def quality_stats(text: str) -> QualityStats:
-    tokens = [t for t in _WS_RE.split(text.strip()) if t]
+    # str.split() splits on the same whitespace set as sre's \s
+    # (Py_UNICODE_ISSPACE) and drops empty tokens, as split-on-\s+ did
+    tokens = text.split()
     n = len(tokens)
     n_chars = len(text)
     if n == 0:
@@ -206,8 +209,12 @@ def quality_stats(text: str) -> QualityStats:
     # map(len)/Counter are the C-speed forms of the old per-token Python
     # loops — identical counts, same floats
     mean_len = sum(map(len, tokens)) / n
-    alpha = len(_ALPHA_RE.findall(text)) / max(n_chars, 1)
-    symbols = len(_SYMBOL_RE.findall(text)) / n
+    # "surrogatepass": a lone surrogate encodes to bytes >= 0x80 too
+    n_alpha = len(text.encode("utf-8", "surrogatepass").translate(None, _NON_ALPHA_BYTES))
+    alpha = n_alpha / max(n_chars, 1)
+    # '#', '…' and '...' never overlap, so these non-overlapping counts sum
+    # to the old findall of ``[#…]|\.\.\.``
+    symbols = (text.count("#") + text.count("…") + text.count("...")) / n
     top = max(Counter(tokens).values()) / n
     if n >= 2:
         bigrams = list(zip(tokens, tokens[1:]))

@@ -94,15 +94,20 @@ def add_context(scored: DataFrame, text_col: str = "text") -> DataFrame:
         .when(F.col("severity") == "low", 1)
         .otherwise(0)
     )
-    return (
-        scored.withColumn("turn_rank", F.row_number().over(w_ord))
-        .withColumn("is_repeat_turn", F.coalesce(h == F.lag(h).over(w_ord), F.lit(False)))
-        .withColumn("n_turns", F.count(F.lit(1)).over(w_all))
-        .withColumn("n_flagged", F.sum(F.col("flagged").cast("long")).over(w_all))
-        .withColumn("n_pii_turns", F.sum(F.col("pii_flagged").cast("long")).over(w_all))
-        .withColumn("max_severity_rank", F.max(sev_rank).over(w_all))
-        .withColumn("flag_share", F.round(F.col("n_flagged") / F.col("n_turns"), 6))
-    )
+    n_turns = F.count(F.lit(1)).over(w_all)
+    n_flagged = F.sum(F.col("flagged").cast("long")).over(w_all)
+    # one projection: seven chained withColumn calls analyze the plan
+    # seven times.  flag_share repeats the two aggregates inside the same
+    # Window operator (same partition, no extra exchange or sort).
+    return scored.withColumns({
+        "turn_rank": F.row_number().over(w_ord),
+        "is_repeat_turn": F.coalesce(h == F.lag(h).over(w_ord), F.lit(False)),
+        "n_turns": n_turns,
+        "n_flagged": n_flagged,
+        "n_pii_turns": F.sum(F.col("pii_flagged").cast("long")).over(w_all),
+        "max_severity_rank": F.max(sev_rank).over(w_all),
+        "flag_share": F.round(n_flagged / n_turns, 6),
+    })
 
 
 def add_context_bounded(scored: DataFrame, text_col: str = "text") -> DataFrame:

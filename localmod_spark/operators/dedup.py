@@ -1165,6 +1165,12 @@ def dup_clusters(
     may be adversarially deep); ``"auto"`` (default) = propagate, and if
     the round budget runs out, fall back to large/small-star instead of
     failing — correctness is preserved either way.
+
+    Input contract: every ``id_a``/``id_b`` in ``pairs`` must be an id of
+    ``df``.  The pairs are not filtered against ``df``, so a foreign
+    endpoint is a graph vertex like any other: it can merge two of
+    ``df``'s components (A~X, X~B puts A and B in one cluster) and, as
+    the smallest id, become the cluster label of ``df`` rows.
     """
     if algorithm not in ("auto", "label", "star"):
         raise ValueError("algorithm must be 'auto', 'label' or 'star'")

@@ -150,3 +150,39 @@ def test_unstaged_local_dir_reads_no_key_without_warning(spark, tmp_path):
     with warnings.catch_warnings():
         warnings.simplefilter("error")
         assert at._stored_key(spark, str(tmp_path / "never_staged")) is None
+
+
+def test_ann_recall_distrusts_a_shared_staging_dir(spark, tmp_path, monkeypatch):
+    """The recall query stages its truth under a 0700 per-user dir.  A
+    pre-existing group/other-writable dir of that name is not trusted:
+    the query warns, stages elsewhere, and returns the same rows."""
+    import getpass
+    import stat
+    import tempfile
+    import warnings
+
+    import __spark_entry__ as em
+
+    def recall_rows():
+        return sorted(tuple(r) for r in em._q_ann_recall(spark, SF0001).collect())
+
+    own = tmp_path / "own"
+    own.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(own))
+    with warnings.catch_warnings(record=True) as rec:
+        warnings.simplefilter("always")
+        want = recall_rows()
+    assert not any("not a private dir" in str(w.message) for w in rec)
+    base = own / f"lmspark_ann_truth_{getpass.getuser()}"
+    assert stat.S_IMODE(base.stat().st_mode) == 0o700
+    assert os.listdir(base)  # the truth was staged there
+
+    shared = tmp_path / "shared"
+    planted = shared / f"lmspark_ann_truth_{getpass.getuser()}"
+    planted.mkdir(parents=True)
+    os.chmod(planted, 0o777)
+    monkeypatch.setattr(tempfile, "tempdir", str(shared))
+    with pytest.warns(UserWarning, match="not a private dir"):
+        got = recall_rows()
+    assert got == want
+    assert os.listdir(planted) == []  # nothing staged in the untrusted dir

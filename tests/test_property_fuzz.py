@@ -3,6 +3,8 @@ arbitrary unicode text, plus the vectorized ≡ scalar equivalence the
 Spark stage depends on."""
 
 import re
+import re._parser as sre_parse
+from collections import Counter
 
 import pandas as pd
 from hypothesis import example, given, settings
@@ -14,7 +16,15 @@ from localmod_spark.kernel.aggregate import (
     analyze_frame,
     analyze_text,
 )
-from localmod_spark.kernel.pii import pii_scan, pii_scrub
+from localmod_spark.kernel.pii import (
+    _COMPILED,
+    _DIGIT_WINDOW,
+    _VALIDATORS,
+    PIIHit,
+    pii_scan,
+    pii_scrub,
+)
+from localmod_spark.kernel.quality import QualityStats, char_perplexity, quality_stats
 from localmod_spark.kernel.types import SEVERITY_RANK
 from localmod_spark.sources.transcripts import FIXTURE_TEXTS
 
@@ -81,6 +91,145 @@ def test_analyze_invariants(text):
     for k in ("tox_conf", "inj_conf", "spam_conf", "nsfw_conf"):
         assert 0.0 <= row[k] <= 1.0
     assert row["redaction_count"] == len(row["redactions"])
+
+
+def _full_text_pii_scan(text):
+    """The pre-window scan, kept as the oracle: every pattern over the
+    whole text (its '@'/digit prescreen only skipped texts no pattern can
+    match, so it is left out)."""
+    hits = []
+    for pii_type, pattern, label in _COMPILED:
+        validator = _VALIDATORS.get(pii_type)
+        for m in pattern.finditer(text):
+            if validator is not None and not validator(m.group()):
+                continue
+            hits.append(PIIHit(pii_type, m.group(), m.start(), m.end(), label))
+
+    hits.sort(key=lambda h: h.start)  # stable: ties keep pattern order
+
+    if not hits:
+        return hits
+    kept = [hits[0]]
+    for cur in hits[1:]:
+        prev = kept[-1]
+        if cur.start >= prev.end:
+            kept.append(cur)
+        elif cur.end - cur.start > prev.end - prev.start:
+            kept[-1] = cur
+    return kept
+
+
+# digits, window punctuation, Unicode digits and spaces, and word chars
+# right next to digits (where \b decides)
+DIGITY = st.lists(
+    st.one_of(
+        st.sampled_from(list("0123456789+-.()/ ") + [
+            "\u0663", "\uff13", "\u06f5", "\U0001d7d9", "\u00a0", "\u2003", "\u3000",
+            "\x1c", "\n", "\t", "x", "a", "Z", "_", "@", "\u00e9", "#",
+        ]),
+        st.sampled_from([
+            "x(555) 123-4567", "555-1234abc", "+1 (555) 123-4567", "123-45-6789",
+            "4111 1111 1111 1111", "192.168.1.1", "12/25/1990", "a@b.co",
+            "+4915112345678", "(555)", "1/2/33", "+(555) 123-4567",
+        ]),
+    ),
+    max_size=40,
+).map("".join)
+
+
+@given(st.one_of(DIGITY, SPICY))
+@example("x(555) 123-4567")
+@example("555-1234abc")
+@example("call 555-123-4567.")
+@settings(max_examples=1500, deadline=None)
+def test_window_scan_equals_full_text_scan(text):
+    assert pii_scan(text) == _full_text_pii_scan(text)
+
+
+_WINDOW_CLASS = r"[\d+\-.()/\s]"
+
+
+def _atoms(sub, chars, cats):
+    """Collect the chars and categories a parsed pattern can match."""
+    for op, av in sub:
+        name = str(op)
+        if name == "LITERAL":
+            chars.add(chr(av))
+        elif name == "IN":
+            for iop, iav in av:
+                iname = str(iop)
+                if iname == "LITERAL":
+                    chars.add(chr(iav))
+                elif iname == "RANGE":
+                    chars.update(map(chr, range(iav[0], iav[1] + 1)))
+                elif iname == "CATEGORY":
+                    cats.add(str(iav))
+                else:
+                    raise AssertionError(f"unexpected set item {iname}")
+        elif name in ("MAX_REPEAT", "MIN_REPEAT"):
+            _atoms(av[2], chars, cats)
+        elif name == "SUBPATTERN":
+            _atoms(av[3], chars, cats)
+        elif name == "BRANCH":
+            for branch in av[1]:
+                _atoms(branch, chars, cats)
+        elif name != "AT":
+            raise AssertionError(f"unexpected node {name}")
+
+
+def test_digit_patterns_match_only_window_chars():
+    """Every LITERAL, IN and CATEGORY node of the six digit patterns lies
+    in the digit-window class, also under the patterns' IGNORECASE (checked
+    over every code point)."""
+    assert _DIGIT_WINDOW.pattern.endswith(_WINDOW_CLASS + "*")
+    window_char = re.compile(_WINDOW_CLASS)
+    every_char = "".join(map(chr, range(0x110000)))
+    for pii_type, pattern, _ in _COMPILED:
+        if pii_type == "email":
+            continue
+        chars, cats = set(), set()
+        _atoms(sre_parse.parse(pattern.pattern, pattern.flags), chars, cats)
+        # \d and \s are themselves members of the window class
+        assert cats <= {"CATEGORY_DIGIT", "CATEGORY_SPACE"}, (pii_type, cats)
+        folded = re.compile("[" + "".join(map(re.escape, sorted(chars))) + "]", pattern.flags)
+        matched = set(folded.findall(every_char))
+        assert matched >= chars
+        assert all(window_char.fullmatch(c) for c in matched), (pii_type, matched)
+
+
+def _regex_quality_stats(text):
+    """The pre-rewrite quality stats: regex token split, letter findall."""
+    tokens = [t for t in re.split(r"\s+", text.strip()) if t]
+    n = len(tokens)
+    if n == 0:
+        return QualityStats(0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0)
+    mean_len = sum(map(len, tokens)) / n
+    alpha = len(re.findall(r"[A-Za-z]", text)) / max(len(text), 1)
+    symbols = len(re.findall(r"[#…]|\.\.\.", text)) / n
+    top = max(Counter(tokens).values()) / n
+    if n >= 2:
+        bigrams = list(zip(tokens, tokens[1:]))
+        dup = 1.0 - len(set(bigrams)) / len(bigrams)
+    else:
+        dup = 0.0
+    return QualityStats(n, mean_len, alpha, symbols, top, dup, char_perplexity(text))
+
+
+@given(st.one_of(st.text(), SPICY, st.text(alphabet="ab .#\u2026\u212a\u017f\u00a0\x1c\n")))
+@example("a....b ...... #\u2026\u2026.")
+@example("\u212aelvin \u017fign \u00c9t\u00e9 \x1c\x1d\x1e\x1f\x85")
+@settings(max_examples=800, deadline=None)
+def test_quality_stats_equals_regex_formulas(text):
+    assert quality_stats(text) == _regex_quality_stats(text)
+
+
+def test_str_split_whitespace_is_sre_whitespace():
+    """quality_stats tokenizes with str.split(): its whitespace set must be
+    the \\s of sre, over every code point."""
+    every_char = "".join(map(chr, range(0x110000)))
+    sre_space = set(re.findall(r"\s", every_char))
+    assert sre_space == {c for c in every_char if c.isspace()}
+    assert "".join(sorted(sre_space)).split() == []
 
 
 @given(st.lists(SPICY, min_size=1, max_size=25))
