@@ -34,20 +34,9 @@ def _ship_package(spark: SparkSession) -> None:
     able to import it regardless of the driver's cwd.  addPyFile of a
     package zip is the spark-submit --py-files equivalent, done once per
     SparkContext (idempotent re-adds are cheap no-ops)."""
-    sc = spark.sparkContext
-    if getattr(sc, "_localmod_spark_shipped", False):
-        return
-    import shutil
-    import tempfile
+    from localmod_spark.session import ship_package
 
-    zip_path = shutil.make_archive(
-        os.path.join(tempfile.gettempdir(), f"localmod_spark_pkg_{os.getpid()}"),
-        "zip",
-        root_dir=_REPO,
-        base_dir="localmod_spark",
-    )
-    sc.addPyFile(zip_path)
-    sc._localmod_spark_shipped = True
+    ship_package(spark.sparkContext, _REPO)
 
 
 def _transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -14,3 +14,7 @@ Layout:
 """
 
 __version__ = "0.1.0"
+
+from localmod_spark import _zipimport_gate
+
+_zipimport_gate.install()

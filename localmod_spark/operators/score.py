@@ -14,8 +14,11 @@ Scale properties:
     a downstream plan uses none of the score fields, Catalyst prunes the
     UDF entirely (a mapInPandas stage can't be pruned);
   * Arrow batch size (spark.sql.execution.arrow.maxRecordsPerBatch)
-    controls texts-per-Python-call; thousands per call amortize the
-    serialization and regex-compile-free inner loop;
+    controls texts-per-Python-call, but the boundary's fixed cost is paid
+    per task, not per batch (worker set-up before the first call; see
+    ``localmod_spark._zipimport_gate``), so smaller batches do not help:
+    on perfbench ``moderate_turns`` at local[4] (4-vCPU box), 512 rows per
+    batch was no faster than 4096 (wall 1.46-1.77 s against 1.49-1.56 s);
   * all regex/pattern state compiles once per Python worker at module
     import (kernel module globals), mirroring the reference's
     compile-at-load (`pii.py:62-67`).

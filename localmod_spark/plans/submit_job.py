@@ -167,14 +167,9 @@ def main(argv=None) -> int:
     # shape) there is nothing to self-ship — the launcher already
     # distributed the zip to driver and executors.
     if os.path.isdir(os.path.join(_ROOT, "localmod_spark")):
-        import shutil
-        import tempfile
+        from localmod_spark.session import ship_package
 
-        zip_path = shutil.make_archive(
-            os.path.join(tempfile.gettempdir(), f"localmod_spark_job_{os.getpid()}"),
-            "zip", root_dir=_ROOT, base_dir="localmod_spark",
-        )
-        spark.sparkContext.addPyFile(zip_path)
+        ship_package(spark.sparkContext, _ROOT)
 
     from localmod_spark.kernel.aggregate import config_from_env
     from localmod_spark.plans.pipeline import run_pipeline

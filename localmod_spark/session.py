@@ -3,18 +3,25 @@
 Tuned for the moderation pipeline's shape: a scan → narrow pandas-UDF map
 → (optional) conv-level aggregate → write.  The knobs that matter:
 
-  * Arrow enabled + large-ish Arrow batches: the scoring UDF amortizes its
-    Python roundtrip over thousands of turns per batch;
+  * Arrow enabled + large-ish Arrow batches: the scoring UDF vectorizes
+    over thousands of turns per call (the boundary's fixed cost is per
+    task, not per batch; see operators/score.py);
   * AQE on (post-shuffle coalescing + skew-join splitting for the
     conversation-context joins);
   * shuffle partitions sized for the local test harness; a real cluster
     run overrides via spark-submit conf (see plans/submit_job.py).
+
+``ship_package`` makes the package importable on executors.
 """
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -48,3 +55,26 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def ship_package(sc: SparkContext, root: str) -> str:
+    """Zip ``root``/localmod_spark and ``addPyFile`` it, once per
+    SparkContext, so executor Python workers can import the package
+    whatever their cwd; returns the zip's path.  The zip is built in a
+    fresh ``mkdtemp`` dir (mode 0700, removed at exit): a predictable path
+    in the shared tmp dir would let another local user plant the code our
+    executors import."""
+    shipped = getattr(sc, "_localmod_spark_zip", None)
+    if shipped is not None:
+        return shipped
+    staging = tempfile.mkdtemp(prefix="localmod_spark_pkg_")
+    atexit.register(shutil.rmtree, staging, True)
+    # a name of its own: Spark refuses a second file under a name it has
+    # (say a localmod_spark.zip passed with --py-files) from another path
+    zip_path = shutil.make_archive(
+        os.path.join(staging, os.path.basename(staging)), "zip",
+        root_dir=root, base_dir="localmod_spark",
+    )
+    sc.addPyFile(zip_path)
+    sc._localmod_spark_zip = zip_path
+    return zip_path
