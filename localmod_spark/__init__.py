@@ -10,7 +10,7 @@ Layout:
                 skew handling, dedup, similarity search, text stats.
     functions/  column-expression helpers (pure pyspark.sql.functions).
     plans/      end-to-end batch jobs: checkpoint/resume, lineage, metrics.
-    streaming/  structured-streaming variants of the scoring stage.
+    streaming/  bloom-gated exact-dedup ingest over structured streaming.
 """
 
 __version__ = "0.1.0"

@@ -88,47 +88,6 @@ def quality_udf(texts: pd.Series) -> pd.DataFrame:
     )
 
 
-def perplexity_udf_with_kn_trigram(logprob_table):
-    """Factory: perplexity under a corpus-trained interpolated-KN TRIGRAM
-    LM (``operators.textstats.train_char_kn_trigram_lm``) — the dense
-    (28², 28) table (~170 KB) ships in the UDF closure, the same
-    lazy-artifact pattern as the bigram variant below."""
-    import numpy as np
-
-    from localmod_spark.kernel.quality import char_perplexity_trigram
-
-    flat = np.asarray(logprob_table, dtype=np.float64).reshape(-1)
-
-    @F.pandas_udf(DoubleType())
-    def _ppl(texts: pd.Series) -> pd.Series:
-        return pd.Series(
-            [char_perplexity_trigram(t, flat) for t in texts.fillna("")]
-        )
-
-    return _ppl
-
-
-def perplexity_udf_with_lm(logprob_table):
-    """Factory: a perplexity UDF scored under a CORPUS-TRAINED bigram LM
-    (the output of ``operators.textstats.train_char_bigram_lm``) instead
-    of the static seed LM.  The (28×28) table is a model parameter — it
-    travels to executors inside the UDF closure (a few KB), exactly the
-    lazy-artifact pattern of SURVEY §7.4/S5."""
-    import numpy as np
-
-    from localmod_spark.kernel.quality import char_perplexity
-
-    flat = np.asarray(logprob_table, dtype=np.float64).reshape(-1)
-
-    @F.pandas_udf(DoubleType())
-    def _ppl(texts: pd.Series) -> pd.Series:
-        return pd.Series(
-            [char_perplexity(t, logprob_flat=flat) for t in texts.fillna("")]
-        )
-
-    return _ppl
-
-
 @F.pandas_udf(StringType())
 def normalize_text_udf(texts: pd.Series) -> pd.Series:
     """Vectorized canonical normalization (kernel/normalize.py) — the

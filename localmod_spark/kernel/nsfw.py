@@ -17,7 +17,7 @@ Swap the surrogate for real batched transformer inference by passing a
 from __future__ import annotations
 
 import re
-from typing import Callable, List, Optional
+from typing import Callable, Optional
 
 from localmod_spark.kernel.types import CRITICAL, HIGH, LOW, MEDIUM, NONE, KernelResult, is_blank
 
@@ -37,7 +37,6 @@ _SAFE_OVERRIDE_PATTERNS = [
     r'\b(weather|programming|coding|work|meeting|office)\b',
     r'\b(hello|hi|hey|good morning|good night)\b',
 ]
-_SAFE_COMPILED = [re.compile(p, re.IGNORECASE) for p in _SAFE_OVERRIDE_PATTERNS]
 # Single-alternation forms (sorted for determinism): one C-level search
 # replaces N substring checks; truthiness is identical.
 _KEYWORD_ALT = re.compile("|".join(re.escape(k) for k in sorted(EXPLICIT_KEYWORDS)))

@@ -1,3 +1,2 @@
-"""Model-artifact plumbing: executor-lazy loading slots and a
-deterministic mock of the HF batched-inference stage (sandbox stand-in
-for `src/localmod/classifiers/toxicity.py:191-275`)."""
+"""Model-artifact plumbing: executor-lazy loading of real checkpoints for
+the toxicity ensemble slots (`src/localmod/classifiers/toxicity.py:191-275`)."""

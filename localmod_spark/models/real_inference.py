@@ -1,6 +1,6 @@
 """Env-gated REAL HuggingFace inference for the O3/O6 probability slots.
 
-The mock path (``models/mock_inference.py``) drives the exact batched
+The test fake (``tests/mock_inference.py``) drives the exact batched
 tokenize → truncate(256) → forward → sigmoid-max / softmax[:, 1] →
 ensemble pipeline with deterministic stand-ins, because this sandbox has
 no torch/transformers and no model downloads.  This module is the

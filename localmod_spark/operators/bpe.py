@@ -246,26 +246,6 @@ def save_merges(merges: Sequence[Merge], path: str) -> None:
     os.replace(tmp, path)
 
 
-def load_merges(path: str) -> List[Merge]:
-    import json
-
-    with open(path, encoding="utf-8") as f:
-        data = json.load(f)
-    # validate the RAW JSON shape before tuple conversion — tuple("ab")
-    # would silently turn a wrong-format string entry into a plausible
-    # character pair
-    if not isinstance(data, list):
-        raise ValueError(f"{path} is not a merges table: top level is {type(data).__name__}")
-    for m in data:
-        if (
-            not isinstance(m, list)
-            or len(m) != 2
-            or not all(isinstance(x, str) for x in m)
-        ):
-            raise ValueError(f"{path} is not a merges table: bad entry {m!r}")
-    return [tuple(m) for m in data]
-
-
 # ---------------------------------------------------------------------------
 # pinned model parameter for the oracled query
 # ---------------------------------------------------------------------------

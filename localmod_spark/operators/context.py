@@ -20,13 +20,6 @@ from pyspark.sql.types import DoubleType, IntegerType, StructField, StructType
 from localmod_spark.operators.skew import salted_agg
 
 
-def with_turn_order(df: DataFrame) -> DataFrame:
-    """W1: dense in-conversation position under stable (turn_idx, role)
-    ordering.  Needed when upstream turn_idx has gaps."""
-    w = Window.partitionBy("conv_id").orderBy("turn_idx")
-    return df.withColumn("turn_rank", F.row_number().over(w))
-
-
 def conv_features(scored: DataFrame, salt_buckets: int = 16) -> DataFrame:
     """W2: per-conversation aggregate features, hot-key safe.
 
@@ -131,10 +124,7 @@ def add_context_bounded(scored: DataFrame, text_col: str = "text") -> DataFrame:
     return per_day.join(conv_features(scored), "conv_id", "left")
 
 
-def conv_grouped_features(
-    scored: DataFrame,
-    salt_buckets_hint: int = 0,  # reserved: pre-bucket huge convs by day upstream
-) -> DataFrame:
+def conv_grouped_features(scored: DataFrame) -> DataFrame:
     """Per-conversation ORDERED features via grouped-map ``applyInPandas``
     (SURVEY §2.9): the escape hatch for context logic that window
     functions can't express — here, per-turn cumulative flagged counts,

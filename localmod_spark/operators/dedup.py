@@ -572,7 +572,6 @@ def repeated_spans(
     text_col: str = "text",
     max_df: Optional[int] = None,
     observation: Optional[Observation] = None,
-    join_on_hash: bool = False,
     unit: str = "word",
 ) -> DataFrame:
     """Substring-level exact dedup: flag every ``n``-gram SPAN that
@@ -585,10 +584,12 @@ def repeated_spans(
 
     Shape (all JVM-side, no Python): tokenize → positions via
     ``transform`` over a ``sequence`` of offsets → explode → gram
-    doc-frequency (``countDistinct`` partial-aggregates map-side) →
-    frequency filter → equi-join back to the span table on the gram.
-    Never a self-join — the frequency table is the join's small(er)
-    side, and the output is linear in corpus gram count, not quadratic.
+    doc-frequency as ``size(collect_set(id))`` over a window on the gram
+    → frequency filter.  Never a self-join: the window's gram exchange
+    is the only shuffle, the span build upstream runs once, and the
+    output is linear in corpus gram count, not quadratic.  (With an
+    ``observation`` the doc-frequency is a ``countDistinct`` aggregate
+    joined back on the gram instead; see "Plan shape" below.)
 
     ``max_df`` (opt-in) caps the join blowup from ubiquitous grams (a
     gram in 10^8 docs re-emits every one of its occurrences): grams with
@@ -596,14 +597,6 @@ def repeated_spans(
     trade, so it is observable, never silent: pass ``observation`` and
     after the action ``observation.get`` carries ``dropped_grams`` (count
     over the cap) and ``max_gram_df``.
-
-    ``join_on_hash=True`` is the 10^12-doc knob: the frequency aggregate
-    and the join back key on ``xxhash64(gram)`` (8 bytes) instead of the
-    gram string (~6 words) — same output columns (the gram string rides
-    the span side), ~4-8× narrower shuffle keys.  A 64-bit collision
-    would merge two grams' doc-frequencies (expected count ~n²/2^65 —
-    negligible, and only ever OVER-counts n_docs); the string variant
-    stays the default because it is exactly SQL-oracle-reproducible.
 
     ``unit``: ``"word"`` (default) tokenizes lowercase and ``pos``/``n``
     count whitespace tokens — the moderation-normalized variant.
@@ -613,8 +606,7 @@ def repeated_spans(
     STRADDLING word boundaries (markup, code, stitched templates), which
     word grams provably miss (tested).  Char mode materializes
     O(chars·n) gram bytes before the frequency cut — use a larger ``n``
-    (~4-6 words' worth) and the same ``max_df``/``join_on_hash`` escape
-    hatches at scale.
+    (~4-6 words' worth) and the same ``max_df`` escape hatch at scale.
 
     Plan shape (r7): without an ``observation`` the doc-frequency is a
     ``collect_set`` WINDOW over the gram key instead of the
@@ -669,21 +661,17 @@ def repeated_spans(
     spans = src.select(F.col(id_col), F.explode(spans_arr).alias("s")).select(
         id_col, F.col("s.pos").alias("pos"), F.col("s.gram").alias("gram")
     )
-    key = "gram"
-    if join_on_hash:
-        spans = spans.withColumn("_gh", F.xxhash64("gram"))
-        key = "_gh"
     if observation is None:
         # single-consumer shape: the window's own gram exchange is the
         # only shuffle, and the span build upstream runs exactly once
-        w = Window.partitionBy(key)
+        w = Window.partitionBy("gram")
         out = spans.withColumn(
             "n_docs", F.size(F.collect_set(id_col).over(w)).cast("long")
         ).where(F.col("n_docs") >= min_docs)
         if max_df is not None:
             out = out.where(F.col("n_docs") <= max_df)
         return out.select(id_col, "pos", "gram", "n_docs")
-    freq = spans.groupBy(key).agg(F.countDistinct(id_col).alias("n_docs"))
+    freq = spans.groupBy("gram").agg(F.countDistinct(id_col).alias("n_docs"))
     cap = max_df if max_df is not None else (1 << 62)
     freq = freq.observe(
         observation,
@@ -693,7 +681,7 @@ def repeated_spans(
     freq = freq.where(F.col("n_docs") >= min_docs)
     if max_df is not None:
         freq = freq.where(F.col("n_docs") <= max_df)
-    return spans.join(freq, key).select(id_col, "pos", "gram", "n_docs")
+    return spans.join(freq, "gram").select(id_col, "pos", "gram", "n_docs")
 
 
 def remove_repeated_spans(
@@ -1146,7 +1134,6 @@ def dup_clusters(
     pairs: DataFrame,
     id_col: str = "doc_id",
     max_iter: int = 50,
-    algorithm: str = "auto",
 ) -> DataFrame:
     """Near-dup CLUSTERING: connected components over candidate pairs →
     ``(id, cluster)`` where cluster = the component's min id.
@@ -1159,12 +1146,10 @@ def dup_clusters(
     driver-side convergence check.  Near-dup graphs are shallow (dups of
     dups), so 2-4 rounds is typical.  Singletons are their own cluster.
 
-    ``algorithm``: ``"label"`` = min-label propagation only (raises on
-    round exhaustion); ``"star"`` = large/small-star from the start
-    (:func:`star_components`, O(log n) rounds — right when components
-    may be adversarially deep); ``"auto"`` (default) = propagate, and if
-    the round budget runs out, fall back to large/small-star instead of
-    failing — correctness is preserved either way.
+    If ``max_iter`` rounds do not converge (a component deeper than the
+    budget), the labels are recomputed with large/small-star
+    (:func:`star_components`, O(log n) rounds) instead of failing —
+    correctness is preserved either way.
 
     Input contract: every ``id_a``/``id_b`` in ``pairs`` must be an id of
     ``df``.  The pairs are not filtered against ``df``, so a foreign
@@ -1172,18 +1157,6 @@ def dup_clusters(
     ``df``'s components (A~X, X~B puts A and B in one cluster) and, as
     the smallest id, become the cluster label of ``df`` rows.
     """
-    if algorithm not in ("auto", "label", "star"):
-        raise ValueError("algorithm must be 'auto', 'label' or 'star'")
-    if algorithm == "star":
-        labeled = star_components(pairs)
-        all_ids = df.select(F.col(id_col).alias("v")).distinct()
-        return (
-            all_ids.join(labeled, "v", "left")
-            .select(
-                F.col("v").alias(id_col),
-                F.coalesce(F.col("lbl"), F.col("v")).alias("cluster"),
-            )
-        )
     sym = (
         pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
         .union(pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
@@ -1242,17 +1215,9 @@ def dup_clusters(
     if not converged:
         # exhausting the rounds means some component's diameter exceeds
         # max_iter — the labels are mid-propagation and one duplicate
-        # group would silently split into several clusters
-        if algorithm == "auto":
-            # scale-safe fallback: large/small-star finishes in O(log n)
-            # rounds regardless of component diameter
-            return dup_clusters(df, pairs, id_col=id_col, algorithm="star")
-        raise RuntimeError(
-            f"dup_clusters did not converge within max_iter={max_iter} rounds: "
-            "a component's diameter exceeds the round budget.  Raise max_iter, "
-            "use algorithm='auto' (falls back to large/small-star), or "
-            "algorithm='star' for adversarially deep duplicate chains."
-        )
+        # group would silently split into several clusters; large/small-
+        # star finishes in O(log n) rounds regardless of the diameter
+        labels = star_components(pairs)
     all_ids = df.select(F.col(id_col).alias("v")).distinct()
     return (
         all_ids.join(labels, "v", "left")
@@ -1439,50 +1404,3 @@ def ngram_jaccard(
     return joined.withColumn("jaccard", _jac(F.col("text_a"), F.col("text_b"))).drop(
         "text_a", "text_b"
     )
-
-
-def tune_lsh_bands(
-    threshold: float,
-    n_perm: int = 64,
-    fp_weight: float = 1.0,
-    fn_weight: float = 1.0,
-) -> tuple:
-    """Pick ``(bands, rows_per_band)`` for MinHash banding so the S-curve
-    P(candidate | jaccard=s) = 1 - (1 - s^r)^b crosses 0.5 near the
-    target ``threshold``: minimize the weighted false-positive /
-    false-negative areas of the curve on either side of the threshold
-    (the standard banding-tuning integral — Leskovec/Rajaraman/Ullman,
-    *Mining of Massive Datasets* §3.4; same objective as datasketch's
-    `_optimal_param`).  Numeric midpoint integration, driver-side, over
-    every (b, r) with b·r ≤ n_perm — n_perm is small (a sketch width),
-    so this is O(n_perm·ln n_perm · quadrature) ≈ instant.
-
-    At 10^12 docs the banding choice IS the cost model: bands drive the
-    shuffle fan-out (b rows per doc) and rows_per_band drives bucket
-    collision rates, so tune rather than guess — then pass the result to
-    :func:`minhash_candidates` (``fn_weight`` > ``fp_weight`` when
-    dropped near-dups are costlier than wasted verifications).
-    """
-    if not (0.0 < threshold < 1.0):
-        raise ValueError(f"threshold must be in (0, 1), got {threshold}")
-    if n_perm < 2:
-        raise ValueError(f"n_perm must be >= 2, got {n_perm}")
-    q = 200  # quadrature points per unit interval
-    best = None
-    for b in range(1, n_perm + 1):
-        for r in range(1, n_perm // b + 1):
-            fp = fn = 0.0
-            # false positives: area under the curve left of threshold
-            n_lo = max(1, int(q * threshold))
-            for i in range(n_lo):
-                s = threshold * (i + 0.5) / n_lo
-                fp += (1.0 - (1.0 - s**r) ** b) * (threshold / n_lo)
-            # false negatives: area ABOVE the curve (1 - P) right of threshold
-            n_hi = max(1, int(q * (1.0 - threshold)))
-            for i in range(n_hi):
-                s = threshold + (1.0 - threshold) * (i + 0.5) / n_hi
-                fn += ((1.0 - s**r) ** b) * ((1.0 - threshold) / n_hi)
-            err = fp_weight * fp + fn_weight * fn
-            if best is None or err < best[0]:
-                best = (err, b, r)
-    return best[1], best[2]

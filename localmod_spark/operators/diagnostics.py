@@ -10,8 +10,6 @@ cross-engine checkable; nothing depends on partition layout.
 
 from __future__ import annotations
 
-from typing import Optional, Sequence
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 

@@ -77,52 +77,3 @@ def grouped_metrics(
         F.sum((~p & ~y).cast("long")).alias("tn"),
     )
     return _metrics_select(counts, lead_cols=list(group_cols))
-
-
-def threshold_sweep(
-    scored: DataFrame,
-    thresholds,
-    score_col: str = "score",
-    label_col: str = "label",
-) -> DataFrame:
-    """Decision-threshold sweep — the reference's per-classifier
-    threshold tuning (its published operating points t=0.17/0.5/0.2/...
-    come from exactly this curve) as ONE job: explode the threshold list
-    against each (score, label) row, then a grouped metric aggregate.
-    The explode multiplies rows ×T *before* the partial agg collapses
-    them per partition, so the shuffle is still 4 longs × T per
-    partition — vastly cheaper than T separate passes at scale."""
-    t = F.explode(F.array(*[F.lit(float(x)) for x in thresholds]))
-    pairs = scored.select(
-        F.col(score_col), F.col(label_col), t.alias("threshold")
-    ).withColumn("pred", F.col(score_col) >= F.col("threshold"))
-    return grouped_metrics(pairs, ["threshold"], "pred", label_col)
-
-
-def agreement_gate(
-    predicted: DataFrame,
-    expected: DataFrame,
-    keys=("conv_id", "turn_idx"),
-    pred_flag: str = "flagged",
-    expected_flag: str = "flagged_expected",
-    scrub_col: str = "scrubbed_text",
-    scrub_expected: str = "scrubbed_expected",
-) -> DataFrame:
-    """The full BASELINE gate in one aggregate: keep/drop F1 + byte-exact
-    scrub mismatch count.  ``expected`` is the golden table (reference
-    kernel decisions per turn)."""
-    joined = predicted.join(expected, list(keys), "inner")
-    m = classification_metrics(
-        joined.select(F.col(pred_flag).alias("pred"), F.col(expected_flag).alias("label"))
-    )
-    scrub_diff = joined.agg(
-        F.sum(
-            (
-                ~F.coalesce(F.col(scrub_col), F.lit("")).eqNullSafe(
-                    F.coalesce(F.col(scrub_expected), F.lit(""))
-                )
-            ).cast("long")
-        ).alias("scrub_mismatches"),
-        F.count(F.lit(1)).alias("n_rows"),
-    )
-    return m.crossJoin(scrub_diff)

@@ -30,27 +30,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
-    BinaryType,
-    BooleanType,
     DoubleType,
     IntegerType,
     LongType,
     StringType,
     StructField,
     StructType,
-)
-
-MEDIA_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType(), False),
-        StructField("conv_id", StringType(), False),
-        StructField("kind", StringType(), False),  # image | audio | video
-        StructField("mime", StringType(), False),
-        StructField("payload", BinaryType(), False),
-        StructField("width", IntegerType(), True),
-        StructField("height", IntegerType(), True),
-        StructField("duration_ms", IntegerType(), True),
-    ]
 )
 
 _KINDS = [("image", "image/png"), ("audio", "audio/wav"), ("video", "video/mp4")]
@@ -262,105 +247,3 @@ def load_image_bytes(image_input, fetch_url=None) -> bytes:
     if hasattr(image_input, "read"):
         return image_input.read()
     raise ValueError(f"Unsupported image input type: {type(image_input)}")
-
-
-def with_image_payload(df: DataFrame, ref_col: str = "image_ref") -> DataFrame:
-    """Normalize a heterogeneous image-reference STRING column (local
-    path or base64 data-URL — the forms that appear inline in transcript
-    tables) to a ``payload`` binary column, via the same dispatch.
-
-    Scale shape: narrow mapInPandas; refs resolve executor-side, so file
-    reads parallelize across the cluster and the (large) payload bytes
-    are born on the executor that will decode them — they never route
-    through the driver."""
-
-    def _resolve(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = pdf.copy()
-            out["payload"] = [load_image_bytes(r) for r in pdf[ref_col]]
-            yield out
-
-    schema = StructType(list(df.schema.fields) + [StructField("payload", BinaryType(), False)])
-    return df.mapInPandas(_resolve, schema=schema)
-
-
-# ------------------------------------------------------------- O7: NSFW ----
-
-NSFW_IMAGE_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType(), False),
-        StructField("nsfw_prob", DoubleType(), False),
-        StructField("predicted_label", StringType(), False),
-        StructField("nsfw_flagged", BooleanType(), False),
-        StructField("severity", StringType(), False),
-    ]
-)
-
-
-def _fake_vit_probs(payload: bytes) -> list:
-    """Deterministic stand-in for the ViT softmax over {normal, nsfw}:
-    a single logit derived from the payload's byte mean, softmaxed.
-    Replace with AutoImageProcessor + AutoModelForImageClassification
-    (the decision layer in ``kernel/nsfw_image.py`` is the reference's
-    and stays unchanged)."""
-    arr = np.frombuffer(payload, dtype=np.uint8)
-    z = (float(arr.mean()) - 127.5) / 16.0
-    e = np.exp([-z, z])
-    p = e / e.sum()
-    return [float(p[0]), float(p[1])]
-
-
-def classify_media_nsfw(
-    media: DataFrame, threshold: float = 0.5, decode: str = "fake", model_fn=None
-) -> DataFrame:
-    """Image-NSFW scoring (reference O7, `src/localmod/classifiers/
-    nsfw_image.py:110-182`) over the binary media table: images only,
-    narrow mapInPandas (payloads never shuffle), decision math from
-    ``kernel/nsfw_image.py`` verbatim.
-
-    ``decode="fake"`` (default): the deterministic stand-in above.
-    ``decode="real"``: PIL-decode each payload (env-gated — raises the
-    loud slot error when PIL is absent, as in this container) and score
-    the decoded pixel array with ``model_fn(np.ndarray) -> probs list``
-    — the ViT processor+forward slot (inject the real
-    AutoImageProcessor + AutoModelForImageClassification there; the
-    label-scan/fallback decision layer is the reference's either way)."""
-    from localmod_spark.kernel.nsfw_image import _severity as nsfw_severity
-    from localmod_spark.kernel.nsfw_image import nsfw_image_prob
-
-    if decode not in ("fake", "real"):
-        raise ValueError("decode must be 'fake' or 'real'")
-    if decode == "real" and model_fn is None:
-        raise ValueError("decode='real' needs a model_fn (the ViT forward slot)")
-
-    def _clf(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        Image = _try_import_pil() if decode == "real" else None
-        for pdf in batches:
-            if decode == "real" and len(pdf) and Image is None:
-                raise NotImplementedError(
-                    "real decode requires PIL + transformers — not in this container; "
-                    "plug processor+model here (decision layer stays as-is)"
-                )
-            rows = []
-            for mid, payload in zip(pdf["media_id"].to_numpy(), pdf["payload"]):
-                if decode == "real":
-                    import io
-
-                    img = Image.open(io.BytesIO(bytes(payload))).convert("RGB")
-                    probs = model_fn(np.asarray(img))
-                else:
-                    probs = _fake_vit_probs(bytes(payload))
-                prob, label = nsfw_image_prob(probs)  # one decision pass per row
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "nsfw_prob": prob,
-                        "predicted_label": label,
-                        "nsfw_flagged": prob >= threshold,
-                        "severity": nsfw_severity(prob, threshold),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in NSFW_IMAGE_SCHEMA.fields])
-
-    slim = media.where(F.col("kind") == "image").select("media_id", "payload")
-    return slim.mapInPandas(_clf, schema=NSFW_IMAGE_SCHEMA)

@@ -32,11 +32,6 @@ def hash_uniform(col: Column) -> Column:
     ) / F.lit(float(1 << 32))
 
 
-def sample_uniform(df: DataFrame, rate: float, id_col: str = "doc_id") -> DataFrame:
-    """Keep each row iff hash_uniform(id) < rate."""
-    return df.where(hash_uniform(F.col(id_col)) < F.lit(float(rate)))
-
-
 def sample_stratified(
     df: DataFrame,
     rates: Mapping[str, float],
@@ -268,20 +263,6 @@ def sample_exact_n(
         df.withColumn("_rk", F.row_number().over(w))
         .where(F.col("_rk") <= n)
         .drop("_rk")
-    )
-
-
-def split_train_holdout(
-    df: DataFrame, holdout_rate: float = 0.01, id_col: str = "doc_id"
-) -> DataFrame:
-    """Append a ``split`` column ('train' | 'holdout') from the same
-    deterministic uniform — disjoint by construction, stable across
-    reruns, and a row's split never changes when the rate of the OTHER
-    split moves."""
-    u = hash_uniform(F.col(id_col))
-    return df.withColumn(
-        "split",
-        F.when(u < F.lit(float(holdout_rate)), F.lit("holdout")).otherwise(F.lit("train")),
     )
 
 

@@ -3,15 +3,12 @@
 The reference API rejects empty texts (`src/localmod/schemas.py:36-39`)
 and texts over ``max_text_length`` = 10,000 chars
 (`src/localmod/api/routes.py:77-81`, `src/localmod/config.py:55`).  In a
-batch pipeline rejection becomes a *validity column* + an optional
-quarantine split, so no rows silently disappear — at 10^12 turns every
-dropped row must be accounted for (the quarantine table is part of the
-lineage story).
+batch pipeline rejection becomes a *validity column*, so no rows
+silently disappear — at 10^12 turns every dropped row must be
+accounted for.
 """
 
 from __future__ import annotations
-
-from typing import Tuple
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -36,10 +33,3 @@ def with_validity(df: DataFrame, text_col: str = "text", max_len: int = MAX_TEXT
     return df.withColumn("invalid_reason", reason).withColumn(
         "valid", F.col("invalid_reason").isNull()
     )
-
-
-def split_quarantine(df: DataFrame, text_col: str = "text") -> Tuple[DataFrame, DataFrame]:
-    """(valid_rows, quarantined_rows) — one plan, two filters; write the
-    quarantine side next to the output so counts reconcile."""
-    v = with_validity(df, text_col)
-    return v.where(F.col("valid")).drop("valid", "invalid_reason"), v.where(~F.col("valid"))

@@ -18,7 +18,6 @@ resumed or re-run export reproduces byte-identical shards.
 from __future__ import annotations
 
 import json
-import os
 import time
 from dataclasses import dataclass
 from typing import List, Mapping, Optional, Sequence

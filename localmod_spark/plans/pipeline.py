@@ -27,12 +27,17 @@ from typing import List, Optional
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
 
 from localmod_spark.kernel.aggregate import DEFAULT_CONFIG, PipelineConfig
 from localmod_spark.operators.context import add_context
 from localmod_spark.operators.score import score_turns
 
 WAVE_COL = "wave"
+
+# Open parquet writers per task for ``partition_by_day`` writes (see
+# run_pipeline): day cardinality is bounded by the dataset's time span.
+MAX_CONCURRENT_OUTPUT_WRITERS = 64
 
 
 @dataclass
@@ -57,10 +62,9 @@ def data_path(out_dir: str) -> str:
 
 def _hadoop_fs(spark: SparkSession, path: str):
     """(FileSystem, Path) for *path* via the JVM Hadoop FS API — the same
-    resolution Spark's own writers use, so ledger existence checks,
-    atomic renames and staging cleanup work on whatever filesystem
-    out_dir lives on (local, HDFS, s3a://, abfs://...), not just the
-    driver's local disk."""
+    resolution Spark's own writers use, so ledger existence checks and
+    atomic renames work on whatever filesystem out_dir lives on (local,
+    HDFS, s3a://, abfs://...), not just a local disk."""
     jvm = spark._jvm
     hpath = jvm.org.apache.hadoop.fs.Path(path)
     fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
@@ -178,30 +182,15 @@ def run_pipeline(
     resume: bool = True,
     cfg: Optional[PipelineConfig] = None,
     context: bool = True,
-    salt_buckets: int = 16,
-    stage: str = "persist",
     max_concurrent_waves: int = 1,
     partition_by_day: bool = False,
-    max_concurrent_output_writers: Optional[int] = 64,
     conv_rollup: Optional[dict] = None,
 ) -> PipelineResult:
     """Score every turn, wave by wave, committing lineage as we go.
 
-    ``stage`` controls how the per-wave filter avoids rescanning the full
-    input once per wave:
-
-      * ``"persist"`` (default): cache the wave-keyed input
-        (MEMORY_AND_DISK) — one scan total; waves read their slice from
-        the cache.  Right for local/bench runs and any input that fits
-        executor storage.
-      * ``"write"``: materialize the input once, hive-partitioned by
-        wave, then read it back so each wave's filter is a
-        partition-pruning predicate (one extra write, n_waves pruned
-        reads).  This is the Iceberg-faithful shape: on a production
-        table whose partition spec already includes bucket(conv_id), skip
-        staging entirely — ``"rescan"`` + pruning is free.
-      * ``"rescan"``: filter the raw input per wave (n_waves full scans —
-        only correct choice when the source itself partition-prunes).
+    The wave-keyed input is cached (MEMORY_AND_DISK) for the run, so the
+    input is scanned once and each wave's filter reads its slice from the
+    cache; the cache is released when the run ends, failed or not.
 
     ``max_concurrent_waves`` > 1 submits that many wave jobs at once from
     driver threads — same per-wave commit/resume semantics, but the
@@ -229,40 +218,22 @@ def run_pipeline(
     it (and vice versa) instead of being skipped with the wrong columns.
     """
     cfg = cfg or DEFAULT_CONFIG
-    if stage not in ("persist", "write", "rescan"):
-        raise ValueError("stage must be 'persist', 'write' or 'rescan'")
-
+    staged = with_wave(turns, n_waves).persist(StorageLevel.MEMORY_AND_DISK)
     _writers_key = "spark.sql.maxConcurrentOutputFileWriters"
     _writers_prev = None
-    if partition_by_day and max_concurrent_output_writers:
-        # dynamic-partition parquet writes default to a per-task SORT on
-        # the partition column; under concurrent waves that sort
-        # exhausted execution memory at the 2M-turn scale check
-        # (SparkOutOfMemoryError: unable to acquire).  Concurrent output
-        # writers skip the sort — day cardinality is bounded by the
-        # dataset's time span, so 64 open writers per task is safe, and
-        # the 2M run completes in the flat layout's time.  The conf is
-        # session-global, so it is restored in the finally below; pass
-        # ``max_concurrent_output_writers=None`` to keep the sorted-write
-        # path instead.
-        _writers_prev = spark.conf.get(_writers_key)  # "0" is Spark's default
-        spark.conf.set(_writers_key, str(max_concurrent_output_writers))
-
-    cleanup = None
-    staging_dir = None
     waves_run: List[int] = []
     total_rows = 0
     try:
-        staged = with_wave(turns, n_waves)
-        if stage == "persist":
-            from pyspark.storagelevel import StorageLevel
-
-            staged = staged.persist(StorageLevel.MEMORY_AND_DISK)
-            cleanup = staged.unpersist
-        elif stage == "write":
-            staging_dir = os.path.join(out_dir, "_staging")
-            staged.write.mode("overwrite").partitionBy(WAVE_COL).parquet(staging_dir)
-            staged = spark.read.parquet(staging_dir)
+        if partition_by_day:
+            # dynamic-partition parquet writes default to a per-task SORT
+            # on the partition column; under concurrent waves that sort
+            # exhausted execution memory at the 2M-turn scale check
+            # (SparkOutOfMemoryError: unable to acquire).  Concurrent
+            # output writers skip the sort, and the 2M run completes in
+            # the flat layout's time.  The conf is session-global, so it
+            # is restored in the finally below.
+            _writers_prev = spark.conf.get(_writers_key)  # "0" is Spark's default
+            spark.conf.set(_writers_key, str(MAX_CONCURRENT_OUTPUT_WRITERS))
         layout = "day" if partition_by_day else "flat"
         if conv_rollup is not None:
             import hashlib
@@ -384,16 +355,9 @@ def run_pipeline(
         # the persisted wave-keyed input must not outlive the run — a
         # mid-run failure would otherwise pin the whole input in executor
         # storage for the rest of the session
-        if cleanup is not None:
-            cleanup()
+        staged.unpersist()
         if _writers_prev is not None:
             spark.conf.set(_writers_key, _writers_prev)
-    if staging_dir is not None:
-        # the staging copy is an internal intermediate: drop it once every
-        # wave has committed (on failure it is kept — a resume re-stages,
-        # and the partial dirs help debugging)
-        fs, hstaging = _hadoop_fs(spark, staging_dir)
-        fs.delete(hstaging, True)
     return PipelineResult(
         out_dir=out_dir,
         waves_run=waves_run,
@@ -434,10 +398,6 @@ def _append_ledger_row(spark: SparkSession, dir_path: str, row: dict) -> None:
 
 def read_output(spark: SparkSession, out_dir: str) -> DataFrame:
     return spark.read.parquet(data_path(out_dir))
-
-
-def read_lineage(spark: SparkSession, out_dir: str) -> DataFrame:
-    return spark.read.parquet(_lineage_path(out_dir))
 
 
 def read_metrics(spark: SparkSession, out_dir: str) -> DataFrame:

@@ -1,21 +1,5 @@
-"""Structured-streaming variants of the scoring stage."""
+"""Structured-streaming ingest: bloom-gated exact dedup."""
 
-from localmod_spark.streaming.score_stream import (
-    write_scored_stream,
-    conv_flag_counts_stream,
-    dedup_stream,
-    conv_running_totals_stream,
-    compact_ingest_corpus,
-    ingest_bloom_stream,
-    score_stream,
-)
+from localmod_spark.streaming.score_stream import compact_ingest_corpus, ingest_bloom_stream
 
-__all__ = [
-    "score_stream",
-    "conv_flag_counts_stream",
-    "conv_running_totals_stream",
-    "dedup_stream",
-    "compact_ingest_corpus",
-    "ingest_bloom_stream",
-    "write_scored_stream",
-]
+__all__ = ["compact_ingest_corpus", "ingest_bloom_stream"]

@@ -1,128 +1,21 @@
-"""Streaming moderation: the same fused scoring stage over readStream.
+"""Streaming ingest: bloom-gated exact dedup over readStream.
 
 The reference is batch-only (its only 'stream' is HTTP arrival,
-`src/localmod/api/app.py`), but the scoring stage is stateless per turn,
-so it lifts to Structured Streaming unchanged: readStream → score_turns →
-writeStream.  Watermarked conversation aggregates are provided for
-late-data-tolerant per-conversation flag counts.
-
-Micro-batch semantics: each trigger's batch flows through the identical
-mapInPandas plan used in batch mode — one code path, two execution modes.
+`src/localmod/api/app.py`).  Here a stream of arriving rows is gated in
+front of the corpus: each micro-batch (``foreachBatch``) admits only
+keys the corpus Bloom artifact has never seen, verifying the bloom's
+"maybe" rows exactly against the admitted dirs, lands them under
+``run=<query-id>/batch=<id>`` and extends the artifact
+(:func:`ingest_bloom_stream`).  An optional ``transform_fn`` scores the
+admitted rows before they land.  :func:`compact_ingest_corpus` folds the
+accumulated per-batch dirs into one recorded corpus dir while the
+stream is stopped.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from localmod_spark.kernel.aggregate import DEFAULT_CONFIG, PipelineConfig
-from localmod_spark.operators.score import score_turns
-
-
-def score_stream(stream_df: DataFrame, cfg: PipelineConfig = None) -> DataFrame:
-    """Apply the fused scoring stage to a streaming DataFrame of turns.
-    Stateless — supported by every output mode."""
-    return score_turns(stream_df, cfg=cfg or DEFAULT_CONFIG)
-
-
-def dedup_stream(
-    stream_df: DataFrame,
-    key_cols=("conv_id", "turn_idx"),
-    watermark_col: str = "ts",
-    delay: str = "10 minutes",
-) -> DataFrame:
-    """Ingest-side exactly-once-ish dedup: drop redelivered turns whose
-    keys were already seen within the watermark horizon
-    (``dropDuplicatesWithinWatermark``) — the standard guard in front of
-    a scoring stream fed by an at-least-once bus.  State is bounded by
-    the watermark delay instead of growing forever (what a bare
-    ``dropDuplicates`` on a stream would do)."""
-    return stream_df.withWatermark(watermark_col, delay).dropDuplicatesWithinWatermark(
-        list(key_cols)
-    )
-
-
-def conv_running_totals_stream(scored_stream: DataFrame) -> DataFrame:
-    """Custom stateful operator: running per-conversation totals maintained
-    across micro-batches via ``applyInPandasWithState`` — the pattern for
-    moderation state Spark's built-in aggregations can't express (e.g.
-    escalation logic over a conversation's lifetime).
-
-    State per conv_id: (n_turns, n_flagged); each trigger emits the
-    updated totals for conversations seen in that batch.
-    """
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    out_schema = "conv_id string, n_turns long, n_flagged long"
-    state_schema = "n_turns long, n_flagged long"
-
-    def _update(key, pdfs, state: GroupState):
-        n, f = state.get if state.exists else (0, 0)
-        for pdf in pdfs:
-            n += len(pdf)
-            f += int(pdf["flagged"].sum())
-        state.update((n, f))
-        yield pd.DataFrame({"conv_id": [key[0]], "n_turns": [n], "n_flagged": [f]})
-
-    return (
-        scored_stream.select("conv_id", "flagged")
-        .groupBy("conv_id")
-        .applyInPandasWithState(
-            _update, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
-        )
-    )
-
-
-def conv_flag_counts_stream(
-    scored_stream: DataFrame,
-    watermark: str = "10 minutes",
-    window: str = "5 minutes",
-) -> DataFrame:
-    """Watermarked per-(conversation, time-window) flag counts — the
-    streaming analog of conv_features.  Late turns beyond the watermark
-    are dropped deterministically; state is bounded by the watermark."""
-    return (
-        scored_stream.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window), F.col("conv_id"))
-        .agg(
-            F.count(F.lit(1)).alias("n_turns"),
-            F.sum(F.col("flagged").cast("long")).alias("n_flagged"),
-            F.sum(F.col("pii_flagged").cast("long")).alias("n_pii_turns"),
-        )
-    )
-
-
-def write_scored_stream(
-    scored: DataFrame,
-    out_dir: str,
-    checkpoint_dir: str,
-    partition_by_day: bool = False,
-    available_now: bool = True,
-):
-    """Checkpointed parquet file sink for the scored stream — emitting
-    the SAME consumer-shaped layout as the batch pipeline
-    (``day = to_date(ts)`` hive partitions when ``partition_by_day``), so
-    a downstream date-ranged reader prunes identically regardless of
-    which engine produced a partition.  The file sink's checkpoint +
-    transaction log give exactly-once file commits across restarts (the
-    streaming analog of the batch ledger).  ``available_now=True``
-    processes the current backlog and stops — the catch-up/batch-drain
-    mode; ``False`` runs continuously.  Returns the started query."""
-    df = scored
-    if partition_by_day:
-        df = df.withColumn("day", F.to_date(F.col("ts")))
-    w = (
-        df.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if partition_by_day:
-        w = w.partitionBy("day")
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
 
 
 def _ingest_batch_dirs(spark, out_dir: str, exclude: str = None):
@@ -234,7 +127,6 @@ def ingest_bloom_stream(
         extend_bloom,
         save_bloom,
     )
-    from localmod_spark.plans.pipeline import _hadoop_fs
 
     corpus_dirs = tuple(corpus_dirs)
     _qid = {}

@@ -46,7 +46,6 @@ TOXICITY_ENSEMBLE_MODELS: Dict[str, str] = {
 }
 
 CLS_ID, SEP_ID, PAD_ID = 101, 102, 0
-_MASK64 = np.uint64(0xFFFFFFFFFFFFFFFF)
 _MIX1 = np.uint64(0xBF58476D1CE4E5B9)
 _MIX2 = np.uint64(0x94D049BB133111EB)
 

@@ -216,31 +216,6 @@ def test_sequence_packing_driven_by_real_bpe_counts(spark, docs):
     assert len({k[1] for k in fills}) > 1  # non-vacuous: multiple packs
 
 
-def test_merges_roundtrip_through_the_artifact_file(tmp_path):
-    from localmod_spark.operators.bpe import load_merges, save_merges
-
-    path = str(tmp_path / "merges.json")
-    save_merges(PINNED_MERGES, path)
-    assert load_merges(path) == PINNED_MERGES
-    # loaded merges are usable as-is (tuples, rank order preserved)
-    ranks = _ranks(load_merges(path))
-    assert encode_word("order", ranks) == ["order"]
-
-
-def test_load_merges_rejects_non_merge_json(tmp_path):
-    import json as _json
-
-    import pytest as _pt
-
-    from localmod_spark.operators.bpe import load_merges
-
-    bad = str(tmp_path / "bad.json")
-    with open(bad, "w") as f:
-        _json.dump([["a", "b", "c"]], f)
-    with _pt.raises(ValueError, match="merges table"):
-        load_merges(bad)
-
-
 def test_merges_artifact_bytes_equal_the_export_digest_input(tmp_path):
     """save_merges writes EXACTLY the bytes plans/export.py digests for
     its invalidation key — digesting the file and digesting the
@@ -251,20 +226,3 @@ def test_merges_artifact_bytes_equal_the_export_digest_input(tmp_path):
     save_merges(PINNED_MERGES, path)
     with open(path, "rb") as f:
         assert f.read() == merges_json(PINNED_MERGES).encode()
-
-
-def test_load_merges_rejects_string_and_dict_entries(tmp_path):
-    """tuple('ab') == ('a','b') would let wrong-format JSON masquerade
-    as a merges table — raw-shape validation must reject it."""
-    import json as _json
-
-    import pytest as _pt
-
-    from localmod_spark.operators.bpe import load_merges
-
-    for bad_payload in (["ab", "cd"], [{"ab": 1}], {"a": "b"}):
-        bad = str(tmp_path / "bad.json")
-        with open(bad, "w") as f:
-            _json.dump(bad_payload, f)
-        with _pt.raises(ValueError, match="merges table"):
-            load_merges(bad)

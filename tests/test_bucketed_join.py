@@ -1,53 +1,7 @@
-"""Bucketed-table co-located join: no exchange on either join side.
+"""Bucketed-table layout: an LSH-bucketed corpus table removes the corpus
+side's exchange from ``ann_join_topk``'s probe equi-join."""
 
-The realistic shape: the scored turn table joined with a per-conversation
-feature table, both bucketed by conv_id — the conv_id hash partitioning
-comes from the file layout, so the sort-merge join runs without shuffling
-either side."""
-
-import pytest
 from pyspark.sql import functions as F
-
-from localmod_spark.operators.score import score_turns
-from localmod_spark.sources.bucketed import bucketed_join, write_bucketed
-from localmod_spark.sources.transcripts import synth_transcripts
-
-
-@pytest.fixture(scope="module")
-def bucketed_tables(spark):
-    spark.conf.set("spark.sql.sources.bucketing.enabled", "true")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")  # force SMJ path
-    turns = synth_transcripts(spark, 2000, slices=4)
-    scored = score_turns(turns).select("conv_id", "turn_idx", "keep", "flagged")
-    feats = scored.groupBy("conv_id").agg(
-        F.count("*").alias("n_turns"),
-        F.sum(F.col("flagged").cast("long")).alias("n_flagged"),
-    )
-    write_bucketed(scored, "scored_bucketed", bucket_col="conv_id", n_buckets=8)
-    write_bucketed(feats, "feats_bucketed", bucket_col="conv_id", n_buckets=8, sort_col=None)
-    yield "scored_bucketed", "feats_bucketed"
-    spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-    spark.sql("DROP TABLE IF EXISTS scored_bucketed")
-    spark.sql("DROP TABLE IF EXISTS feats_bucketed")
-
-
-def test_bucketed_join_has_no_exchange(spark, bucketed_tables):
-    left, right = bucketed_tables
-    joined = bucketed_join(spark, left, right, ["conv_id"])
-    plan = joined._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan, plan  # both sides read pre-bucketed
-    assert "SortMergeJoin" in plan
-    assert "Bucketed: true" in plan
-
-
-def test_bucketed_join_correct(spark, bucketed_tables):
-    left, right = bucketed_tables
-    joined = bucketed_join(spark, left, right, ["conv_id"])
-    assert joined.count() == 2000
-    bad = joined.groupBy("conv_id", "n_turns").agg(F.count("*").alias("k")).where(
-        F.col("k") != F.col("n_turns")
-    )
-    assert bad.count() == 0
 
 
 def test_bucketed_corpus_removes_ann_join_corpus_exchange(spark):
@@ -57,7 +11,6 @@ def test_bucketed_corpus_removes_ann_join_corpus_exchange(spark):
     (no corpus-side exchange; one fewer shuffle than the plain-parquet
     plan)."""
     from localmod_spark.operators.similarity import ann_join_topk, with_lsh_bucket
-    from localmod_spark.sources.bucketed import write_bucketed
 
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
@@ -68,9 +21,12 @@ def test_bucketed_corpus_removes_ann_join_corpus_exchange(spark):
         )._jdf.queryExecution().executedPlan().toString()
 
         spark.sql("DROP TABLE IF EXISTS emb_bucketed_ann")
-        write_bucketed(
-            with_lsh_bucket(emb, dim=64, n_planes=6),
-            "emb_bucketed_ann", bucket_col="lsh_bucket", n_buckets=8, sort_col=None,
+        (
+            with_lsh_bucket(emb, dim=64, n_planes=6)
+            .write.mode("overwrite")
+            .bucketBy(8, "lsh_bucket")
+            .format("parquet")
+            .saveAsTable("emb_bucketed_ann")
         )
         corpus = spark.table("emb_bucketed_ann")
         # corpus already carries lsh_bucket → skip the re-bucketing by

@@ -2,7 +2,7 @@
 
 import pyspark.sql.functions as F
 
-from localmod_spark.operators.context import conv_features, with_repetition, with_turn_order
+from localmod_spark.operators.context import conv_features, with_repetition
 from localmod_spark.operators.skew import salted_repartition, with_salt
 
 
@@ -19,12 +19,6 @@ def _toy(spark):
     return spark.createDataFrame(
         rows, "conv_id string, turn_idx int, text string, flagged boolean, pii_flagged boolean, severity string"
     )
-
-
-def test_turn_order(spark):
-    df = with_turn_order(_toy(spark))
-    got = {(r.conv_id, r.turn_idx): r.turn_rank for r in df.collect()}
-    assert got[("a", 0)] == 1 and got[("a", 2)] == 3 and got[("b", 3)] == 4
 
 
 def test_conv_features_skew_safe(spark):

@@ -171,18 +171,6 @@ def test_dup_clusters_long_chain_converges(spark):
     assert got == {i: 0 for i in range(n)}
 
 
-def test_dup_clusters_label_mode_raises_on_round_exhaustion(spark):
-    """With algorithm='label', exhausting max_iter would silently split a
-    duplicate group — the operator must refuse instead."""
-    from localmod_spark.operators.dedup import dup_clusters
-
-    n = 8
-    docs2 = spark.createDataFrame([(i, f"d{i}") for i in range(n)], "doc_id long, text string")
-    pairs = spark.createDataFrame([(i, i + 1) for i in range(n - 1)], "id_a long, id_b long")
-    with pytest.raises(RuntimeError, match="did not converge"):
-        dup_clusters(docs2, pairs, max_iter=2, algorithm="label")
-
-
 def test_dup_clusters_auto_falls_back_to_star_on_deep_chain(spark):
     """A chain deeper than the propagation round budget must still
     cluster correctly: auto mode switches to large/small-star (O(log n)
@@ -198,8 +186,9 @@ def test_dup_clusters_auto_falls_back_to_star_on_deep_chain(spark):
 
 def test_star_components_matches_union_find_on_random_graphs(spark):
     """large/small-star must produce exactly the min-id component map —
-    differential vs pure-Python union-find, including singletons via the
-    dup_clusters(algorithm='star') wrapper."""
+    differential vs pure-Python union-find, including singletons.  A
+    round budget of zero sends dup_clusters straight to its star
+    fallback."""
     import random
 
     from localmod_spark.operators.dedup import dup_clusters
@@ -227,7 +216,7 @@ def test_star_components_matches_union_find_on_random_graphs(spark):
         pairs = spark.createDataFrame(edges, "id_a long, id_b long")
         got = {
             r.doc_id: r.cluster
-            for r in dup_clusters(docs2, pairs, algorithm="star").collect()
+            for r in dup_clusters(docs2, pairs, max_iter=0).collect()
         }
         assert got == union_find_components(n, edges), f"seed {seed}"
 
@@ -461,16 +450,6 @@ def test_repeated_spans_max_df_cap_is_observable(spark):
     assert "pairwise shared sentence fragment here" in grams  # df=2 kept
     m = obs.get
     assert m["dropped_grams"] >= 1 and m["max_gram_df"] == 10
-
-
-def test_repeated_spans_hash_join_equals_string_join(spark):
-    """join_on_hash keys the shuffle on xxhash64(gram) — same rows out."""
-    from localmod_spark.operators.dedup import repeated_spans
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    by_str = {tuple(r) for r in repeated_spans(docs, n=5).collect()}
-    by_hash = {tuple(r) for r in repeated_spans(docs, n=5, join_on_hash=True).collect()}
-    assert by_str == by_hash and by_str
 
 
 def test_repeated_spans_window_path_equals_aggregate_path(spark):
@@ -746,31 +725,3 @@ def test_dedup_paragraphs_separator_with_embedded_quote_end(spark):
     out = {r.doc_id: r for r in dedup_paragraphs(docs, sep=sep, min_docs=2).collect()}
     assert out[0].scrubbed_text == "unique zero"
     assert out[0].n_flagged_spans == 1
-
-
-def test_tune_lsh_bands_properties():
-    """Banding tuner: budget respected, S-curve crossover brackets the
-    threshold, fn-weighting biases toward recall, crossover monotone in
-    the threshold, bad inputs raise."""
-    import pytest as _pytest
-
-    from localmod_spark.operators.dedup import tune_lsh_bands
-
-    def curve(s, b, r):
-        return 1.0 - (1.0 - s**r) ** b
-
-    crossovers = []
-    for t in (0.3, 0.5, 0.7, 0.9):
-        b, r = tune_lsh_bands(t, 64)
-        assert b * r <= 64 and b >= 1 and r >= 1
-        assert curve(max(t - 0.2, 0.01), b, r) < 0.5 < curve(min(t + 0.2, 0.99), b, r), t
-        crossovers.append((1.0 / b) ** (1.0 / r))
-    assert crossovers == sorted(crossovers)  # monotone in threshold
-    # recall bias: weighting false negatives pulls the crossover DOWN
-    b0, r0 = tune_lsh_bands(0.8, 64)
-    b1, r1 = tune_lsh_bands(0.8, 64, fn_weight=5.0)
-    assert (1.0 / b1) ** (1.0 / r1) < (1.0 / b0) ** (1.0 / r0)
-    with _pytest.raises(ValueError):
-        tune_lsh_bands(1.5, 64)
-    with _pytest.raises(ValueError):
-        tune_lsh_bands(0.5, 1)

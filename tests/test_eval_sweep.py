@@ -3,11 +3,7 @@
 import pytest
 from pyspark.sql import functions as F
 
-from localmod_spark.operators.evaluate import (
-    classification_metrics,
-    grouped_metrics,
-    threshold_sweep,
-)
+from localmod_spark.operators.evaluate import classification_metrics, grouped_metrics
 from localmod_spark.operators.sampling import select_token_budget
 
 
@@ -37,23 +33,6 @@ def test_grouped_metrics_known_values(spark, pairs):
     a = {r.ds: r for r in grouped_metrics(pairs, ["ds"]).collect()}["a"]
     assert (a.tp, a.fp, a.fn, a.tn) == (1, 1, 1, 1)
     assert a.precision == 0.5 and a.recall == 0.5 and a.f1 == 0.5
-
-
-def test_threshold_sweep_matches_per_threshold(spark):
-    rows = [(0.1, True), (0.3, False), (0.5, True), (0.7, True), (0.9, False)]
-    scored = spark.createDataFrame(rows, "score double, label boolean")
-    ts = (0.2, 0.6, 0.8)
-    sweep = {r.threshold: r for r in threshold_sweep(scored, ts).collect()}
-    assert set(sweep) == set(ts)
-    for t in ts:
-        solo = classification_metrics(
-            scored.withColumn("pred", F.col("score") >= t)
-        ).collect()[0]
-        assert (sweep[t].tp, sweep[t].fp, sweep[t].fn, sweep[t].tn) == (
-            solo.tp, solo.fp, solo.fn, solo.tn), t
-    # raising the threshold can only shrink the predicted-positive set
-    pos = [sweep[t].tp + sweep[t].fp for t in sorted(ts)]
-    assert pos == sorted(pos, reverse=True)
 
 
 def test_token_budget_respects_budget_and_order(spark):

@@ -1,17 +1,13 @@
 """S4 image-input dispatch: the reference's `_load_image` input-kind
 handling (`src/localmod/classifiers/nsfw_image.py:79-108`) at the byte
-level, plus a binaryFile-sourced run through the NSFW-image stage."""
+level."""
 
 import base64
 import io
 
 import pytest
 
-from localmod_spark.operators.multimodal import (
-    classify_media_nsfw,
-    load_image_bytes,
-    with_image_payload,
-)
+from localmod_spark.operators.multimodal import load_image_bytes
 
 PAYLOAD = bytes(range(64)) * 4  # 256 deterministic fixture bytes
 
@@ -57,46 +53,3 @@ def test_dispatch_rejects_pil_like_and_unknown():
         load_image_bytes(FakePIL())
     with pytest.raises(ValueError, match="Unsupported image input type"):
         load_image_bytes(12345)
-
-
-def test_with_image_payload_resolves_mixed_refs(spark, tmp_path):
-    p = tmp_path / "a.bin"
-    p.write_bytes(PAYLOAD)
-    refs = [
-        (0, str(p)),
-        (1, "data:image/png;base64," + base64.b64encode(b"abc123").decode()),
-    ]
-    df = spark.createDataFrame(refs, "media_id long, image_ref string")
-    got = {r.media_id: bytes(r.payload) for r in with_image_payload(df).collect()}
-    assert got == {0: PAYLOAD, 1: b"abc123"}
-
-
-def test_binaryfile_source_through_nsfw_stage(spark, tmp_path):
-    """The done-criterion: spark.read binaryFile → dispatch-normalized
-    media table → classify_media_nsfw, with values matching a driver-side
-    recomputation of the same decision kernel on the same bytes."""
-    import pyspark.sql.functions as F
-
-    from localmod_spark.kernel.nsfw_image import nsfw_image_prob
-    from localmod_spark.operators.multimodal import _fake_vit_probs
-
-    files = {}
-    for i in range(4):
-        payload = bytes([(i * 37 + j) % 256 for j in range(512)])
-        (tmp_path / f"img_{i}.png").write_bytes(payload)
-        files[f"img_{i}.png"] = payload
-
-    media = (
-        spark.read.format("binaryFile")
-        .load(str(tmp_path))
-        .select(
-            F.regexp_extract(F.col("path"), r"img_(\d+)\.png", 1).cast("long").alias("media_id"),
-            F.lit("image").alias("kind"),
-            F.col("content").alias("payload"),
-        )
-    )
-    got = {r.media_id: (r.nsfw_prob, r.predicted_label) for r in classify_media_nsfw(media).collect()}
-    assert len(got) == 4
-    for i in range(4):
-        prob, label = nsfw_image_prob(_fake_vit_probs(files[f"img_{i}.png"]))
-        assert got[i] == (pytest.approx(prob), label)

@@ -1,7 +1,5 @@
 """Language-ID and quality-scoring kernels (north-rule additions)."""
 
-import pytest
-
 from localmod_spark.kernel.langid import detect_language
 from localmod_spark.kernel.quality import (
     char_perplexity,
@@ -103,28 +101,6 @@ def test_trained_lm_scores_its_own_domain_lower(spark):
     assert char_perplexity(english) < char_perplexity(english, logprob_flat=digit_lm)
 
 
-def test_perplexity_udf_with_trained_lm_through_spark(spark):
-    """Train on the corpus, ship the table in a UDF closure, and assert
-    the Spark-side values equal the kernel's under the same table."""
-    from localmod_spark.functions.text import perplexity_udf_with_lm
-    from localmod_spark.kernel.quality import char_perplexity
-    from localmod_spark.operators.textstats import train_char_bigram_lm
-
-    rows = [(i, t) for i, t in enumerate([
-        "the quick brown fox jumps over the lazy dog",
-        "zzzz qqqq xxxx 9999 @@@@",
-        "a plain sentence about markets and weather",
-    ] * 10)]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    table = train_char_bigram_lm(df)
-    udf = perplexity_udf_with_lm(table)
-    from pyspark.sql import functions as F
-    got = {r.doc_id: r.p for r in df.withColumn("p", udf(F.col("text"))).collect()}
-    flat = table.reshape(-1)
-    for i, t in rows:
-        assert got[i] == pytest.approx(char_perplexity(t, logprob_flat=flat), abs=1e-12)
-
-
 # ---------------------------------------------------------- KN trigram ----
 
 
@@ -199,29 +175,6 @@ def test_distributed_kn_train_equals_local(spark):
     for t in texts:
         local += trigram_counts(t)
     np.testing.assert_array_equal(spark_table, kn_logprob_table(local))
-
-
-def test_kn_trigram_udf_matches_kernel(spark):
-    import pyspark.sql.functions as F
-
-    from localmod_spark.functions.text import perplexity_udf_with_kn_trigram
-    from localmod_spark.kernel.quality import (
-        _SEED_CORPUS,
-        char_perplexity_trigram,
-        kn_logprob_table,
-        trigram_counts,
-    )
-
-    table = kn_logprob_table(trigram_counts(_SEED_CORPUS))
-    texts = ["the cat sat on the mat", "zzzz qqqq", "", "ok"]
-    df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)], "i long, text string")
-    got = {
-        r.i: r.p
-        for r in df.withColumn("p", perplexity_udf_with_kn_trigram(table)(F.col("text"))).collect()
-    }
-    flat = table.reshape(-1)
-    for i, t in enumerate(texts):
-        assert got[i] == char_perplexity_trigram(t, flat)
 
 
 def test_lm_trainer_driver_reduce_is_bounded(spark):

@@ -6,19 +6,13 @@ values with stub probability functions (no model downloads needed):
     `models/paths.py:31-36`);
   * spam 0.6*ml + 0.4*heuristic blend (`spam.py:102-105`);
   * prompt-injection max(ml, pattern) + corroboration boost
-    (`prompt_injection.py:128-132`);
-  * NSFW-image label-scan + inverse-of-normal fallback
-    (`nsfw_image.py:149-172`).
+    (`prompt_injection.py:128-132`).
 """
 
 import numpy as np
 import pytest
 
 from localmod_spark.kernel.injection import injection_combine, injection_result
-from localmod_spark.kernel.nsfw_image import (
-    nsfw_image_prob,
-    nsfw_image_result,
-)
 from localmod_spark.kernel.spam import spam_blend, spam_heuristics, spam_result
 from localmod_spark.kernel.toxicity import (
     ENSEMBLE_WEIGHTS,
@@ -138,79 +132,6 @@ def test_injection_result_ml_mode():
     assert ml_only.confidence == pytest.approx(0.9)
     assert ml_only.flagged and ml_only.categories == ()  # no pattern categories
     assert ml_only.severity == "critical"  # ≥0.85 band
-
-
-# ------------------------------------------------------------ nsfw image ----
-
-
-def test_nsfw_image_direct_label():
-    assert nsfw_image_prob([0.9, 0.1]) == (0.1, "normal")
-    prob, label = nsfw_image_prob([0.2, 0.8])
-    assert (prob, label) == (0.8, "nsfw")
-    r = nsfw_image_result([0.2, 0.8])
-    assert r.flagged and r.severity == "high" and r.categories == ("nsfw",)
-
-
-def test_nsfw_image_inverse_of_normal_fallback():
-    labels = {0: "normal", 1: "drawing"}
-    prob, label = nsfw_image_prob([0.7, 0.3], labels)
-    assert label == "normal" and prob == pytest.approx(0.3)
-    # no nsfw-named label and predicted label isn't "normal" → 0.0
-    prob2, label2 = nsfw_image_prob([0.7, 0.3], {0: "safe", 1: "drawing"})
-    assert label2 == "safe" and prob2 == 0.0
-
-
-def test_nsfw_image_tie_takes_last_label():
-    prob, label = nsfw_image_prob([0.5, 0.5])
-    assert label == "nsfw" and prob == 0.5
-    r = nsfw_image_result([0.5, 0.5])
-    assert r.flagged and r.severity == "low"  # 0.5 ≤ p < 0.6
-
-
-def test_nsfw_image_severity_bands():
-    assert nsfw_image_result([0.05, 0.95]).severity == "critical"
-    assert nsfw_image_result([0.24, 0.76]).severity == "high"
-    assert nsfw_image_result([0.35, 0.65]).severity == "medium"
-    assert nsfw_image_result([0.6, 0.4]).severity == "none"
-
-
-# ----------------------------------------------------- spark O7 plumbing ----
-
-
-def test_classify_media_nsfw_spark(spark):
-    from localmod_spark.kernel.nsfw_image import nsfw_image_prob as kernel_prob
-    from localmod_spark.operators.multimodal import (
-        _fake_vit_probs,
-        classify_media_nsfw,
-        synth_media,
-    )
-
-    media = synth_media(spark, 30)
-    out = classify_media_nsfw(media).collect()
-    assert len(out) == 10  # kind == image only (every 3rd row)
-    payloads = {r.media_id: bytes(r.payload) for r in media.where("kind = 'image'").collect()}
-    for r in out:
-        want_prob, want_label = kernel_prob(_fake_vit_probs(payloads[r.media_id]))
-        assert r.nsfw_prob == pytest.approx(want_prob)
-        assert r.predicted_label == want_label
-        assert r.nsfw_flagged == (r.nsfw_prob >= 0.5)
-
-
-def test_classify_media_nsfw_real_decode_marked(spark):
-    from localmod_spark.operators.multimodal import classify_media_nsfw, synth_media
-
-    # real mode demands the ViT slot up front ...
-    with pytest.raises(ValueError, match="model_fn"):
-        classify_media_nsfw(synth_media(spark, 3), decode="real")
-    # ... and without PIL the decode itself still fails loudly at run time
-    # (skip-gated real-path coverage lives in tests/test_real_models.py)
-    try:
-        import PIL  # noqa: F401
-    except ImportError:
-        with pytest.raises(Exception, match="NotImplementedError|real decode"):
-            classify_media_nsfw(
-                synth_media(spark, 3), decode="real", model_fn=lambda px: [0.5, 0.5]
-            ).collect()
 
 
 # --------------------------------------------- pipeline-level ML wiring ----

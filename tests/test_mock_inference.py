@@ -9,10 +9,12 @@ in for the HF weights (none exist in this sandbox)."""
 
 import numpy as np
 import pytest
+from pyspark import cloudpickle
 
+import mock_inference
 from localmod_spark.kernel.aggregate import PipelineConfig, analyze_frame
 from localmod_spark.kernel.toxicity import ensemble_prob_batch
-from localmod_spark.models.mock_inference import (
+from mock_inference import (
     CLS_ID,
     PAD_ID,
     SEP_ID,
@@ -21,6 +23,10 @@ from localmod_spark.models.mock_inference import (
     load_ensemble,
     scalar_prob_fns,
 )
+
+# The fake lives next to the tests, which executors cannot import: ship
+# its classes and functions inside the UDF closure instead.
+cloudpickle.register_pickle_by_value(mock_inference)
 
 TEXTS = [
     "you are a wonderful person and i appreciate your help",

@@ -1,18 +1,15 @@
-"""Validation (F4), evaluation (A5), sinks (S6), classifier selection (F3),
+"""Validation (F4), evaluation (A5), classifier selection (F3),
 multimodal plumbing, and embedding near-dup operators."""
-
-import json
 
 import pytest
 from pyspark.sql import functions as F
 
 from localmod_spark.kernel.aggregate import PipelineConfig
-from localmod_spark.operators.evaluate import agreement_gate, classification_metrics
+from localmod_spark.operators.evaluate import classification_metrics
 from localmod_spark.operators.multimodal import extract_media_features, synth_media
 from localmod_spark.operators.score import score_turns
 from localmod_spark.operators.similarity import embedding_near_dups
-from localmod_spark.operators.validate import split_quarantine, with_validity
-from localmod_spark.sources.sinks import with_report_json
+from localmod_spark.operators.validate import with_validity
 from localmod_spark.sources.transcripts import synth_transcripts
 
 
@@ -27,16 +24,6 @@ def test_validity_reasons(spark):
     assert got[2] == (False, "empty_text")
     assert got[3] == (False, "null_text")
     assert got[4] == (False, "too_long")
-
-
-def test_quarantine_split_reconciles(spark):
-    df = spark.createDataFrame(
-        [(i, "ok") if i % 3 else (i, "") for i in range(30)], "id int, text string"
-    )
-    good, bad = split_quarantine(df)
-    assert good.count() + bad.count() == 30
-    assert set(good.columns) == {"id", "text"}
-    assert bad.where("invalid_reason = 'empty_text'").count() == bad.count()
 
 
 def test_classification_metrics_formulas(spark):
@@ -60,22 +47,6 @@ def test_metrics_zero_guards(spark):
     assert (m.precision, m.recall, m.f1) == (0.0, 0.0, 0.0)
 
 
-def test_agreement_gate_self_is_perfect(spark):
-    """Scored output vs itself → F1=1, zero scrub mismatches — the gate
-    wiring end-to-end (the real gate vs the kernel oracle lives in
-    test_spark_parity.py)."""
-    scored = score_turns(synth_transcripts(spark, 300, slices=2)).select(
-        "conv_id", "turn_idx", "flagged", "scrubbed_text"
-    )
-    expected = scored.select(
-        "conv_id", "turn_idx",
-        F.col("flagged").alias("flagged_expected"),
-        F.col("scrubbed_text").alias("scrubbed_expected"),
-    )
-    g = agreement_gate(scored, expected).collect()[0]
-    assert g.f1 == 1.0 and g.scrub_mismatches == 0 and g.n_rows == 300
-
-
 def test_classifier_selection_in_spark(spark):
     turns = synth_transcripts(spark, 400, slices=2)
     pii_only = score_turns(turns, cfg=PipelineConfig(classifiers=("pii",)))
@@ -87,16 +58,6 @@ def test_classifier_selection_in_spark(spark):
         ).collect()[0]
     )
     assert row.spam == 0 and row.tox == 0 and row.pii > 0
-
-
-def test_report_json_shape(spark):
-    scored = score_turns(synth_transcripts(spark, 50, slices=1))
-    r = with_report_json(scored).select("report").first()[0]
-    doc = json.loads(r)
-    assert set(doc) >= {"flagged", "severity", "results", "summary"}
-    assert [x["classifier"] for x in doc["results"]] == [
-        "toxicity", "pii", "prompt_injection", "spam", "nsfw",
-    ]
 
 
 def test_media_features_deterministic(spark):

@@ -7,7 +7,6 @@ from pyspark.sql import functions as F
 
 from localmod_spark.plans.pipeline import (
     completed_waves,
-    read_lineage,
     read_metrics,
     read_output,
     run_pipeline,
@@ -38,7 +37,7 @@ def test_all_waves_run_and_rows_complete(spark, first_run, out_dir):
 
 
 def test_lineage_ledger(spark, first_run, out_dir):
-    ledger = read_lineage(spark, out_dir)
+    ledger = spark.read.parquet(out_dir + "/_lineage")
     assert ledger.where("status = 'done'").select("wave").distinct().count() == WAVES
     assert ledger.agg(F.sum("rows")).collect()[0][0] == N
     assert completed_waves(spark, out_dir) == set(range(WAVES))
@@ -66,7 +65,7 @@ def test_partial_resume_completes_missing_wave(spark, out_dir, tmp_path_factory)
     # simulate a crash after wave 0+1 by pre-marking them done
     run_pipeline(spark, turns, d, n_waves=WAVES, context=False)
     # wipe ledger rows for waves 2,3 → pipeline must re-run exactly those
-    ledger = read_lineage(spark, d).where(F.col("wave") < 2)
+    ledger = spark.read.parquet(d + "/_lineage").where(F.col("wave") < 2)
     ledger.write.mode("overwrite").parquet(d + "/_lineage_new")
     shutil.rmtree(d + "/_lineage")
     shutil.move(d + "/_lineage_new", d + "/_lineage")
@@ -86,21 +85,6 @@ def test_output_scrub_matches_kernel(spark, first_run, out_dir):
     for r in rows:
         want = pii_scrub(r.text)[0] if r.text is not None else None
         assert r.scrubbed_text == want
-
-
-def test_stage_write_partition_pruned_equivalent(spark, tmp_path_factory):
-    """stage='write' (materialize once, hive-partitioned by wave, pruned
-    per-wave reads) must produce the identical output to the default."""
-    d = str(tmp_path_factory.mktemp("staged_out"))
-    turns = synth_transcripts(spark, N, slices=4)
-    res = run_pipeline(spark, turns, d, n_waves=WAVES, context=False, stage="write")
-    assert sorted(res.waves_run) == list(range(WAVES))
-    out = read_output(spark, d)
-    assert out.count() == N
-    assert out.groupBy("conv_id", "turn_idx").count().where("count > 1").count() == 0
-    import os
-    # the staging copy is internal: dropped once every wave committed
-    assert not os.path.isdir(d + "/_staging")
 
 
 def test_unreadable_ledger_warns_not_silently_resets(spark, tmp_path_factory):

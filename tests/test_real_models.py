@@ -107,35 +107,6 @@ def test_real_decode_extracts_features_from_png(spark):
     assert len(row.feature) == 8 and abs(sum(v * v for v in row.feature) - 1.0) < 1e-6
 
 
-@pytest.mark.skipif(not _pil_available(), reason="PIL not installed in this sandbox")
-def test_real_decode_nsfw_stage_uses_injected_model(spark):
-    """decode='real' + injected model_fn: PIL decodes the payload and the
-    reference decision layer runs on the model's probs."""
-    import io
-
-    from PIL import Image
-
-    from localmod_spark.operators.multimodal import classify_media_nsfw
-
-    buf = io.BytesIO()
-    Image.new("RGB", (8, 8), color=(200, 10, 10)).save(buf, format="PNG")
-    media = spark.createDataFrame(
-        [(0, "image", bytearray(buf.getvalue()), None)],
-        "media_id long, kind string, payload binary, duration_ms long",
-    )
-
-    def model_fn(pixels):
-        # deterministic stand-in ViT: prob from the decoded mean — proves
-        # the DECODED array (not the payload bytes) reaches the model
-        assert pixels.ndim == 3 and pixels.shape[2] == 3
-        m = float(pixels.mean()) / 255.0
-        return [1.0 - m, m]
-
-    row = classify_media_nsfw(media, decode="real", model_fn=model_fn).collect()[0]
-    assert row.predicted_label in ("normal", "nsfw")
-    assert 0.0 <= row.nsfw_prob <= 1.0
-
-
 def test_real_decode_raises_loudly_without_pil(spark):
     """In this sandbox the real-decode slot must fail LOUDLY (the fake
     codec is never silently substituted)."""

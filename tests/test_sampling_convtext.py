@@ -4,11 +4,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from localmod_spark.operators.context import conv_text
-from localmod_spark.operators.sampling import (
-    sample_stratified,
-    sample_uniform,
-    split_train_holdout,
-)
+from localmod_spark.operators.sampling import sample_stratified
 
 
 @pytest.fixture(scope="module")
@@ -17,22 +13,27 @@ def docs(spark):
     return spark.createDataFrame(rows, "doc_id long, lang string, text string").persist()
 
 
-def test_sample_uniform_rate_and_determinism(docs):
-    kept = sample_uniform(docs, 0.25)
+def _sample_all(docs, rate):
+    """Every stratum at one rate: keep each row iff hash_uniform(id) < rate."""
+    return sample_stratified(docs, {}, default_rate=rate)
+
+
+def test_sample_rate_and_determinism(docs):
+    kept = _sample_all(docs, 0.25)
     ids1 = {r.doc_id for r in kept.collect()}
     # approximate rate (hash uniforms, n=2000)
     assert 0.19 < len(ids1) / 2000 < 0.31
     # identical under a different partitioning and on a rebuilt plan —
     # the property df.sample() does NOT give
-    ids2 = {r.doc_id for r in sample_uniform(docs.repartition(17), 0.25).collect()}
+    ids2 = {r.doc_id for r in _sample_all(docs.repartition(17), 0.25).collect()}
     assert ids1 == ids2
 
 
 def test_sample_rate_monotone_supersets(docs):
     """Raising the rate must only ADD rows (hash-threshold property) —
     retuning a mix never reshuffles the already-selected sample."""
-    small = {r.doc_id for r in sample_uniform(docs, 0.1).collect()}
-    big = {r.doc_id for r in sample_uniform(docs, 0.3).collect()}
+    small = {r.doc_id for r in _sample_all(docs, 0.1).collect()}
+    big = {r.doc_id for r in _sample_all(docs, 0.3).collect()}
     assert small <= big
 
 
@@ -49,16 +50,6 @@ def test_sample_stratified_rates_and_isolation(docs):
     kept2 = sample_stratified(docs, {"en": 0.8, "de": 0.9}, default_rate=0.0)
     en_after = {r.doc_id for r in kept2.where(F.col("lang") == "en").collect()}
     assert en_before == en_after
-
-
-def test_split_train_holdout_disjoint_stable(docs):
-    split = split_train_holdout(docs, holdout_rate=0.1)
-    counts = {r.split: r.n for r in split.groupBy("split").agg(F.count(F.lit(1)).alias("n")).collect()}
-    assert counts["train"] + counts["holdout"] == 2000
-    assert 0.05 < counts["holdout"] / 2000 < 0.15
-    # holdout ⊆ the uniform sample at the same rate (same hash threshold)
-    hold = {r.doc_id for r in split.where(F.col("split") == "holdout").collect()}
-    assert hold == {r.doc_id for r in sample_uniform(docs, 0.1).collect()}
 
 
 def test_conv_text_order_stable_under_shuffled_input(spark):

@@ -1,228 +1,6 @@
-"""Structured-streaming variant: same scoring plan over readStream."""
+"""Structured-streaming ingest: bloom-gated exact dedup over readStream."""
 
 import pytest
-from pyspark.sql import functions as F
-
-from localmod_spark.operators.score import score_turns
-from localmod_spark.sources.transcripts import TRANSCRIPT_SCHEMA, synth_transcripts
-from localmod_spark.streaming import conv_flag_counts_stream, score_stream
-
-
-@pytest.fixture(scope="module")
-def stream_source_dir(spark, tmp_path_factory):
-    d = str(tmp_path_factory.mktemp("stream_src"))
-    synth_transcripts(spark, 600, slices=2).write.mode("overwrite").parquet(d)
-    return d
-
-
-def test_streaming_scores_match_batch(spark, stream_source_dir, tmp_path_factory):
-    stream = spark.readStream.schema(TRANSCRIPT_SCHEMA).parquet(stream_source_dir)
-    scored = score_stream(stream)
-    assert scored.isStreaming
-    q = (
-        scored.select("conv_id", "turn_idx", "keep", "scrubbed_text")
-        .writeStream.format("memory")
-        .queryName("scored_mem")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {
-        (r.conv_id, r.turn_idx): (r.keep, r.scrubbed_text)
-        for r in spark.sql("select * from scored_mem").collect()
-    }
-    batch = {
-        (r.conv_id, r.turn_idx): (r.keep, r.scrubbed_text)
-        for r in score_turns(spark.read.parquet(stream_source_dir))
-        .select("conv_id", "turn_idx", "keep", "scrubbed_text")
-        .collect()
-    }
-    assert got == batch and len(got) == 600
-
-
-def test_streaming_windowed_conv_counts(spark, stream_source_dir):
-    stream = spark.readStream.schema(TRANSCRIPT_SCHEMA).parquet(stream_source_dir)
-    agg = conv_flag_counts_stream(score_stream(stream), watermark="1 hour", window="1 hour")
-    assert agg.isStreaming
-    q = (
-        agg.writeStream.format("memory")
-        .queryName("conv_counts_mem")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    out = spark.sql("select * from conv_counts_mem")
-    total = out.agg(F.sum("n_turns")).collect()[0][0]
-    assert total == 600
-    assert out.where("n_flagged > n_turns").count() == 0
-
-
-def test_stateful_running_totals_accumulate(spark, tmp_path_factory):
-    """applyInPandasWithState keeps per-conversation state across
-    micro-batches: replay the table one file per trigger and check the
-    final totals equal the batch ground truth."""
-    from localmod_spark.streaming import conv_running_totals_stream
-
-    d = str(tmp_path_factory.mktemp("stateful_src"))
-    full = synth_transcripts(spark, 400, slices=4)
-    full.write.mode("overwrite").parquet(d)
-
-    stream = (
-        spark.readStream.schema(TRANSCRIPT_SCHEMA)
-        .option("maxFilesPerTrigger", 1)  # several micro-batches
-        .parquet(d)
-    )
-    totals = conv_running_totals_stream(score_stream(stream))
-    q = (
-        totals.writeStream.format("memory")
-        .queryName("running_totals")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    # last emitted row per conversation = cumulative totals
-    from pyspark.sql import Window
-    import pyspark.sql.functions as SF
-
-    got = {
-        r.conv_id: (r.n_turns, r.n_flagged)
-        for r in spark.sql(
-            "select * from (select *, row_number() over "
-            "(partition by conv_id order by n_turns desc) rk from running_totals) where rk=1"
-        ).collect()
-    }
-    want = {
-        r.conv_id: (r.n, r.f)
-        for r in score_turns(spark.read.parquet(d))
-        .groupBy("conv_id")
-        .agg(SF.count("*").alias("n"), SF.sum(SF.col("flagged").cast("long")).alias("f"))
-        .collect()
-    }
-    assert got == want
-
-
-def test_streaming_ingest_dedup_drops_redeliveries(spark, tmp_path_factory):
-    """dropDuplicatesWithinWatermark: a doubled source collapses to one
-    row per (conv_id, turn_idx) within the watermark horizon."""
-    from localmod_spark.streaming.score_stream import dedup_stream
-
-    d = str(tmp_path_factory.mktemp("dup_stream_src"))
-    base = synth_transcripts(spark, 300, slices=2)
-    base.unionByName(base).write.mode("overwrite").parquet(d)  # every turn delivered twice
-
-    stream = spark.readStream.schema(TRANSCRIPT_SCHEMA).parquet(d)
-    deduped = dedup_stream(stream, delay="2 hours")
-    assert deduped.isStreaming
-    q = (
-        deduped.select("conv_id", "turn_idx")
-        .writeStream.format("memory")
-        .queryName("dedup_mem")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    out = spark.sql("select * from dedup_mem")
-    assert out.count() == 300
-    assert out.groupBy("conv_id", "turn_idx").count().where("count > 1").count() == 0
-
-
-def test_dedup_stream_state_evicted_past_watermark(spark, tmp_path_factory):
-    """State-bound evidence (VERDICT r3 #8): dropDuplicatesWithinWatermark
-    must EVICT key state once the watermark passes it — feed files whose
-    event time advances one hour per micro-batch with a 30-minute delay
-    and read eviction off the state-store metrics."""
-    import datetime as dt
-
-    d = str(tmp_path_factory.mktemp("evict_src"))
-    base = dt.datetime(2024, 1, 1)
-    for i in range(6):
-        rows = [
-            (f"c{i}", t, "user", f"turn {t} of conversation {i}", None,
-             base + dt.timedelta(hours=i, seconds=t))
-            for t in range(20)
-        ]
-        # one file per write → one micro-batch per file (oldest-first)
-        spark.createDataFrame(rows, TRANSCRIPT_SCHEMA).coalesce(1).write.mode(
-            "append"
-        ).parquet(d)
-
-    from localmod_spark.streaming.score_stream import dedup_stream
-
-    stream = (
-        spark.readStream.schema(TRANSCRIPT_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(d)
-    )
-    deduped = dedup_stream(stream, key_cols=("conv_id", "turn_idx"), delay="30 minutes")
-    q = (
-        deduped.select("conv_id", "turn_idx")
-        .writeStream.format("memory")
-        .queryName("evict_mem")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    assert spark.sql("select * from evict_mem").count() == 120
-    state = [
-        p["stateOperators"][0]
-        for p in q.recentProgress
-        if p.get("stateOperators")
-    ]
-    assert state, "no state-operator progress recorded"
-    removed = sum(s.get("numRowsRemoved", 0) for s in state)
-    final_total = state[-1]["numRowsTotal"]
-    # rows an hour behind the watermark were dropped from the store: the
-    # store never holds all 120 keys at once
-    assert removed > 0
-    assert final_total < 120
-
-
-def test_stream_file_sink_day_layout_matches_batch(spark, stream_source_dir, tmp_path_factory):
-    """The streaming file sink emits the SAME consumer-shaped layout as
-    the batch pipeline (day=to_date(ts) partitions): a date-ranged
-    read-back prunes on the day column, rows equal the batch scoring of
-    the same input, and a second availableNow run is a checkpointed
-    no-op (exactly-once file commits, the streaming analog of the
-    batch ledger)."""
-    from localmod_spark.streaming import score_stream, write_scored_stream
-
-    out = str(tmp_path_factory.mktemp("stream_day_out"))
-    ckpt = str(tmp_path_factory.mktemp("stream_day_ckpt"))
-    stream = spark.readStream.schema(TRANSCRIPT_SCHEMA).parquet(stream_source_dir)
-    q = write_scored_stream(score_stream(stream), out, ckpt, partition_by_day=True)
-    q.awaitTermination(180)
-    df = spark.read.parquet(out)
-    days = sorted(r.day for r in df.select("day").distinct().collect())
-    assert len(days) >= 2
-    plan = spark._sc._jvm.PythonSQLUtils.explainString(
-        df.where(F.col("day") == days[0]).select("conv_id")._jdf.queryExecution(),
-        "formatted",
-    )
-    line = [l for l in plan.splitlines() if "PartitionFilters" in l][0]
-    assert "day" in line, plan
-    got = {
-        (r.conv_id, r.turn_idx): (r.keep, r.scrubbed_text)
-        for r in df.select("conv_id", "turn_idx", "keep", "scrubbed_text").collect()
-    }
-    batch = {
-        (r.conv_id, r.turn_idx): (r.keep, r.scrubbed_text)
-        for r in score_turns(spark.read.parquet(stream_source_dir))
-        .select("conv_id", "turn_idx", "keep", "scrubbed_text")
-        .collect()
-    }
-    assert got == batch and len(got) == 600
-    # restart with the same checkpoint: backlog already committed -> no-op
-    q2 = write_scored_stream(
-        score_stream(spark.readStream.schema(TRANSCRIPT_SCHEMA).parquet(stream_source_dir)),
-        out, ckpt, partition_by_day=True,
-    )
-    q2.awaitTermination(120)
-    assert spark.read.parquet(out).count() == 600
 
 
 def test_ingest_bloom_stream_admits_each_key_once(spark, tmp_path_factory):
