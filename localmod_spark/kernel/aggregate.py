@@ -127,9 +127,6 @@ def config_from_env(environ=None) -> PipelineConfig:
         nsfw_threshold=_f("LOCALMOD_NSFW_THRESHOLD", nsfw_mod.DEFAULT_THRESHOLD),
     )
 
-# Registry order (`src/localmod/classifiers/__init__.py:29-35`).
-CLASSIFIER_ORDER = ("toxicity", "pii", "prompt_injection", "spam", "nsfw")
-
 # Flat output column order of both analyze paths (and the Spark stage).
 OUTPUT_COLUMNS = [
     "keep", "flagged", "severity", "summary",

@@ -74,9 +74,6 @@ def _spam_severity(confidence: float, threshold: float) -> str:
     return HIGH
 
 
-ML_THRESHOLD = 0.5  # the reference's default when the ML model is on (`config.py:46`)
-
-
 def spam_blend(ml_score: float, heuristic_score: float) -> float:
     """The ML/heuristic combination when the model is loaded
     (`src/localmod/classifiers/spam.py:102-105`):

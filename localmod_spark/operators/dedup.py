@@ -564,14 +564,32 @@ def contaminated_docs(
     )
 
 
+def _with_doc_freq(df: DataFrame, key: str, id_col: str) -> DataFrame:
+    """Add ``n_docs`` (long): the number of distinct non-NULL ``id_col``
+    values among the rows that share the row's ``key``.
+
+    ``dense_rank`` over the key's rows ordered by id, then ``max(rank)``
+    over the key, less one when the key holds a NULL id (NULLs sort
+    first, take rank 1 and count as no document).  One hash exchange and
+    one sort on the key; both window functions keep O(1) state over
+    Spark's spillable window row buffer, so a key shared by every
+    document costs a sort, never an in-memory set of its ids."""
+    by_key = Window.partitionBy(key)
+    rank = F.dense_rank().over(by_key.orderBy(F.col(id_col).asc_nulls_first()))
+    has_null = F.max(F.col(id_col).isNull().cast("int")).over(by_key)
+    return (
+        df.withColumn("_rk", rank)
+        .withColumn("n_docs", (F.max("_rk").over(by_key) - has_null).cast("long"))
+        .drop("_rk")
+    )
+
+
 def repeated_spans(
     docs: DataFrame,
     n: int = 5,
     min_docs: int = 2,
     id_col: str = "doc_id",
     text_col: str = "text",
-    max_df: Optional[int] = None,
-    observation: Optional[Observation] = None,
     unit: str = "word",
 ) -> DataFrame:
     """Substring-level exact dedup: flag every ``n``-gram SPAN that
@@ -580,23 +598,16 @@ def repeated_spans(
     the repeated-substring mode that whole-doc exact + near dedup both
     miss: boilerplate shared across otherwise-distinct docs).  Returns
     one row per flagged span: (id, pos, gram, n_docs) with ``pos`` the
-    0-based token offset.
+    0-based token offset.  NULL ids count as no document.
 
     Shape (all JVM-side, no Python): tokenize → positions via
-    ``transform`` over a ``sequence`` of offsets → explode → gram
-    doc-frequency as ``size(collect_set(id))`` over a window on the gram
-    → frequency filter.  Never a self-join: the window's gram exchange
-    is the only shuffle, the span build upstream runs once, and the
-    output is linear in corpus gram count, not quadratic.  (With an
-    ``observation`` the doc-frequency is a ``countDistinct`` aggregate
-    joined back on the gram instead; see "Plan shape" below.)
-
-    ``max_df`` (opt-in) caps the join blowup from ubiquitous grams (a
-    gram in 10^8 docs re-emits every one of its occurrences): grams with
-    doc-frequency above the cap are EXCLUDED from the output — a recall
-    trade, so it is observable, never silent: pass ``observation`` and
-    after the action ``observation.get`` carries ``dropped_grams`` (count
-    over the cap) and ``max_gram_df``.
+    ``transform`` over a ``sequence`` of offsets → explode → per-gram
+    doc-frequency (:func:`_with_doc_freq`: a rank window on the gram) →
+    frequency filter.  Never a self-join and never a join-back: the
+    window's gram exchange is the only shuffle after the span build, the
+    span build runs once, and the output is linear in corpus gram count.
+    A gram in every document is one sorted window group with O(1) state
+    per row, so hot boilerplate costs a sort, not a per-gram id set.
 
     ``unit``: ``"word"`` (default) tokenizes lowercase and ``pos``/``n``
     count whitespace tokens — the moderation-normalized variant.
@@ -605,20 +616,8 @@ def repeated_spans(
     whitespace normalization — the mode that catches boilerplate
     STRADDLING word boundaries (markup, code, stitched templates), which
     word grams provably miss (tested).  Char mode materializes
-    O(chars·n) gram bytes before the frequency cut — use a larger ``n``
-    (~4-6 words' worth) and the same ``max_df`` escape hatch at scale.
-
-    Plan shape (r7): without an ``observation`` the doc-frequency is a
-    ``collect_set`` WINDOW over the gram key instead of the
-    countDistinct-aggregate + join-back — the span build (the CPU hot
-    spot: O(tokens·n) slice/substr per position) then has exactly ONE
-    consumer, so it executes once instead of twice (column pruning made
-    the aggregate branch's subtree differ from the probe branch's, which
-    defeated exchange reuse), and the gram key crosses the network once
-    instead of three times (measured 1.9 s → 0.9 s char-30 at sf0.1,
-    identical rows).  With an ``observation`` the aggregate shape is
-    kept: the cap counters are per-gram metrics and ride the frequency
-    aggregate's action."""
+    O(chars·n) gram bytes before the frequency cut, so use a larger
+    ``n`` (~4-6 words' worth)."""
     if unit not in ("word", "char"):
         raise ValueError(f"unit must be 'word' or 'char', got {unit!r}")
     empty = F.array().cast("array<struct<pos:int,gram:string>>")
@@ -635,53 +634,34 @@ def repeated_spans(
         toks_expr = F.filter(
             F.split(F.lower(F.trim(F.col(text_col))), r"\s+"), lambda x: x != ""
         )
-        src = docs.select(F.col(id_col), toks_expr.alias("_toks")).repartition(n_part)
-        toks = F.col("_toks")
-        spans_arr = F.when(
-            F.size(toks) >= n,
-            F.transform(
-                F.sequence(F.lit(0), F.size(toks) - n),
-                lambda i: F.struct(
-                    i.alias("pos"), F.array_join(F.slice(toks, i + 1, n), " ").alias("gram")
-                ),
-            ),
-        ).otherwise(empty)
+        src = docs.select(F.col(id_col), toks_expr.alias("_toks"))
+        s, size = F.col("_toks"), F.size
+
+        def cut(i):
+            return F.array_join(F.slice(s, i + 1, n), " ")
+
     else:
-        src = docs.select(F.col(id_col), F.col(text_col)).repartition(n_part)
-        txt = F.col(text_col)
-        spans_arr = F.when(
-            F.length(txt) >= n,
-            F.transform(
-                F.sequence(F.lit(0), F.length(txt) - n),
-                lambda i: F.struct(
-                    i.alias("pos"), txt.substr(i + F.lit(1), F.lit(n)).alias("gram")
-                ),
-            ),
-        ).otherwise(empty)
-    spans = src.select(F.col(id_col), F.explode(spans_arr).alias("s")).select(
-        id_col, F.col("s.pos").alias("pos"), F.col("s.gram").alias("gram")
+        src = docs.select(F.col(id_col), F.col(text_col))
+        s, size = F.col(text_col), F.length
+
+        def cut(i):
+            return s.substr(i + F.lit(1), F.lit(n))
+
+    spans_arr = F.when(
+        size(s) >= n,
+        F.transform(
+            F.sequence(F.lit(0), size(s) - n),
+            lambda i: F.struct(i.alias("pos"), cut(i).alias("gram")),
+        ),
+    ).otherwise(empty)
+    spans = src.repartition(n_part).select(
+        F.col(id_col), F.explode(spans_arr).alias("s")
+    ).select(id_col, F.col("s.pos").alias("pos"), F.col("s.gram").alias("gram"))
+    return (
+        _with_doc_freq(spans, "gram", id_col)
+        .where(F.col("n_docs") >= min_docs)
+        .select(id_col, "pos", "gram", "n_docs")
     )
-    if observation is None:
-        # single-consumer shape: the window's own gram exchange is the
-        # only shuffle, and the span build upstream runs exactly once
-        w = Window.partitionBy("gram")
-        out = spans.withColumn(
-            "n_docs", F.size(F.collect_set(id_col).over(w)).cast("long")
-        ).where(F.col("n_docs") >= min_docs)
-        if max_df is not None:
-            out = out.where(F.col("n_docs") <= max_df)
-        return out.select(id_col, "pos", "gram", "n_docs")
-    freq = spans.groupBy("gram").agg(F.countDistinct(id_col).alias("n_docs"))
-    cap = max_df if max_df is not None else (1 << 62)
-    freq = freq.observe(
-        observation,
-        F.sum((F.col("n_docs") > cap).cast("long")).alias("dropped_grams"),
-        F.max("n_docs").alias("max_gram_df"),
-    )
-    freq = freq.where(F.col("n_docs") >= min_docs)
-    if max_df is not None:
-        freq = freq.where(F.col("n_docs") <= max_df)
-    return spans.join(freq, "gram").select(id_col, "pos", "gram", "n_docs")
 
 
 def remove_repeated_spans(
@@ -690,9 +670,6 @@ def remove_repeated_spans(
     min_docs: int = 2,
     id_col: str = "doc_id",
     text_col: str = "text",
-    max_df: Optional[int] = None,
-    observation: Optional[Observation] = None,
-    spans: Optional[DataFrame] = None,
     unit: str = "word",
 ) -> DataFrame:
     """Span REMOVAL — Lee et al. (ACL'22) don't just flag repeated
@@ -707,37 +684,25 @@ def remove_repeated_spans(
     (flagging tokenizes lowercase; positions map 1:1 because lowering
     never changes whitespace).
 
-    Shape (r7, VERDICT-r6 #4): :func:`repeated_spans` (all-JVM) →
-    per-doc SORTED span-start array (one grouped
-    ``array_sort(collect_set)`` — bounded by tokens-per-doc, never by
-    corpus size) → LEFT join back to the docs → GAP reconstruction:
-    because every span has the same fixed length ``n``, the coverage of
-    all starts ≤ p ends exactly at p+n, so the kept text is the
-    concatenation of the inter-span gaps ``[sp[i]+n, sp[i+1])`` plus
-    head/tail — one bulk ``substr``/``slice`` per gap instead of an
-    ``exists`` over the span set per token (O(gaps) vs O(tokens·spans)
-    per doc; the per-token scan was the stage a boilerplate-heavy doc
-    with thousands of flagged starts would die in first).  The sort
-    lives INSIDE the aggregate so ``_sp`` is a real attribute — an
-    ``array_sort`` referenced from inside the transform lambda would be
-    re-inlined by project collapse and re-evaluated per element
-    (measured: 52 s vs 1.9 s at sf0.1 for the char leg).  ``spans``
-    (optional) accepts a precomputed/staged :func:`repeated_spans`
-    output so flag + cut pipelines pay the span build once (it must
-    have been built with the same ``unit``/``n``).
+    Shape: :func:`repeated_spans` (all-JVM) → per-doc SORTED span-start
+    array (one grouped ``array_sort(collect_set)`` — bounded by
+    tokens-per-doc, never by corpus size) → LEFT join back to the docs →
+    GAP reconstruction: because every span has the same fixed length
+    ``n``, the coverage of all starts ≤ p ends exactly at p+n, so the
+    kept text is the concatenation of the inter-span gaps
+    ``[sp[i]+n, sp[i+1])`` plus head/tail — one bulk cut per gap
+    (``substr`` for char, ``slice`` for word) instead of an ``exists``
+    over the span set per token (O(gaps) vs O(tokens·spans) per doc).
+    The sort lives INSIDE the aggregate so ``_sp`` is a real attribute —
+    an ``array_sort`` referenced from inside the transform lambda would
+    be re-inlined by project collapse and re-evaluated per element
+    (measured: 52 s vs 1.9 s at sf0.1 for the char leg).
 
     ``unit="char"`` cuts character spans from the RAW text (no
     whitespace re-normalization — untouched bytes survive verbatim),
     matching the char flagging mode."""
-    if unit not in ("word", "char"):
-        raise ValueError(f"unit must be 'word' or 'char', got {unit!r}")
-    flagged = (
-        spans
-        if spans is not None
-        else repeated_spans(
-            docs, n=n, min_docs=min_docs, id_col=id_col, text_col=text_col,
-            max_df=max_df, observation=observation, unit=unit,
-        )
+    flagged = repeated_spans(
+        docs, n=n, min_docs=min_docs, id_col=id_col, text_col=text_col, unit=unit
     )
     pos_tbl = flagged.groupBy(id_col).agg(
         F.array_sort(F.collect_set("pos")).alias("_sp")
@@ -752,42 +717,36 @@ def remove_repeated_spans(
         # projection boundary, so the lambdas see a real attribute
         toks_expr = F.filter(F.split(F.trim(txt), r"\s+"), lambda x: x != "")
         docs = docs.select(F.col(id_col), toks_expr.alias("_toks"))
-    if unit == "char":
-        total = F.length(txt)
-
-        def _piece(i):
-            head = txt.substr(F.lit(1), F.element_at(sp, 1))
-            tail = txt.substr(
-                F.element_at(sp, k) + n + 1,
-                F.greatest(total - (F.element_at(sp, k) + n), F.lit(0)),
-            )
-            gap_start = F.element_at(sp, i) + n
-            gap_len = F.element_at(sp, i + 1) - gap_start
-            mid = txt.substr(gap_start + 1, F.greatest(gap_len, F.lit(0)))
-            return F.when(i == 0, head).when(i == k, tail).otherwise(mid)
-
-        scrubbed = F.when(sp.isNull() | (k == 0), txt).otherwise(
-            F.array_join(F.transform(F.sequence(F.lit(0), k), _piece), "")
-        )
-    else:
         toks = F.col("_toks")
-        total = F.size(toks)
+        total, whole = F.size(toks), F.array_join(toks, " ")
 
-        def _piece(i):
-            head = F.slice(toks, 1, F.element_at(sp, 1))
-            tail = F.slice(
-                toks,
-                F.element_at(sp, k) + n + 1,
-                F.greatest(total - (F.element_at(sp, k) + n), F.lit(0)),
-            )
-            gap_start = F.element_at(sp, i) + n
-            gap_len = F.element_at(sp, i + 1) - gap_start
-            mid = F.slice(toks, gap_start + 1, F.greatest(gap_len, F.lit(0)))
-            return F.when(i == 0, head).when(i == k, tail).otherwise(mid)
+        def cut(start, length):
+            return F.slice(toks, start, length)
 
-        scrubbed = F.when(sp.isNull() | (k == 0), F.array_join(toks, " ")).otherwise(
-            F.array_join(F.flatten(F.transform(F.sequence(F.lit(0), k), _piece)), " ")
-        )
+        def join(pieces):
+            return F.array_join(F.flatten(pieces), " ")
+
+    else:
+        total, whole = F.length(txt), txt
+
+        def cut(start, length):
+            return txt.substr(start, length)
+
+        def join(pieces):
+            return F.array_join(pieces, "")
+
+    def _piece(i):
+        last_end = F.element_at(sp, k) + n
+        head = cut(F.lit(1), F.element_at(sp, 1))
+        tail = cut(last_end + 1, F.greatest(total - last_end, F.lit(0)))
+        gap_start = F.element_at(sp, i) + n
+        gap_len = F.element_at(sp, i + 1) - gap_start
+        mid = cut(gap_start + 1, F.greatest(gap_len, F.lit(0)))
+        return F.when(i == 0, head).when(i == k, tail).otherwise(mid)
+
+    scrubbed = F.when(sp.isNull() | (k == 0), whole).otherwise(
+        join(F.transform(F.sequence(F.lit(0), k), _piece))
+    )
     return (
         docs.join(pos_tbl, id_col, "left")
         .select(
@@ -823,18 +782,16 @@ def dedup_paragraphs(
     lowercase) follows CCNet's paragraph-hash preprocessing.
     Whitespace-only paragraphs are NEVER flagged (cutting every blank
     line would reflow the whole corpus), and ``min_docs`` counts
-    distinct documents, so within-document repeats survive — that is
+    distinct non-NULL ids, so within-document repeats survive — that is
     :func:`remove_repeated_spans`'s job.
 
-    Plan shape at 10^12 docs: split → posexplode (one row per
-    paragraph) → ONE grouped count on the paragraph key (map-side
-    partial agg collapses the repeats) → a left join of the flagged-key
-    set back to the paragraph rows → one groupBy(id) reassembly
+    Plan shape: split → posexplode (one row per paragraph) → per-key
+    doc-frequency (:func:`_with_doc_freq`: a rank window on the
+    paragraph key, one exchange) → one groupBy(id) reassembly
     (``collect_list`` is bounded by paragraphs-per-doc, never corpus
-    size).  All JVM, no driver state.  A boilerplate paragraph repeated
-    across millions of docs is naturally spread over the paragraph-row
-    side of the join, so the hot key fans out across tasks instead of
-    concentrating."""
+    size).  All JVM, no driver state; the explode has one consumer.  A
+    boilerplate paragraph in millions of docs is one sorted window group
+    with O(1) state per row, never an in-memory set of its doc ids."""
     # split() takes a regex — quote the separator with java.util.regex
     # Pattern.quote's exact recipe (an embedded \E must close, re-emit
     # itself literally, and reopen the quote region)
@@ -848,22 +805,11 @@ def dedup_paragraphs(
     )
     key = F.lower(F.trim(F.col("_para"))) if normalize else F.col("_para")
     paras = paras.withColumn("_k", key)
-    # r7: the doc-frequency is a collect_set WINDOW over the paragraph
-    # key instead of a count_distinct aggregate + join-back — the explode
-    # then has ONE consumer (it used to run twice: once under the
-    # frequency branch, once under the reassembly) and the plan drops
-    # from three exchanges to two.  Whitespace-only paragraphs are NEVER
-    # flagged: they are excluded from the distinct-doc count (the `when`
-    # feeds collect_set nulls, which it ignores) and `_dup` is gated on
-    # the row's own paragraph being non-blank, exactly the old WHERE.
-    w_k = Window.partitionBy("_k")
-    nd = F.size(
-        F.collect_set(
-            F.when(F.trim(F.col("_para")) != "", F.col(id_col))
-        ).over(w_k)
-    )
-    paras = paras.withColumn(
-        "_dup", (F.trim(F.col("_para")) != "") & (nd >= min_docs)
+    # blank-ness is a function of `_k`, so every row of a blank key is
+    # blank: the `_dup` gate alone keeps blank paragraphs unflagged and
+    # the doc-frequency needs no blank filter of its own
+    paras = _with_doc_freq(paras, "_k", id_col).withColumn(
+        "_dup", (F.trim(F.col("_para")) != "") & (F.col("n_docs") >= min_docs)
     )
     joined = F.array_join(
         F.transform(

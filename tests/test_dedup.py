@@ -1,6 +1,9 @@
 """Dedup operators: exact, MinHash-LSH (incl. giant-bucket cap and
 modular-arithmetic honesty), SimHash, n-gram Jaccard verification."""
 
+from collections import Counter, defaultdict
+from contextlib import contextmanager
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -406,10 +409,67 @@ def test_release_stage_caches_unpersists(spark, docs):
     assert release_stage_caches() == 0  # registry drained
 
 
+# ---- hot key: one shared key in most docs, NULL ids, blank paragraphs ----
+
+_HOT = "standard legal disclaimer text block"  # 36 chars, one word 5-gram
+
+
+def _hot_key_rows(n_docs: int = 2000) -> list:
+    """60% of the docs carry the same boilerplate paragraph, every fourth
+    doc a blank one, and every 50th doc a NULL id (no document).  Docs
+    2k and 2k+1 share their first paragraph, so the partner of a NULL id
+    shares it with no other document."""
+    rows = []
+    for i in range(n_docs):
+        paras = [f"body of doc {i - i % 2} here"]
+        if i % 5 < 3:
+            paras.append(_HOT)
+        if i % 4 == 0:
+            paras.append("   ")
+        rows.append((None if i % 50 == 0 else i, "\n".join(paras)))
+    return rows
+
+
+@contextmanager
+def _window_buffer_spills(spark):
+    """Window row buffers leave memory after 16 rows and spill to disk
+    every 64, so a hot key's window group goes through the spill path."""
+    confs = {
+        "spark.sql.windowExec.buffer.in.memory.threshold": "16",
+        "spark.sql.windowExec.buffer.spill.threshold": "64",
+    }
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k in confs:
+            spark.conf.unset(k)
+
+
+def _ref_repeated_spans(rows, n: int, unit: str, min_docs: int = 2) -> Counter:
+    """Python oracle for repeated_spans: (id, pos, gram, n_docs) per
+    flagged span, with NULL ids counted as no document."""
+    spans = []
+    for d, t in rows:
+        toks = t.lower().split() if unit == "word" else t
+        for i in range(len(toks) - n + 1):
+            gram = " ".join(toks[i : i + n]) if unit == "word" else t[i : i + n]
+            spans.append((d, i, gram))
+    docs_of = defaultdict(set)
+    for d, _, gram in spans:
+        docs_of[gram].add(d)
+    n_docs = {gram: len(ids - {None}) for gram, ids in docs_of.items()}
+    return Counter(
+        (d, i, gram, n_docs[gram]) for d, i, gram in spans if n_docs[gram] >= min_docs
+    )
+
+
 def test_repeated_spans_flags_shared_boilerplate(spark):
     """Two docs share an exact 5-gram footer; a third is clean.  The span
     table must flag the footer at its position in BOTH docs and nothing
-    in the clean doc."""
+    in the clean doc.  A footer in 60% of 2,000 docs, with NULL ids mixed
+    in, gives the Python oracle's rows while its window group spills."""
     from localmod_spark.operators.dedup import repeated_spans
 
     footer = "generated by the acme pipeline"
@@ -430,48 +490,35 @@ def test_repeated_spans_flags_shared_boilerplate(spark):
     # position = 0-based token offset of the span start
     assert by_doc[0][0].pos == 5 and by_doc[1][0].pos == 4
 
-
-def test_repeated_spans_max_df_cap_is_observable(spark):
-    """Grams over the doc-frequency cap are excluded from the output AND
-    counted — never silently truncated."""
-    from pyspark.sql import Observation
-
-    from localmod_spark.operators.dedup import repeated_spans
-
-    ubiquitous = "standard legal disclaimer text block"
-    rows = [(i, f"doc {i} body content " + ubiquitous) for i in range(10)]
-    rows += [(100, "pairwise shared sentence fragment here doc a"),
-             (101, "pairwise shared sentence fragment here doc b")]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    obs = Observation("span_cap")
-    got = repeated_spans(df, n=5, min_docs=2, max_df=5, observation=obs).collect()
-    grams = {r.gram for r in got}
-    assert ubiquitous not in grams  # df=10 > cap
-    assert "pairwise shared sentence fragment here" in grams  # df=2 kept
-    m = obs.get
-    assert m["dropped_grams"] >= 1 and m["max_gram_df"] == 10
+    hot_rows = _hot_key_rows()
+    hot = spark.createDataFrame(hot_rows, "doc_id long, text string").repartition(4)
+    with _window_buffer_spills(spark):
+        for unit, n in (("word", 5), ("char", 30)):
+            got = Counter(tuple(r) for r in repeated_spans(hot, n=n, unit=unit).collect())
+            want = _ref_repeated_spans(hot_rows, n, unit)
+            assert got == want, unit
+    assert max(n_docs for *_, n_docs in want) == 1160  # 1,200 carriers, 40 NULL ids
 
 
-def test_repeated_spans_window_path_equals_aggregate_path(spark):
-    """r7 internals guard: the default (windowed doc-frequency) plan and
-    the observation-retaining aggregate+join plan are the same operator —
-    identical rows on real data, for both units."""
-    from pyspark.sql import Observation
+def test_repeated_spans_equals_duckdb_oracle(spark):
+    """repeated_spans equals its DuckDB oracle in ``__spark_entry__`` on
+    real data for both units: the same (unit, id, pos, gram, n_docs) rows."""
+    import duckdb
 
+    import __spark_entry__ as em
     from localmod_spark.operators.dedup import repeated_spans
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    got = Counter()
     for unit, n in (("word", 5), ("char", 30)):
-        windowed = {
-            tuple(r) for r in repeated_spans(docs, n=n, min_docs=2, unit=unit).collect()
-        }
-        agg = {
-            tuple(r)
-            for r in repeated_spans(
-                docs, n=n, min_docs=2, unit=unit, observation=Observation()
-            ).collect()
-        }
-        assert windowed == agg and windowed, unit
+        got.update(
+            (unit, *r) for r in repeated_spans(docs, n=n, min_docs=2, unit=unit).collect()
+        )
+    con = duckdb.connect()
+    con.register("documents", docs.toArrow())
+    want = Counter(con.execute(em.oracle_sql()["repeated_spans"]).fetchall())
+    assert got == want
+    assert {u for u, *_ in got} == {"word", "char"}
 
 
 def test_span_scrub_cuts_boilerplate_and_converges(spark):
@@ -643,9 +690,31 @@ def test_dedup_paragraphs_cuts_cross_doc_boilerplate(spark):
     assert out[2].n_flagged_spans == 0
 
 
+def _ref_dedup_paragraphs(rows, sep: str, min_docs: int = 2) -> dict:
+    """Python oracle for dedup_paragraphs on non-NULL texts: id →
+    (scrubbed_text, n_flagged_spans), NULL ids grouped under None and
+    counted as no document, survivors in (pos, paragraph) order."""
+    docs_of = defaultdict(set)
+    for d, t in rows:
+        for p in t.split(sep):
+            docs_of[p.strip(" ").lower()].add(d)
+    kept, flagged = defaultdict(list), Counter()
+    for d, t in rows:
+        flagged[d] += 0
+        for pos, p in enumerate(t.split(sep)):
+            if p.strip(" ") and len(docs_of[p.strip(" ").lower()] - {None}) >= min_docs:
+                flagged[d] += 1
+            else:
+                kept[d].append((pos, p))
+    return {d: (sep.join(p for _, p in sorted(kept[d])), flagged[d]) for d in flagged}
+
+
 def test_dedup_paragraphs_blank_and_within_doc_repeats_survive(spark):
     """Blank paragraphs are never flagged (no corpus-wide reflow) and
-    min_docs counts DISTINCT docs, so a within-doc repeat survives."""
+    min_docs counts DISTINCT docs, so a within-doc repeat survives.  A
+    paragraph in 60% of 2,000 docs, with blank paragraphs and NULL ids
+    mixed in, gives the Python oracle's rows while its window group
+    spills."""
     from localmod_spark.operators.dedup import dedup_paragraphs
 
     docs = spark.createDataFrame(
@@ -659,6 +728,17 @@ def test_dedup_paragraphs_blank_and_within_doc_repeats_survive(spark):
     assert out[0].scrubbed_text == "alpha\n\nalpha\n\nbeta"
     assert out[0].n_flagged_spans == 0
     assert out[1].scrubbed_text == "gamma\n\ndelta"
+
+    hot_rows = _hot_key_rows()
+    hot = spark.createDataFrame(hot_rows, "doc_id long, text string").repartition(4)
+    with _window_buffer_spills(spark):
+        got = {
+            r.doc_id: (r.scrubbed_text, r.n_flagged_spans)
+            for r in dedup_paragraphs(hot, sep="\n", min_docs=2).collect()
+        }
+    assert got == _ref_dedup_paragraphs(hot_rows, "\n")
+    # every hot instance, and both bodies of the 960 pairs without a NULL id
+    assert sum(n for _, n in got.values()) == 1200 + 2 * 960
 
 
 def test_dedup_paragraphs_regex_safe_separator_and_shape(spark):

@@ -181,6 +181,30 @@ def test_decontaminate_broadcasts_eval_side(spark, docs):
     assert "BroadcastHashJoin" in plan or "BroadcastExchange" in plan, plan
 
 
+def test_doc_frequency_is_one_rank_window_on_the_key(spark, docs):
+    """repeated_spans (both units) and dedup_paragraphs count a key's
+    documents with a rank window: no per-key id set (collect_set), and
+    exactly one hash exchange on the key, feeding the window's sort."""
+    import re
+
+    from localmod_spark.operators.dedup import dedup_paragraphs, repeated_spans
+
+    cases = (
+        (repeated_spans(docs, n=5), "gram"),
+        (repeated_spans(docs, n=30, unit="char"), "gram"),
+        (dedup_paragraphs(docs, sep=" "), "_k"),
+    )
+    for df, key in cases:
+        plan = plan_of(df)
+        assert "collect_set" not in plan, plan
+        assert len(re.findall(rf"Exchange hashpartitioning\({key}#", plan)) == 1, plan
+        window_on_exchange = (
+            rf"Window \[dense_rank\(.*\n\s*\+- Sort \[{key}#\d+ ASC NULLS FIRST, [^\n]*\n"
+            rf"\s*\+- Exchange hashpartitioning\({key}#"
+        )
+        assert re.search(window_on_exchange, plan), plan
+
+
 def test_simhash_bucket_cap_prunes_before_join(spark):
     """SimHash banding with the cap on: same LeftSemi prune as MinHash,
     and the sketch UDF feeds a persisted relation."""
