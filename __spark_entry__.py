@@ -2494,7 +2494,12 @@ def _quality_sql() -> str:
     recomputed over the UTF-8 BYTES of the lowercased text (via
     hex(encode(...)) → per-byte table lookups), exactly the kernel's
     vectorized semantics including the multi-byte-char-as-OTHER rule, so
-    the oracle holds on any input, not just ASCII fixtures."""
+    the oracle holds on any input, not just ASCII fixtures.  The score
+    rounds as the kernel's Python ``round(x, 6)`` does, by the double's
+    exact value with exact ties to even: ``printf('%.6f')`` rounds so,
+    DuckDB's ``round`` (half away from zero) and ``round_even`` (ties of
+    ``x * 1e6``) do not.  0.9765625 is a true tie (0.976562), and the
+    double nearest 1 - 0.3/64 lies just above 0.9953125 (0.995313)."""
     from localmod_spark.kernel.quality import _BYTE_TO_SYM, _LOGPROB_FLAT
 
     lp = "[" + ", ".join(repr(float(v)) for v in _LOGPROB_FLAT) + "]"
@@ -2539,13 +2544,13 @@ def _quality_sql() -> str:
         SELECT doc_id,
                round(ppl, 4) AS perplexity,
                CASE WHEN n = 0 THEN 1.0
-                    ELSE greatest(0.0, round(1.0 - (
+                    ELSE greatest(0.0, CAST(printf('%.6f', 1.0 - (
                           least(greatest(ppl - 18.0, 0.0) / 10.0, 0.4)
                         + least(dup * 0.3, 0.3)
                         + least(greatest(mwl - 12.0, 0.0) / 30.0, 0.2)
                         + CASE WHEN n >= 20
                                THEN least(greatest(0.05 - alpha, 0.0) * 4.0, 0.1)
-                               ELSE 0.0 END), 6)) END AS quality_score,
+                               ELSE 0.0 END)) AS DOUBLE)) END AS quality_score,
                CASE WHEN n = 0 THEN FALSE
                     WHEN mwl > 30.0 THEN TRUE
                     WHEN n >= 20 AND alpha < 0.05 THEN TRUE
@@ -3091,9 +3096,10 @@ def oracle_sql() -> dict[str, str]:
                    CASE kind_ix WHEN 0 THEN 'image' WHEN 1 THEN 'audio' ELSE 'video' END AS kind,
                    CAST(2048 AS BIGINT) AS n_bytes,
                    round(CAST(list_sum(bytes16) AS DOUBLE) / 16.0, 6) AS byte_mean,
-                   round(-list_sum(list_transform(list_distinct(bytes16),
+                   -- printf rounds as the kernel's Python round(x, 6) does
+                   CAST(printf('%.6f', -list_sum(list_transform(list_distinct(bytes16),
                          v -> (len(list_filter(bytes16, x -> x = v)) / 16.0)
-                              * log2(len(list_filter(bytes16, x -> x = v)) / 16.0))), 6)
+                              * log2(len(list_filter(bytes16, x -> x = v)) / 16.0)))) AS DOUBLE)
                        AS byte_entropy,
                    CAST(CASE WHEN kind_ix = 2
                              THEN greatest((h % 60000 + 1000) // 5000, 1)

@@ -25,7 +25,7 @@ from __future__ import annotations
 import math
 import string
 from collections import Counter
-from typing import NamedTuple, Optional
+from typing import NamedTuple
 
 # ~1.5 kB of ordinary English prose (written for this module) used purely
 # as bigram-statistics seed material.
@@ -76,8 +76,7 @@ def bigram_counts(text: str) -> np.ndarray:
 
 def logprob_table(counts: np.ndarray) -> np.ndarray:
     """Add-one-smoothed row-normalized log-probability table from raw
-    transition counts — shared by the static seed table and the
-    corpus-trained one (operators/textstats.train_char_bigram_lm)."""
+    transition counts (the static seed-corpus LM's)."""
     sm = counts + 1.0  # add-one smoothing
     return np.log(sm / sm.sum(axis=1, keepdims=True))
 
@@ -112,8 +111,7 @@ def kn_logprob_table(tri_counts: np.ndarray, discount: float = 0.75) -> np.ndarr
     CONTINUATION-count bigram distribution, then to a discounted unigram
     continuation distribution interpolated with uniform.  The alphabet is
     tiny (28), so the fully smoothed model materializes as a dense
-    (28², 28) log-probability table — scoring stays a single gather+sum
-    per text, identical shape to the bigram scorer.
+    (28², 28) log-probability table.
 
     Every context row sums to probability 1 (tested); contexts never
     observed fall back entirely to the lower order.
@@ -159,32 +157,16 @@ def kn_logprob_table(tri_counts: np.ndarray, discount: float = 0.75) -> np.ndarr
     return np.log(p_tri)
 
 
-def char_perplexity_trigram(text: str, logprob_flat: np.ndarray) -> float:
-    """Perplexity under a trained KN trigram table (flattened (28², 28)
-    from :func:`kn_logprob_table`); 0.0 below two transitions.  Same
-    byte-level symbolization as the bigram scorer."""
-    syms = _sym_indices(text)
-    if len(syms) < 3:
-        return 0.0
-    ctx = syms[:-2] * _N_SYMBOLS + syms[1:-1]
-    total = logprob_flat[ctx * _N_SYMBOLS + syms[2:]].sum()
-    return math.exp(-total / (len(syms) - 2))
-
-
-def char_perplexity(text: str, logprob_flat: Optional[np.ndarray] = None) -> float:
+def char_perplexity(text: str) -> float:
     """Bigram perplexity over UTF-8 bytes of the lowercased text; 0.0 for
     texts shorter than one transition.  Deterministic; higher = less
     English-like.  (Bytes, not code points: each byte of a multi-byte
     char counts as an OTHER transition — a vectorizable simplification
-    that only affects non-ASCII text, which scores as OTHER either way.)
-
-    ``logprob_flat`` swaps in a corpus-trained table (flattened 28×28,
-    from :func:`logprob_table`); default = the static seed-corpus LM."""
-    table = _LOGPROB_FLAT if logprob_flat is None else logprob_flat
+    that only affects non-ASCII text, which scores as OTHER either way.)"""
     syms = _sym_indices(text)
     if len(syms) < 2:
         return 0.0
-    total = table[syms[:-1] * _N_SYMBOLS + syms[1:]].sum()
+    total = _LOGPROB_FLAT[syms[:-1] * _N_SYMBOLS + syms[1:]].sum()
     return math.exp(-total / (len(syms) - 1))
 
 

@@ -39,7 +39,6 @@ are already text).
 
 from __future__ import annotations
 
-import os
 import re
 from collections import Counter
 from typing import Dict, List, Optional, Sequence, Tuple
@@ -210,40 +209,16 @@ def with_bpe_tokens(
 
 
 # ---------------------------------------------------------------------------
-# tokenizer artifact persistence
+# canonical merges serialization
 # ---------------------------------------------------------------------------
 
 
 def merges_json(merges: Sequence[Merge]) -> str:
-    """THE canonical serialization of a merges table — one definition so
-    the artifact file (:func:`save_merges`) and the export plan's
-    invalidation digest (``plans/export.py``) hash literally the same
-    bytes."""
+    """THE canonical serialization of a merges table: the bytes the export
+    plan's invalidation digest (``plans/export.py``) hashes."""
     import json
 
     return json.dumps([list(m) for m in merges])
-
-
-def save_merges(merges: Sequence[Merge], path: str) -> None:
-    """Persist the merges table as canonical single-line JSON — the
-    tokenizer IS a model artifact: the job that trains it and the jobs
-    that encode with it (budgeting, packing, export) are usually
-    different runs, so the vocabulary must round-trip exactly.  Plain
-    JSON (not pickle): human-diffable, engine/version-independent, byte-
-    identical to what ``plans/export.py`` digests (:func:`merges_json`).
-
-    Durable write: fsync the bytes, then an atomic same-dir replace with
-    a writer-unique temp name — a crash leaves either the old artifact
-    or the complete new one, never a torn file, and concurrent savers
-    cannot interleave into one temp file."""
-    import uuid
-
-    tmp = f"{path}.{uuid.uuid4().hex}.tmp"
-    with open(tmp, "w", encoding="utf-8") as f:
-        f.write(merges_json(merges))
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp, path)
 
 
 # ---------------------------------------------------------------------------

@@ -190,60 +190,3 @@ def extract_media_features(
     # small Arrow batches: payloads are MBs at production scale
     slim = slim.repartition(max(media.sparkSession.sparkContext.defaultParallelism, 8))
     return slim.mapInPandas(_extract, schema=FEATURE_SCHEMA)
-
-
-# ---------------------------------------------------- S4: input dispatch ----
-
-
-def load_image_bytes(image_input, fetch_url=None) -> bytes:
-    """Byte-level port of the reference's image input dispatch
-    (``ImageNSFWClassifier._load_image``,
-    `src/localmod/classifiers/nsfw_image.py:79-108`), stopping at raw
-    bytes: the PIL decode itself stays behind the decode slot (PIL is not
-    in this container), but every input KIND the reference accepts is
-    discriminated here in the same order —
-
-      * PIL-like object (has ``convert`` + ``mode``): rejected with a
-        clear error — a decoded in-memory image belongs to the decode
-        slot, not a byte pipeline (the reference passes it through
-        because it IS the decoded form);
-      * ``str``/``Path`` starting http(s)://  → fetched via the injected
-        ``fetch_url`` callable (reference: ``requests.get(timeout=10)``);
-        no network in this sandbox, so the default raises loudly;
-      * ``data:...;base64,`` URL → decoded payload bytes (extension for
-        table columns, where images commonly arrive base64-inline);
-      * other ``str``/``Path`` → local file bytes;
-      * ``bytes``/``bytearray`` → as-is;
-      * file-like (has ``read``) → ``read()``;
-      * anything else → ``ValueError`` (`nsfw_image.py:108`).
-    """
-    import base64
-    from pathlib import Path
-
-    if hasattr(image_input, "convert") and hasattr(image_input, "mode"):
-        raise TypeError(
-            "decoded PIL images are driver-side objects; pass path/URL/bytes "
-            "into the Spark pipeline and decode inside the codec slot"
-        )
-    if isinstance(image_input, (str, Path)):
-        path = str(image_input)
-        if path.startswith(("http://", "https://")):
-            if fetch_url is None:
-                raise NotImplementedError(
-                    "URL inputs need a fetch_url callable (reference uses "
-                    "requests.get with timeout=10, nsfw_image.py:90-96); "
-                    "no network access in this sandbox"
-                )
-            return fetch_url(path)
-        if path.startswith("data:"):
-            header, _, payload = path.partition(",")
-            if not header.endswith(";base64"):
-                raise ValueError(f"unsupported data URL encoding: {header}")
-            return base64.b64decode(payload)
-        with open(path, "rb") as f:
-            return f.read()
-    if isinstance(image_input, (bytes, bytearray)):
-        return bytes(image_input)
-    if hasattr(image_input, "read"):
-        return image_input.read()
-    raise ValueError(f"Unsupported image input type: {type(image_input)}")

@@ -80,7 +80,8 @@ def doc_text_features(documents: DataFrame, keep_cols: tuple = ()) -> DataFrame:
 
 
 def _ngram_count_rows(documents: DataFrame, text_col: str, count_fn, shape) -> DataFrame:
-    """Shared reduce shape for the distributed LM trainers.
+    """Corpus n-gram counts (``count_fn`` per text, ``shape`` cells) as
+    ``(pos, val)`` rows of the flattened count tensor.
 
     Map side: one flat count array per Arrow batch (mapInPandas —
     thousands of texts collapse to one row before anything shuffles).
@@ -93,7 +94,7 @@ def _ngram_count_rows(documents: DataFrame, text_col: str, count_fn, shape) -> D
     one count-array row per Arrow batch, which at 100 TB is millions of
     rows × up to 170 KB funneled into the driver — an OOM by design.
     Counts are additive integers, so the distributed sum stays bit-exact
-    vs a single-machine train (tested)."""
+    vs a single-machine count."""
     from typing import Iterator
 
     import numpy as np
@@ -117,57 +118,6 @@ def _ngram_count_rows(documents: DataFrame, text_col: str, count_fn, shape) -> D
         .groupBy("pos")
         .agg(F.sum("val").alias("val"))
     )
-
-
-def _reduce_ngram_counts(documents: DataFrame, text_col: str, count_fn, shape):
-    import numpy as np
-
-    size = 1
-    for s in shape:
-        size *= s
-    total = np.zeros(size)
-    for r in _ngram_count_rows(documents, text_col, count_fn, shape).collect():
-        total[r.pos] = float(r.val)
-    return total.reshape(shape)
-
-
-def train_char_bigram_lm(documents: DataFrame, text_col: str = "text"):
-    """Fit the quality scorer's character-bigram LM on the corpus itself,
-    distributed (the KenLM-style step done Spark-first).
-
-    One narrow pass: per-Arrow-batch 28×28 count matrices, reduced
-    DISTRIBUTED via posexplode → groupBy(pos).sum (``_ngram_count_rows``
-    — the driver sees ≤ 784 rows at any corpus size), then add-one
-    smoothing + row-normalization via
-    :func:`localmod_spark.kernel.quality.logprob_table`.
-
-    Returns the (28, 28) log-probability ndarray — a model parameter.
-    Plug it into ``char_perplexity(text, logprob_flat=table.reshape(-1))``
-    or any scorer that accepts a custom table.  Train on the full corpus
-    or a sample — identical plan shape.
-    """
-    from localmod_spark.kernel.quality import _N_SYMBOLS, bigram_counts, logprob_table
-
-    total = _reduce_ngram_counts(documents, text_col, bigram_counts, (_N_SYMBOLS, _N_SYMBOLS))
-    return logprob_table(total)
-
-
-def train_char_kn_trigram_lm(documents: DataFrame, text_col: str = "text", discount: float = 0.75):
-    """Fit a KenLM-style interpolated Kneser-Ney character-TRIGRAM LM on
-    the corpus, distributed — same one-narrow-pass +
-    distributed-second-level-reduce shape as the bigram trainer (the
-    driver sees ≤ 28³ = 21,952 rows at any corpus size), then KN
-    smoothing (:func:`kernel.quality.kn_logprob_table`) on the summed
-    counts.  Returns the dense (28², 28) log-probability table; score
-    with ``char_perplexity_trigram(text, table.reshape(-1))``.  Counts
-    are additive, so the distributed sum equals a single-machine train
-    bit for bit (tested)."""
-    from localmod_spark.kernel.quality import _N_SYMBOLS, kn_logprob_table, trigram_counts
-
-    total = _reduce_ngram_counts(
-        documents, text_col, trigram_counts, (_N_SYMBOLS, _N_SYMBOLS, _N_SYMBOLS)
-    )
-    return kn_logprob_table(total, discount=discount)
 
 
 def ccnet_buckets(

@@ -113,8 +113,8 @@ def run_export(
         # before it would ride two exchanges and two parquet writes
         docs = with_bpe_tokens(docs, bpe_merges, text_col=text_col).drop("bpe_tokens")
         token_col = "n_bpe_tokens"
-        # merges_json is the same bytes save_merges writes — digesting
-        # the in-memory table and digesting the artifact file agree
+        # the digest of merges_json's canonical bytes: equal tables,
+        # equal key
         merges_key = hashlib.md5(merges_json(bpe_merges).encode()).hexdigest()[:16]
         token_source = f"bpe:{merges_key}"
     else:

@@ -11,6 +11,16 @@ Tuned for the moderation pipeline's shape: a scan → narrow pandas-UDF map
   * shuffle partitions sized for the local test harness; a real cluster
     run overrides via spark-submit conf (see plans/submit_job.py).
 
+On local masters the Python worker daemon is ``localmod_spark._worker_daemon``
+(``spark.python.daemon.module``), with the package's parent directory on
+the executors' ``PYTHONPATH`` so the JVM finds it from any cwd.  It runs
+Spark's own daemon, but from the installed pyspark's bytecode rather than
+``pyspark.zip``'s source when the two have one version: every new
+SparkContext's first Python job starts about 1 s sooner (4 vCPU).  Only local
+masters get it, since there the driver's interpreter, its pyspark and this
+package are the executors' own; a cluster's executors may have none of
+them, so they keep Spark's stock daemon.
+
 ``ship_package`` makes the package importable on executors.
 """
 
@@ -24,7 +34,10 @@ import tempfile
 from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
+from localmod_spark import _worker_daemon
+
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(
@@ -52,6 +65,11 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
     )
+    if master == "local" or master.startswith("local["):
+        builder = (
+            builder.config("spark.python.daemon.module", _worker_daemon.__name__)
+            .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
+        )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

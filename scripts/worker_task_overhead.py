@@ -11,7 +11,14 @@ inside the worker:
   ``taskList`` launch time) to the probe's first call;
 * ``invalidate_caches_ms_p50``: one ``importlib.invalidate_caches()`` call,
   the call PySpark's worker makes at the start of every task;
-* ``zip_importers``: the worker's zip importers, counted per archive.
+* ``zip_importers``: the worker's zip importers, counted per archive;
+* ``pyspark_origin``: the directory the workers imported pyspark from
+  (``.../pyspark.zip/pyspark`` when they compiled it from the zip's source).
+
+Then it stops the SparkContext, starts a new one and times its first probe
+job, the warm-up job above: ``cold_first_job_s`` is what a fresh context's
+first Python job pays to start the worker daemon and its workers (the JVM
+is already up).
 
 Prints one JSON line.
 """
@@ -22,6 +29,7 @@ import json
 import os
 import statistics
 import sys
+import time
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
@@ -38,6 +46,7 @@ def probe(batches):
     from collections import Counter
 
     import pandas as pd
+    import pyspark
     from pyspark import TaskContext
 
     import localmod_spark  # noqa: F401
@@ -57,6 +66,7 @@ def probe(batches):
         "first_call_ms": [first_call_ms],
         "invalidate_ms": [invalidate_ms],
         "importers": [json.dumps(dict(sorted(importers.items())))],
+        "pyspark": [os.path.dirname(pyspark.__file__)],
     })
 
 
@@ -72,11 +82,10 @@ def _launch_ms(sc) -> dict:
     }
 
 
-def main() -> int:
+def _session(cores: int):
     import __spark_entry__ as em
     from localmod_spark.session import get_spark
 
-    cores = len(os.sched_getaffinity(0))
     spark = get_spark(
         app_name="worker_task_overhead",
         master=f"local[{cores}]",
@@ -85,17 +94,30 @@ def main() -> int:
     )
     spark.sparkContext.setLogLevel("ERROR")
     em._ship_package(spark)
-    schema = "task long, first_call_ms double, invalidate_ms double, importers string"
+    return spark
 
-    def run(n_tasks: int):
-        df = spark.range(0, n_tasks * 8, numPartitions=n_tasks)
-        return df.mapInPandas(probe, schema).collect()
 
-    run(cores * 3)  # spawn the workers and let each import the package
-    rows = run(TASKS)
+def _run(spark, n_tasks: int):
+    schema = "task long, first_call_ms double, invalidate_ms double, importers string, pyspark string"
+    df = spark.range(0, n_tasks * 8, numPartitions=n_tasks)
+    return df.mapInPandas(probe, schema).collect()
+
+
+def main() -> int:
+    cores = len(os.sched_getaffinity(0))
+    spark = _session(cores)
+    _run(spark, cores * 3)  # spawn the workers and let each import the package
+    rows = _run(spark, TASKS)
     launch = _launch_ms(spark.sparkContext)
     first_call = [r.first_call_ms - launch[r.task] for r in rows]
     last = max(rows, key=lambda r: launch[r.task])
+    spark.stop()
+
+    spark = _session(cores)
+    t0 = time.perf_counter()
+    _run(spark, cores * 3)
+    cold_first_job_s = time.perf_counter() - t0
+    spark.stop()
     print(json.dumps({
         "cores": cores,
         "tasks": len(rows),
@@ -104,8 +126,9 @@ def main() -> int:
         "first_call_ms_p90": round(statistics.quantiles(first_call, n=10)[-1], 1),
         "invalidate_caches_ms_p50": round(statistics.median(r.invalidate_ms for r in rows), 2),
         "zip_importers": json.loads(last.importers),
+        "pyspark_origin": sorted({r.pyspark for r in rows}),
+        "cold_first_job_s": round(cold_first_job_s, 3),
     }))
-    spark.stop()
     return 0
 
 

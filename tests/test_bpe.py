@@ -214,15 +214,3 @@ def test_sequence_packing_driven_by_real_bpe_counts(spark, docs):
         assert r["n_bpe_tokens"] == len(encode_text(texts[r["doc_id"]], ranks))
     assert all(f <= budget for f in fills.values())
     assert len({k[1] for k in fills}) > 1  # non-vacuous: multiple packs
-
-
-def test_merges_artifact_bytes_equal_the_export_digest_input(tmp_path):
-    """save_merges writes EXACTLY the bytes plans/export.py digests for
-    its invalidation key — digesting the file and digesting the
-    in-memory table must never disagree."""
-    from localmod_spark.operators.bpe import merges_json, save_merges
-
-    path = str(tmp_path / "merges.json")
-    save_merges(PINNED_MERGES, path)
-    with open(path, "rb") as f:
-        assert f.read() == merges_json(PINNED_MERGES).encode()

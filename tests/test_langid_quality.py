@@ -73,34 +73,6 @@ def test_quality_score_bounds():
         assert 0.0 <= quality_score(quality_stats(t)) <= 1.0
 
 
-def test_train_char_bigram_lm_matches_seed_table(spark):
-    """Training on exactly the seed corpus must reproduce the static
-    import-time table bit-for-bit (same counts → same smoothing/log)."""
-    import numpy as np
-
-    from localmod_spark.kernel.quality import _LOGPROB, _SEED_CORPUS
-    from localmod_spark.operators.textstats import train_char_bigram_lm
-
-    df = spark.createDataFrame([(0, _SEED_CORPUS)], "doc_id long, text string")
-    trained = train_char_bigram_lm(df)
-    assert np.array_equal(trained, _LOGPROB)
-
-
-def test_trained_lm_scores_its_own_domain_lower(spark):
-    """An LM trained on a digit-heavy corpus should assign digit-heavy
-    text lower perplexity than the English seed LM does — and vice versa."""
-    from localmod_spark.kernel.quality import char_perplexity
-    from localmod_spark.operators.textstats import train_char_bigram_lm
-
-    digit_rows = [(i, "404 500 301 2024 12 31 99 1000 42 7 365 86400 " * 3) for i in range(40)]
-    df = spark.createDataFrame(digit_rows, "doc_id long, text string")
-    digit_lm = train_char_bigram_lm(df).reshape(-1)
-    probe = "2024 12 31 86400 99"
-    assert char_perplexity(probe, logprob_flat=digit_lm) < char_perplexity(probe)
-    english = "the quick brown fox jumps over the lazy dog"
-    assert char_perplexity(english) < char_perplexity(english, logprob_flat=digit_lm)
-
-
 # ---------------------------------------------------------- KN trigram ----
 
 
@@ -115,66 +87,6 @@ def test_kn_table_rows_are_distributions():
     sums = np.exp(table).sum(axis=1)
     np.testing.assert_allclose(sums, 1.0, atol=1e-9)
     assert np.isfinite(table).all()  # nothing is ever zero-probability
-
-
-def test_kn_trigram_separates_english_from_noise():
-    import random
-
-    from localmod_spark.kernel.quality import (
-        _SEED_CORPUS,
-        char_perplexity_trigram,
-        kn_logprob_table,
-        trigram_counts,
-    )
-
-    flat = kn_logprob_table(trigram_counts(_SEED_CORPUS)).reshape(-1)
-    english = "the morning train was late but the meeting still went well"
-    rng = random.Random(3)
-    noise = "".join(rng.choice("abcdefghijklmnopqrstuvwxyz ") for _ in range(len(english)))
-    p_en = char_perplexity_trigram(english, flat)
-    p_noise = char_perplexity_trigram(noise, flat)
-    assert 0 < p_en < p_noise
-    # trigram context beats bigram on in-domain text
-    from localmod_spark.kernel.quality import char_perplexity
-
-    assert p_en < char_perplexity(english)
-
-
-def test_kn_trigram_short_text_and_determinism():
-    from localmod_spark.kernel.quality import (
-        _SEED_CORPUS,
-        char_perplexity_trigram,
-        kn_logprob_table,
-        trigram_counts,
-    )
-
-    flat = kn_logprob_table(trigram_counts(_SEED_CORPUS)).reshape(-1)
-    assert char_perplexity_trigram("ab", flat) == 0.0
-    a = char_perplexity_trigram("hello world", flat)
-    b = char_perplexity_trigram("hello world", flat)
-    assert a == b > 0
-
-
-def test_distributed_kn_train_equals_local(spark):
-    """Counts are additive: the Spark-trained table must equal a local
-    train on the same texts bit for bit, at any partitioning."""
-    import numpy as np
-
-    from localmod_spark.kernel.quality import kn_logprob_table, trigram_counts
-    from localmod_spark.operators.textstats import train_char_kn_trigram_lm
-
-    texts = [
-        "the quick brown fox jumps over the lazy dog",
-        "practice improves almost every skill from cooking to coding",
-        "questions deserve clear answers",
-        "",
-    ]
-    df = spark.createDataFrame([(t,) for t in texts], "text string").repartition(3)
-    spark_table = train_char_kn_trigram_lm(df)
-    local = np.zeros((28, 28, 28))
-    for t in texts:
-        local += trigram_counts(t)
-    np.testing.assert_array_equal(spark_table, kn_logprob_table(local))
 
 
 def test_lm_trainer_driver_reduce_is_bounded(spark):
@@ -221,3 +133,46 @@ def test_ccnet_buckets_terciles_and_monotonicity(spark):
     # the scale path (t-digest approx thresholds) agrees on comfortable data
     approx = ccnet_buckets(df, exact=False)
     assert sorted(map(tuple, approx.collect())) == sorted(map(tuple, rows))
+
+
+# 65 words with 64 bigrams, and no penalty but the duplicate-bigram one:
+# 5 repeated bigrams make it 0.3 * 5/64 = 0.0234375 exactly, a true tie
+# at 6 decimals; 1 repeat makes it 0.3/64, whose score lies a hair above
+# the tie 0.9953125
+_WORDS = (
+    "the quick brown fox jumps over lazy dog while sun sets behind hills and river "
+    "keeps moving toward sea people gather in town square to talk about harvest "
+    "weather news from distant places a good sentence carries its meaning with simple "
+    "words placed natural order readers understand text that flows way speech subjects "
+    "verbs objects arriving when expected every language has own rhythm"
+).split()
+TIE_TEXTS = {
+    " ".join(_WORDS[:59] + _WORDS[:6]): 0.976562,
+    " ".join(_WORDS[:63] + _WORDS[:2]): 0.995313,
+}
+
+
+def test_quality_score_on_rounding_ties_matches_the_oracle(spark):
+    """The kernel rounds its score with Python ``round(x, 6)``; the DuckDB
+    oracle gives the same value on an exact tie and next to one."""
+    import duckdb
+    import pandas as pd
+
+    import __spark_entry__ as em
+    from localmod_spark.functions import quality_udf
+
+    for text in TIE_TEXTS:
+        st = quality_stats(text)
+        assert st.n_tokens == 65 and st.perplexity < 18.0 and st.mean_word_len < 12.0
+    texts = list(TIE_TEXTS)
+    docs = pd.DataFrame({"doc_id": range(len(texts)), "text": texts})
+    got = [
+        r.q for r in spark.createDataFrame(docs).orderBy("doc_id")
+        .select(quality_udf("text").quality_score.alias("q")).collect()
+    ]
+    con = duckdb.connect()
+    con.register("documents", docs)
+    want = [r[0] for r in con.execute(
+        f"SELECT quality_score FROM ({em._quality_sql()}) ORDER BY doc_id"
+    ).fetchall()]
+    assert got == want == list(TIE_TEXTS.values())
