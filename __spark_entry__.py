@@ -1429,7 +1429,7 @@ def _q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     verified word-3-gram near-dup (j ≥ 0.9) in the corpus.  Only the new
     batch is sketched; corpus candidates come from a band equi-join
     against the corpus band table (the staged artifact an incremental
-    pipeline reuses, plans/selection.run_increment).  Oracle = all-pairs
+    pipeline reuses, plans/selection's ``bands/`` stage).  Oracle = all-pairs
     cross-set Jaccard in DuckDB (banding recall ≈ 1 at j=0.9, same
     argument as minhash_dedup)."""
     from localmod_spark.operators.dedup import (

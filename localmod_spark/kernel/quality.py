@@ -94,69 +94,6 @@ _LOGPROB_FLAT = _LOGPROB.reshape(-1)
 _NON_ALPHA_BYTES = bytes(b for b in range(256) if chr(b) not in string.ascii_letters)
 
 
-def trigram_counts(text: str) -> np.ndarray:
-    """Raw 28×28×28 transition counts of one text (context = previous two
-    symbols)."""
-    counts = np.zeros((_N_SYMBOLS, _N_SYMBOLS, _N_SYMBOLS))
-    syms = _sym_indices(text)
-    if len(syms) >= 3:
-        np.add.at(counts, (syms[:-2], syms[1:-1], syms[2:]), 1.0)
-    return counts
-
-
-def kn_logprob_table(tri_counts: np.ndarray, discount: float = 0.75) -> np.ndarray:
-    """Interpolated Kneser-Ney over the 28-symbol alphabet — the actual
-    KenLM smoothing (Heafield 2011; Chen & Goodman 1999 eq. 4.25), not
-    add-one: absolute discounting at the trigram level, backing off to a
-    CONTINUATION-count bigram distribution, then to a discounted unigram
-    continuation distribution interpolated with uniform.  The alphabet is
-    tiny (28), so the fully smoothed model materializes as a dense
-    (28², 28) log-probability table.
-
-    Every context row sums to probability 1 (tested); contexts never
-    observed fall back entirely to the lower order.
-    """
-    d = float(discount)
-    V = _N_SYMBOLS
-    tri = tri_counts.reshape(V * V, V)
-
-    # --- unigram continuation: in how many distinct (u,v) contexts does w
-    # follow?  Interpolated with uniform so nothing is ever zero.
-    cont_bi = (tri_counts > 0).sum(axis=0)  # cc(v, w) = #{u : c(uvw) > 0}
-    u1 = (cont_bi > 0).sum(axis=0).astype(np.float64)  # #{v : cc(vw) > 0}
-    n1 = u1.sum()
-    if n1 > 0:
-        t1 = float((u1 > 0).sum())
-        p_uni = (np.maximum(u1 - d, 0.0) + d * t1 / V) / n1
-        p_uni = p_uni / p_uni.sum()  # guard fp drift; exact sum-to-1
-    else:
-        p_uni = np.full(V, 1.0 / V)
-
-    # --- bigram continuation level: p_kn(w | v) from continuation counts
-    cc = cont_bi.astype(np.float64)  # (V, V): context v → w
-    n2 = cc.sum(axis=1, keepdims=True)
-    t2 = (cc > 0).sum(axis=1, keepdims=True).astype(np.float64)
-    with np.errstate(invalid="ignore", divide="ignore"):
-        p_bi = np.where(
-            n2 > 0,
-            (np.maximum(cc - d, 0.0) + d * t2 * p_uni[None, :]) / n2,
-            p_uni[None, :],
-        )
-
-    # --- trigram level: absolute discounting, interpolated with p_bi(w|v)
-    n3 = tri.sum(axis=1, keepdims=True)  # c(uv·)
-    t3 = (tri > 0).sum(axis=1, keepdims=True).astype(np.float64)  # distinct continuations
-    # context (u, v) backs off to the bigram row of v
-    backoff = np.repeat(p_bi[None, :, :], V, axis=0).reshape(V * V, V)
-    with np.errstate(invalid="ignore", divide="ignore"):
-        p_tri = np.where(
-            n3 > 0,
-            (np.maximum(tri - d, 0.0) + d * t3 * backoff) / n3,
-            backoff,
-        )
-    return np.log(p_tri)
-
-
 def char_perplexity(text: str) -> float:
     """Bigram perplexity over UTF-8 bytes of the lowercased text; 0.0 for
     texts shorter than one transition.  Deterministic; higher = less

@@ -75,10 +75,6 @@ def available_toxicity_checkpoints(model_dir: Optional[str] = None) -> Dict[str,
     return out
 
 
-def real_models_available(model_dir: Optional[str] = None) -> bool:
-    return _ml_libs() and bool(available_toxicity_checkpoints(model_dir))
-
-
 def _load(path: str):
     if path not in _LOADED:
         import torch

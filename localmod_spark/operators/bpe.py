@@ -11,14 +11,9 @@ same BPE vocabulary the downstream LM trains with.
 Design (Sennrich et al., "Neural Machine Translation of Rare Words with
 Subword Units", ACL 2016 — the standard public BPE):
 
-* **Training is a bounded driver reduce**, the same discipline as the
-  IVF k-means and LM trainers: ONE distributed pass builds the
-  word-frequency table (explode → groupBy — map-side combine collapses
-  each partition to its distinct words before the exchange), the driver
-  collects only the ``max_words`` most frequent distinct words (distinct
-  vocabulary grows sublinearly in corpus size; the cap + ``min_freq``
-  bound the collect at any scale), and the classic merge loop runs
-  driver-side over that dictionary.  No per-iteration corpus pass.
+* **The merges table is a pinned model parameter** (``PINNED_MERGES``,
+  trained once; see its provenance comment), like the seeded LSH
+  hyperplanes.
 
 * **Encoding is a broadcast-merges batched pandas UDF** (Arrow batches,
   never per-row Python): the merges list rides the closure (a few KB),
@@ -40,7 +35,6 @@ are already text).
 from __future__ import annotations
 
 import re
-from collections import Counter
 from typing import Dict, List, Optional, Sequence, Tuple
 
 import pandas as pd  # module-level: pandas_udf resolves pd.Series hints here
@@ -50,96 +44,14 @@ from pyspark.sql import functions as F
 # Pre-tokenization: letter runs, digit runs, single non-whitespace
 # punctuation.  The whitespace class is spelled out EXPLICITLY — a bare
 # `\s` diverges across the three engines that must agree (CPython `re`
-# matches Unicode spaces like NBSP; Java regex and RE2 default to ASCII),
-# so on scraped text the encode UDF, the Java-side word_frequencies scan
-# and the DuckDB oracle would pre-tokenize differently.  The literal
+# matches Unicode spaces like NBSP; RE2 defaults to ASCII), so on
+# scraped text the encode UDF and the DuckDB oracle would pre-tokenize
+# differently.  The literal
 # class means the same bytes everywhere.
 BPE_PRETOKEN_PATTERN = "[A-Za-z]+|[0-9]+|[^A-Za-z0-9 \t\n\r\f\v]"
 _PRETOKEN_RE = re.compile(BPE_PRETOKEN_PATTERN)
 
 Merge = Tuple[str, str]
-
-
-# ---------------------------------------------------------------------------
-# training
-# ---------------------------------------------------------------------------
-
-
-def word_frequencies(documents: DataFrame, text_col: str = "text") -> DataFrame:
-    """Distributed word-frequency table: the ONLY corpus-wide pass BPE
-    training needs.  Partial-aggregatable groupBy — each partition ships
-    one row per distinct word it saw, not one per occurrence."""
-    return (
-        documents.select(
-            F.explode(
-                F.regexp_extract_all(F.col(text_col), F.lit(BPE_PRETOKEN_PATTERN), F.lit(0))
-            ).alias("word")
-        )
-        .groupBy("word")
-        .agg(F.count(F.lit(1)).alias("freq"))
-    )
-
-
-def _merge_word(syms: Tuple[str, ...], pair: Merge) -> Tuple[str, ...]:
-    """Replace every non-overlapping occurrence of ``pair`` left to right."""
-    a, b = pair
-    out: List[str] = []
-    i = 0
-    while i < len(syms):
-        if i + 1 < len(syms) and syms[i] == a and syms[i + 1] == b:
-            out.append(a + b)
-            i += 2
-        else:
-            out.append(syms[i])
-            i += 1
-    return tuple(out)
-
-
-def merges_from_word_freqs(freqs: Dict[str, int], num_merges: int) -> List[Merge]:
-    """The Sennrich merge loop over a word-frequency dictionary (driver
-    side; cost is O(num_merges × distinct words), corpus size never
-    appears).  Ties break deterministically: highest count, then
-    lexicographically smallest pair — so distributed training is
-    reproducible run to run and partitioning-invariant (the counts it
-    consumes are additive integers)."""
-    vocab: Dict[str, Tuple[str, ...]] = {w: tuple(w) for w in freqs}
-    merges: List[Merge] = []
-    for _ in range(num_merges):
-        pair_counts: Counter = Counter()
-        for w, f in freqs.items():
-            syms = vocab[w]
-            for i in range(len(syms) - 1):
-                pair_counts[(syms[i], syms[i + 1])] += f
-        if not pair_counts:
-            break
-        best = min(pair_counts.items(), key=lambda kv: (-kv[1], kv[0]))[0]
-        merges.append(best)
-        vocab = {w: _merge_word(s, best) for w, s in vocab.items()}
-    return merges
-
-
-def train_bpe(
-    documents: DataFrame,
-    num_merges: int,
-    text_col: str = "text",
-    min_freq: int = 1,
-    max_words: int = 1_000_000,
-) -> List[Merge]:
-    """Distributed BPE training: one word-frequency pass, bounded collect,
-    driver merge loop.  ``min_freq``/``max_words`` bound the collect at
-    any corpus size (rare-word truncation perturbs pair counts by at most
-    ``min_freq × max rank window`` — the standard trade every large-scale
-    BPE trainer makes); the ``freq DESC, word`` ordering keeps the
-    truncation itself deterministic."""
-    wf = word_frequencies(documents, text_col=text_col)
-    if min_freq > 1:
-        wf = wf.where(F.col("freq") >= min_freq)
-    rows = (
-        wf.orderBy(F.col("freq").desc(), F.col("word"))
-        .limit(max_words)
-        .collect()
-    )
-    return merges_from_word_freqs({r["word"]: r["freq"] for r in rows}, num_merges)
 
 
 # ---------------------------------------------------------------------------
@@ -228,7 +140,8 @@ def merges_json(merges: Sequence[Merge]) -> str:
 # Trained with `train_bpe(documents@sf0.001, num_merges=24)` — pinned so the
 # `bpe_tokens` query and its DuckDB merge-replay oracle share one merges
 # literal across scale factors (a model parameter, like the seeded LSH
-# hyperplanes); tests/test_bpe.py asserts the trainer reproduces it.
+# hyperplanes).  The trainer and the test that reproduced this literal
+# were last in commit 98c8750 (`git show 98c8750:localmod_spark/operators/bpe.py`).
 PINNED_MERGES: List[Merge] = [
     ("e", "r"), ("o", "r"), ("i", "n"), ("o", "w"), ("s", "t"), ("l", "u"),
     ("a", "r"), ("p", "ar"), ("m", "er"), ("a", "t"), ("a", "n"), ("c", "an"),

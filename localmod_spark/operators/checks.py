@@ -1,22 +1,16 @@
-"""Data-quality verification with partition-mergeable state
-(Deequ-style; cf. Schelter et al., "Differential Data Quality
-Verification on Partitioned Data", ICDE 2019 — PAPERS.md).
+"""Data-quality verification: Deequ-style constraint checks, structural
+checks on conversations and distribution drift.
 
-A 10^12-turn ingest pipeline must verify each increment BEFORE
-committing it, and re-verify the whole corpus WITHOUT rescanning it.
-Both follow from one design rule: every quality metric is computed from
-an algebraically mergeable per-partition STATE (counts, null counts,
-sums, mins, maxes, predicate-pass counts) —
-
-  * per-wave gate: compute the state for the new wave only, check it;
-  * corpus roll-up: merge all waves' states (pure arithmetic, no scan);
-  * differential re-check after replacing one wave: merge (old corpus
-    state − old wave state + new wave state) — the paper's trick.
-
-Approximate-distinct is deliberately OUT of the mergeable state here
-(HLL sketches merge too, but are not exactly verifiable cross-engine);
+Every constraint is a conditional count, so :func:`check_suite` evaluates
+a whole suite in ONE aggregation pass.  Approximate-distinct is
+deliberately out (HLL sketches are not exactly verifiable cross-engine);
 `check_suite` offers exact `uniqueness` as a whole-relation check
 instead.
+
+Partition-mergeable quality state (cf. Schelter et al., "Differential
+Data Quality Verification on Partitioned Data", ICDE 2019 — PAPERS.md)
+is not kept here until a plan's ledger records it; the last version
+(``quality_state``/``merge_states``) is in commit 98c8750.
 """
 
 from __future__ import annotations
@@ -88,46 +82,6 @@ def check_suite(df: DataFrame, checks: List[Check], unique_col: Optional[str] = 
     )
 
 
-# ------------------------------------- mergeable per-partition state ----
-
-
-def quality_state(
-    df: DataFrame,
-    partition_col: str,
-    numeric_col: str,
-    checks: List[Check],
-) -> DataFrame:
-    """Per-partition quality STATE: one row per partition value with
-    count, per-check pass counts, and sum/min/max of ``numeric_col`` —
-    every field merges algebraically (+, +, +, min, max), so corpus-level
-    metrics come from :func:`merge_states` without touching the data."""
-    aggs = [
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.col(numeric_col)).alias("v_sum"),
-        F.min(F.col(numeric_col)).alias("v_min"),
-        F.max(F.col(numeric_col)).alias("v_max"),
-    ]
-    for i, c in enumerate(checks):
-        aggs.append(F.sum(c.predicate.cast("long")).alias(f"pass_{i}"))
-    return df.groupBy(partition_col).agg(*aggs)
-
-
-def merge_states(states: DataFrame, n_checks: int) -> DataFrame:
-    """Merge per-partition states to one corpus-level row — pure
-    arithmetic over the (tiny) state table; the data is never rescanned.
-    Replacing one partition = subtract its old state row, add the new
-    one, re-merge (the differential re-verification property)."""
-    aggs = [
-        F.sum("n").alias("n"),
-        F.sum("v_sum").alias("v_sum"),
-        F.min("v_min").alias("v_min"),
-        F.max("v_max").alias("v_max"),
-    ]
-    for i in range(n_checks):
-        aggs.append(F.sum(f"pass_{i}").alias(f"pass_{i}"))
-    return states.agg(*aggs)
-
-
 # ------------------------------- conversation-structure checks ----
 
 
@@ -163,9 +117,9 @@ def conversation_checks(
     Plan: one lag window for the adjacent-ts comparison, then ONE
     grouped aggregation to conversation grain, then one global
     aggregation — per-conversation state is O(1) regardless of length.
-    The window partitions by conversation; upstream day-bounding
-    (context.add_context_bounded) is the prescribed hot-conversation
-    guard when conversations are unbounded streams.
+    The window partitions by conversation, so a hot conversation sorts
+    on one task; the sort and the window buffer spill, as in
+    ``context.add_context``.
     """
     w = Window.partitionBy(conv_col).orderBy(idx_col)
     prev_ts = F.lag(ts_col).over(w)

@@ -33,12 +33,13 @@ from localmod_spark.cache_registry import (  # noqa: F401 — re-export
 def exact_dup_groups(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """One row per distinct text: representative id (min), group size.
 
-    Same (xxhash64, text) grouping key as :func:`exact_dedup`: the
-    leading 64-bit hash partitions and pre-sorts the shuffle cheaply,
-    while keeping the full text in the key makes the grouping
-    collision-proof — semantically identical to grouping on the text
-    alone (the hash is a function of the text), so any SQL oracle that
-    groups on text matches exactly.
+    Groups on (xxhash64(text), text): the leading 64-bit hash partitions
+    and pre-sorts the shuffle cheaply, while keeping the full text in the
+    key makes the grouping collision-proof — at 10^12 rows a hash-only
+    group-by has thousands of expected 64-bit collisions, each silently
+    merging distinct documents.  Semantically identical to grouping on
+    the text alone (the hash is a function of the text), so any SQL
+    oracle that groups on text matches exactly.
     """
     h = F.xxhash64(F.col(text_col))
     return (
@@ -47,25 +48,6 @@ def exact_dup_groups(df: DataFrame, text_col: str = "text", id_col: str = "doc_i
         .agg(F.min(id_col).alias("rep_id"), F.count(F.lit(1)).alias("n_dups"))
         .select("rep_id", "n_dups")
     )
-
-
-def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Keep exactly one row (min id) per distinct text.
-
-    Groups on (xxhash64(text), text): the leading 64-bit hash partitions
-    and pre-sorts the shuffle cheaply, while the full text in the key
-    makes the dedup collision-proof — at 10^12 rows a hash-only group-by
-    has thousands of expected 64-bit collisions, each silently dropping a
-    distinct document.  Survivors semi-join back on id (broadcast when
-    small, AQE otherwise)."""
-    h = F.xxhash64(F.col(text_col))
-    winners = (
-        df.select(F.col(id_col), h.alias("_h"), F.col(text_col).alias("_t"))
-        .groupBy("_h", "_t")
-        .agg(F.min(id_col).alias(id_col))
-        .select(id_col)
-    )
-    return df.join(winners, id_col, "left_semi")
 
 
 # -------------------------------------------------------------- minhash ----
@@ -213,8 +195,8 @@ def minhash_candidates(
     bounding the candidate count at ``bands * max_bucket^2 / 2`` per
     pathological text.  The cap is **opt-in** (default ``None``): it
     trades recall for boundedness, so callers must choose it knowingly —
-    scale jobs should pass a cap AND run :func:`exact_dedup` upstream so
-    byte-identical boilerplate collapses to one representative before
+    scale jobs should pass a cap AND collapse byte-identical boilerplate
+    to one representative upstream (:func:`exact_dup_groups`) before
     sketching.  The trade is OBSERVABLE, not silent: pass an
     ``observation`` (:class:`pyspark.sql.Observation`) and, after the
     first action, ``observation.get`` carries ``dropped_buckets``,
@@ -377,10 +359,10 @@ def _sharded_self_pair_rows(
     count stays inherently quadratic in the bucket width — shard mode
     bounds TASK size, not total work.  w·k replicas ≈ w²/max_bucket rows
     materialize for a width-w bucket, so truly degenerate buckets
-    (byte-identical boilerplate at 10^6+) still want :func:`exact_dedup`
-    upstream; the Observation's ``replica_rows`` makes the fan-out
-    visible.  Normal-width buckets take the plain self-join path
-    unchanged."""
+    (byte-identical boilerplate at 10^6+) still want
+    :func:`exact_dup_groups` upstream; the Observation's
+    ``replica_rows`` makes the fan-out visible.  Normal-width buckets
+    take the plain self-join path unchanged."""
     keys = list(key_cols)
     wide_keys = _wide_buckets(exploded, keys, max_bucket, observation)
     normal = exploded.join(wide_keys.select(*keys), keys, "left_anti")
@@ -871,7 +853,7 @@ def cross_dedup_pairs(
     The banding parameters MUST match the ones the corpus was sketched
     with (same num_hashes/shingle space/bands/rows/seed), or the band
     hashes aren't comparable — plans/selection records them in its
-    ledger precisely so increments can reuse them.
+    ledger.
 
     ``new_bands`` (optional) supplies a precomputed band table for the
     batch (skipping the sketch here) so a caller that also needs the
@@ -983,9 +965,8 @@ def cross_dedup_survivors(
     pass through), verification via exact word-n-gram Jaccard on
     candidates only (``ngram_jaccard`` with the corpus as the ``id_b``
     side), survivors via LEFT ANTI join.  Within-batch duplicates are a
-    separate concern — ``plans/selection.run_increment`` dedups the
-    batch first; direct callers should run :func:`exact_dedup` /
-    :func:`minhash_candidates` on the batch themselves."""
+    separate concern: callers dedup the batch itself first
+    (:func:`exact_dup_groups` / :func:`minhash_candidates`)."""
     cands = cross_dedup_pairs(
         new_docs, corpus_bands,
         id_col=id_col, text_col=text_col, num_hashes=num_hashes,

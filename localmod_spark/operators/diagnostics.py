@@ -93,9 +93,7 @@ def audit_sample(
     md5(id, seed) per category, with ``sample_rank`` (1-based).  Stable
     across reruns, partitionings and input file order.
 
-    Same exact-N shape as `operators/sampling.sample_exact_n` (kept
-    separate for the visible rank, the ``:seed`` hash salt the oracle
-    replays, and the scalable variant below) and the same NULL-id rule:
+    Same NULL-id rule as the rate samplers in `operators/sampling`:
     rows with a NULL id are EXCLUDED — a NULL hash would sort first
     under asc and occupy audit slot 1 in every category for every seed.
 

@@ -228,44 +228,6 @@ def mix_corpora(
     )
 
 
-def sample_exact_n(
-    df: DataFrame,
-    n: int,
-    stratum_col: str = "lang",
-    id_col: str = "doc_id",
-    seed: int = 0,
-) -> DataFrame:
-    """EXACTLY ``n`` rows per stratum (or the whole stratum when it has
-    fewer) — the eval-set/probe-sample builder, where a rate-based sample
-    (expected size only) is the wrong tool.  Deterministic like the rate
-    samplers: rows are ranked by the md5 uniform of (id, seed), so the
-    sample is rerun/partitioning-stable and seed-keyed; raising ``n``
-    EXTENDS the previous sample (the order is fixed, the cutoff moves) —
-    eval sets can grow without resampling history.
-
-    One window exchange on the stratum key; at 10^12 rows Spark's
-    WindowGroupLimit rewrite runs the rank+filter as a per-partition
-    top-k BEFORE the exchange (plan-asserted), so the shuffle carries
-    ~n rows per (partition, stratum), not the corpus.
-
-    Rows with a NULL id are EXCLUDED, matching the rate samplers (a
-    NULL id would otherwise hash NULL, sort first under asc, and occupy
-    a slot for every seed); ids are assumed unique, as everywhere else
-    in this module."""
-    from pyspark.sql import Window
-
-    if n < 0:
-        raise ValueError(f"n must be >= 0, got {n}")
-    df = df.where(F.col(id_col).isNotNull())
-    u = hash_uniform(F.concat(F.col(id_col).cast("string"), F.lit(f"#{int(seed)}")))
-    w = Window.partitionBy(stratum_col).orderBy(u.asc(), F.col(id_col).asc())
-    return (
-        df.withColumn("_rk", F.row_number().over(w))
-        .where(F.col("_rk") <= n)
-        .drop("_rk")
-    )
-
-
 def select_token_budget(
     df: DataFrame,
     budget: int,

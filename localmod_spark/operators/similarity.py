@@ -327,9 +327,8 @@ def _cents_lit(cents) -> "F.Column":
 
 
 def _centroids(dim: int, n_lists: int, seed: int) -> np.ndarray:
-    """Deterministic unit-norm centroids (seeded Gaussian) — the k-means
-    INITIALIZATION and the default codebook for oracle-checkable queries;
-    :func:`train_ivf_centroids` refines them with spherical k-means."""
+    """Deterministic unit-norm centroids (seeded Gaussian): the IVF
+    codebook every query and its SQL oracle share."""
     rng = np.random.RandomState(seed)
     c = rng.randn(n_lists, dim)
     return c / np.linalg.norm(c, axis=1, keepdims=True)
@@ -341,16 +340,12 @@ def with_ivf_list(
     n_lists: int = 16,
     seed: int = 23,
     vec_col: str = "embedding",
-    centroids: "np.ndarray" = None,
 ) -> DataFrame:
     """IVF assignment: each vector joins the inverted list of its nearest
     centroid (argmax dot product).  Pure column expressions → the list id
     becomes a partition/cluster key; at 100 TB the table is bucketed or
-    partitioned by ``ivf_list`` so a probe scans only its lists.
-
-    ``centroids`` (n_lists × dim) overrides the seeded defaults — pass
-    the output of :func:`train_ivf_centroids` for trained lists."""
-    cents = _centroids(dim, n_lists, seed) if centroids is None else centroids
+    partitioned by ``ivf_list`` so a probe scans only its lists."""
+    cents = _centroids(dim, n_lists, seed)
     # ONE dot lambda over a 2-D centroid literal instead of n_lists
     # unrolled dot expressions: identical arithmetic/results, but the
     # generated code is n_lists× smaller — measured 4.2s → 0.6s cold at
@@ -363,50 +358,6 @@ def with_ivf_list(
     )
 
 
-def train_ivf_centroids(
-    embeddings: DataFrame,
-    dim: int,
-    n_lists: int = 16,
-    n_iter: int = 5,
-    seed: int = 23,
-    vec_col: str = "embedding",
-) -> np.ndarray:
-    """Spherical k-means for the IVF codebook, as plain DataFrame passes.
-
-    Each Lloyd iteration: (1) assign every vector to its max-dot unit
-    centroid (same column expressions as :func:`with_ivf_list`), (2)
-    recompute centroids as the element-wise mean, re-normalized.  Only
-    the (n_lists × dim) sum table ever reaches the driver — a model
-    parameter, not data.  Empty lists keep their previous centroid.
-    At 100 TB train on ``embeddings.sample(frac)`` — k-means quality
-    saturates long before the full corpus — then assign the full table
-    once with the trained codebook."""
-    cents = _centroids(dim, n_lists, seed)
-    for _ in range(n_iter):
-        listed = with_ivf_list(embeddings, dim, vec_col=vec_col, centroids=cents)
-        rows = (
-            listed.select("ivf_list", F.posexplode(vec_col).alias("pos", "val"))
-            .groupBy("ivf_list", "pos")
-            .agg(F.sum(F.col("val").cast("double")).alias("s"), F.count(F.lit(1)).alias("n"))
-            .collect()
-        )
-        sums = np.zeros((n_lists, dim))
-        counts = np.zeros(n_lists)
-        for r in rows:
-            sums[r.ivf_list, r.pos] = r.s
-            counts[r.ivf_list] = r.n  # same n for every pos of a list
-        new = cents.copy()
-        nonempty = counts > 0
-        means = sums[nonempty] / counts[nonempty, None]
-        norms = np.linalg.norm(means, axis=1, keepdims=True)
-        norms[norms == 0] = 1.0
-        new[nonempty] = means / norms
-        if np.allclose(new, cents, atol=1e-9):
-            break
-        cents = new
-    return cents
-
-
 def semdedup(
     embeddings: DataFrame,
     dim: int,
@@ -415,7 +366,6 @@ def semdedup(
     seed: int = 23,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    centroids: "np.ndarray" = None,
     quality_col: str = None,
     max_bucket: int = None,
     cap_mode: str = "drop",
@@ -444,9 +394,9 @@ def semdedup(
     n_lists large enough that N/n_lists fits a task, exactly the IVF
     sizing rule); degenerate clusters take the same two giant-bucket
     guards as every banding self-join (``max_bucket`` +
-    ``cap_mode="drop"``/``"shard"``).  ``centroids`` overrides the
-    seeded defaults — pass :func:`train_ivf_centroids` output for
-    trained clusters (seeded defaults keep the query oracle-checkable).
+    ``cap_mode="drop"``/``"shard"``).  Clusters are the seeded IVF
+    codebook's lists (:func:`_centroids`), which keeps the query
+    oracle-checkable.
 
     ``quality_col`` (a column of ``embeddings``) switches the keep
     choice to quality-FIRST: each qualifying pair drops its
@@ -459,7 +409,7 @@ def semdedup(
     from localmod_spark.operators.dedup import _capped_self_pair_rows, _check_cap_mode
 
     _check_cap_mode(cap_mode, max_bucket)
-    cents = _centroids(dim, n_lists, seed) if centroids is None else centroids
+    cents = _centroids(dim, n_lists, seed)
     # one scores array yields BOTH the assignment (argmax position) and
     # the centroid cosine (max score / |v|; centroids are unit-norm)
     scores = F.transform(_cents_lit(cents), lambda c: _dot(F.col(vec_col), c))
@@ -552,7 +502,6 @@ def ivf_topk(
     seed: int = 23,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    centroids: "np.ndarray" = None,
 ) -> DataFrame:
     """Approximate top-k: score only the ``n_probe`` inverted lists whose
     centroids are nearest the query vector.
@@ -560,7 +509,7 @@ def ivf_topk(
     The probe-list computation happens on the driver against the tiny
     centroid matrix (n_lists × dim floats — a parameter, not data); the
     scan then prunes to those lists before any distance math.  Pass the
-    same ``centroids`` the table was assigned with (trained or seeded).
+    ``n_lists``/``seed`` the table was assigned with.
     """
     q_row = embeddings_with_list.where(F.col(id_col) == query_vec_id).select(
         vec_col
@@ -568,7 +517,7 @@ def ivf_topk(
     qvec = np.array(q_row[0], dtype=np.float64)
     if dim is None:
         dim = len(qvec)
-    cents = _centroids(dim, n_lists, seed) if centroids is None else centroids
+    cents = _centroids(dim, n_lists, seed)
     probe = np.argsort(-(cents @ qvec))[:n_probe].tolist()
 
     q = embeddings_with_list.where(F.col(id_col) == query_vec_id).select(
@@ -837,10 +786,9 @@ def ivf_join_topk(
     vec_col: str = "embedding",
     query_id_col: str = None,
     query_vec_col: str = None,
-    centroids: "np.ndarray" = None,
 ) -> DataFrame:
     """Batched multi-query ANN join over IVF inverted lists — the
-    codebook-trained sibling of :func:`ann_join_topk`.  Corpus rows get
+    inverted-list sibling of :func:`ann_join_topk`.  Corpus rows get
     their single nearest-centroid list; each QUERY row computes its own
     top-``n_probe`` probe lists as pure column expressions (sort the
     per-centroid dot scores by (-score, list) and slice — no driver
@@ -849,14 +797,14 @@ def ivf_join_topk(
     EQUI-join + per-query ``row_number``.  Returns
     (query_id, vec_id, cosine, rk).
 
-    At 10^12 rows: partition/bucket the corpus by ``ivf_list`` (after
-    :func:`train_ivf_centroids`) so the probe join co-locates and each
-    query's candidates read only its lists' partitions."""
+    At 10^12 rows: partition/bucket the corpus by ``ivf_list`` so the
+    probe join co-locates and each query's candidates read only its
+    lists' partitions."""
     qid = query_id_col or id_col
     qvec = query_vec_col or vec_col
-    cents = _centroids(dim, n_lists, seed) if centroids is None else centroids
+    cents = _centroids(dim, n_lists, seed)
     corpus_l = with_ivf_list(
-        corpus, dim, n_lists=len(cents), seed=seed, vec_col=vec_col, centroids=cents
+        corpus, dim, n_lists=n_lists, seed=seed, vec_col=vec_col
     ).withColumn("_cn", _norm(F.col(vec_col)))
     # per-query probe lists: struct sort on (-dot, list_ix) = score desc,
     # index-ascending ties — the same ranking ivf_topk's driver-side

@@ -1,10 +1,9 @@
-"""Skew handling: salting + salted two-phase aggregation.
+"""Skew handling: salted two-phase aggregation.
 
 North-rule requirement: hot conversations (millions of turns under one
 ``conv_id``) must not serialize onto one task.  Catalyst/AQE splits skewed
-*joins*, but a skewed ``repartition(conv_id)`` or ``groupBy(conv_id)``
-first phase still hashes every turn of a hot conversation to one shuffle
-partition — salting is on us (SURVEY §4).
+*joins*, but a skewed ``groupBy(conv_id)`` first phase still hashes every
+turn of a hot key to one shuffle partition — salting is on us (SURVEY §4).
 """
 
 from __future__ import annotations
@@ -17,46 +16,24 @@ from pyspark.sql import functions as F
 SALT_COL = "_salt"
 
 
-def with_salt(df: DataFrame, buckets: int, key: str | None = "turn_idx") -> DataFrame:
-    """Deterministic salt in [0, buckets): spreads a single hot key over
-    *buckets* shuffle partitions.  Keyed on a secondary column (turn_idx)
-    so it is stable across retries — no rand(), which breaks resume.
-    ``key=None`` salts by input split (spark_partition_id) — fine for
-    algebraic aggregations, where any salt assignment merges identically."""
-    salt = (
-        F.pmod(F.xxhash64(F.col(key)), F.lit(buckets))
-        if key is not None
-        else F.pmod(F.spark_partition_id(), F.lit(buckets))
-    )
-    return df.withColumn(SALT_COL, salt.cast("int"))
-
-
-def salted_repartition(
-    df: DataFrame, num_partitions: int, key: str = "conv_id", salt_buckets: int = 16
-) -> DataFrame:
-    """Repartition by (key, salt) — even partition sizes under hot keys.
-    Use before the scoring stage when the input's file layout is skewed
-    (e.g. one Iceberg partition per conversation bucket)."""
-    salted = with_salt(df, salt_buckets)
-    return salted.repartition(num_partitions, F.col(key), F.col(SALT_COL)).drop(SALT_COL)
-
-
 def salted_agg(
     df: DataFrame,
     group_col: str,
     aggs: List,
     partial_aggs: List,
     salt_buckets: int = 16,
-    salt_key: str | None = None,
 ) -> DataFrame:
     """Two-phase aggregation: groupBy(key, salt) partials → groupBy(key)
     merge.  ``partial_aggs`` run in phase 1 (must be decomposable — sums,
     counts, min/max), ``aggs`` merge the partial columns in phase 2.
 
-    At 10^12 turns the first shuffle spreads each hot conversation across
-    ``salt_buckets`` reducers; the second shuffle only moves one row per
-    (key, salt) pair.
+    The salt is the input split (``spark_partition_id``) mod
+    ``salt_buckets``: any salt assignment merges identically for such
+    aggregates, and a retried task reads the same split, so it gets the
+    same salt (no rand()).  At 10^12 turns the first shuffle spreads each
+    hot conversation across ``salt_buckets`` reducers; the second shuffle
+    only moves one row per (key, salt) pair.
     """
-    salted = with_salt(df, salt_buckets, key=salt_key)
-    phase1 = salted.groupBy(group_col, SALT_COL).agg(*partial_aggs)
+    salt = F.pmod(F.spark_partition_id(), F.lit(salt_buckets)).cast("int")
+    phase1 = df.withColumn(SALT_COL, salt).groupBy(group_col, SALT_COL).agg(*partial_aggs)
     return phase1.groupBy(group_col).agg(*aggs)

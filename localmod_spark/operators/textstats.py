@@ -79,47 +79,6 @@ def doc_text_features(documents: DataFrame, keep_cols: tuple = ()) -> DataFrame:
     )
 
 
-def _ngram_count_rows(documents: DataFrame, text_col: str, count_fn, shape) -> DataFrame:
-    """Corpus n-gram counts (``count_fn`` per text, ``shape`` cells) as
-    ``(pos, val)`` rows of the flattened count tensor.
-
-    Map side: one flat count array per Arrow batch (mapInPandas —
-    thousands of texts collapse to one row before anything shuffles).
-    Then a DISTRIBUTED second-level reduce: ``posexplode`` the per-batch
-    arrays into (pos, val), drop zeros, and ``groupBy(pos).agg(sum)`` —
-    the same shape as the IVF k-means update
-    (``operators/similarity.train_ivf_centroids``).  The driver therefore
-    receives at most ``prod(shape)`` fixed rows (784 bigram / 21,952
-    trigram) REGARDLESS of corpus size; the earlier formulation collected
-    one count-array row per Arrow batch, which at 100 TB is millions of
-    rows × up to 170 KB funneled into the driver — an OOM by design.
-    Counts are additive integers, so the distributed sum stays bit-exact
-    vs a single-machine count."""
-    from typing import Iterator
-
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import ArrayType, LongType, StructField, StructType
-
-    out_schema = StructType([StructField("counts", ArrayType(LongType()), False)])
-
-    def _count_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            acc = np.zeros(shape)
-            for t in pdf[text_col].fillna(""):
-                acc += count_fn(t)
-            yield pd.DataFrame({"counts": [acc.reshape(-1).astype(np.int64).tolist()]})
-
-    return (
-        documents.select(text_col)
-        .mapInPandas(_count_batches, schema=out_schema)
-        .select(F.posexplode("counts").alias("pos", "val"))
-        .where(F.col("val") != 0)  # n-gram tensors are sparse — shuffle only live cells
-        .groupBy("pos")
-        .agg(F.sum("val").alias("val"))
-    )
-
-
 def ccnet_buckets(
     df: DataFrame,
     ppl_col: str = "perplexity",

@@ -68,7 +68,7 @@ def _stage_path(out_dir: str, stage: str) -> str:
 
 def _read_ledger(spark: SparkSession, path: str) -> DataFrame:
     """Ledger rows land one parquet file each, so a dir written across
-    schema revisions (pre-tracking rows without params/finished/batch_id)
+    schema revisions (pre-tracking rows without params/finished)
     has MIXED footers; without mergeSchema Spark resolves the schema from
     an arbitrary file and resume nondeterministically loses columns.
     mergeSchema unions the footers and null-fills the old rows — the
@@ -82,7 +82,7 @@ def _ledger_path(out_dir: str) -> str:
 
 def compact_ledger(spark: SparkSession, out_dir: str, min_parts: int = 64) -> int:
     """Idempotent ledger compaction: the append path lands ONE parquet
-    file per row, so a year of daily increments = hundreds of tiny files
+    file per row, so a long-lived out_dir collects hundreds of tiny files
     whose footers every resume re-lists and re-merges.  When the dir has
     ``min_parts``+ data files, rewrite the snapshot into one
     mergeSchema-unioned file.  Returns the number of files compacted
@@ -94,9 +94,8 @@ def compact_ledger(spark: SparkSession, out_dir: str, min_parts: int = 64) -> in
       * the compacted file lands via an atomic same-FS rename (written
         to a side dir first, so no truncated part is ever listable);
       * a crash BETWEEN the rename and the snapshot deletes leaves
-        duplicate rows — harmless to every ledger consumer (resume and
-        param lookup take the LATEST row per stage; increment idempotency
-        checks row existence) and converged by the next compaction;
+        duplicate rows — harmless to every ledger consumer (resume takes
+        the LATEST row per stage) and converged by the next compaction;
       * rows appended concurrently are not in the snapshot and are
         neither rewritten nor deleted."""
     path = _ledger_path(out_dir)
@@ -221,7 +220,7 @@ def completed_stages(
             latest: Dict[str, tuple] = {}
             for r in rows:
                 if r["stage"] not in stages:
-                    continue  # e.g. 'increment' rows — not resume stages
+                    continue  # e.g. export's rows — not this plan's stages
                 fin = r["finished"] if r["finished"] is not None else 0.0
                 if r["stage"] not in latest or fin > latest[r["stage"]][1]:
                     latest[r["stage"]] = (r["params"], fin, r["status"])
@@ -334,9 +333,6 @@ def run_selection(
                 "params": params[stage],
                 "metrics": json.dumps(metrics_fn() if metrics_fn else {}, sort_keys=True),
                 "finished": time.time(),
-                # uniform ledger schema with increment rows (mixed parquet
-                # footers would make column resolution file-order-dependent)
-                "batch_id": "",
             },
         )
         run.append(stage)
@@ -404,7 +400,8 @@ def run_selection(
                     f"(> {WIDE_BUCKET_WARN}) — the candidate join is quadratic within "
                     "a bucket; at scale pass max_bucket with cap_mode='shard' "
                     "(bounded task size, zero dropped pairs) or cap_mode='drop' "
-                    "(bounded total work, recall loss), and run exact_dedup upstream",
+                    "(bounded total work, recall loss), and collapse exact duplicates "
+                    "upstream (exact_dup_groups)",
                     stacklevel=2,
                 )
             pairs = _commit(
@@ -435,223 +432,3 @@ def run_selection(
         stages_skipped=[s for s in STAGES if s in done],
         selected=selected,
     )
-
-
-def _latest_stage_params(spark: SparkSession, out_dir: str, stage: str) -> Optional[dict]:
-    """The params JSON of the LATEST done ledger row for *stage*.
-
-    Raises ValueError (not None — callers distinguish 'no ledger' from
-    'ledger predates tracking') when done rows for the stage exist but
-    the latest one carries no params: increments REQUIRE the sketch
-    params (band hashes are only comparable under identical parameters),
-    so an untracked base must be re-run, never guessed at."""
-    path = _ledger_path(out_dir)
-    fs, hpath = _hadoop_fs(spark, path)
-    if not fs.exists(hpath):
-        return None
-    ledger = _read_ledger(spark, path).where(
-        (F.col("status") == "done") & (F.col("stage") == stage)
-    )
-    if "params" not in ledger.columns:
-        ledger = ledger.withColumn("params", F.lit(None).cast("string"))
-    if "finished" not in ledger.columns:
-        ledger = ledger.withColumn("finished", F.lit(None).cast("double"))
-    rows = ledger.select("params", "finished").collect()
-    if not rows:
-        return None
-    latest = max(rows, key=lambda r: r["finished"] if r["finished"] is not None else 0.0)
-    if latest["params"] is None:
-        raise ValueError(
-            f"the selection ledger at {out_dir} predates parameter tracking for "
-            f"stage {stage!r} — increments must reuse the exact banding parameters "
-            "the corpus was sketched with; re-run run_selection (which records "
-            "them) before ingesting increments"
-        )
-    return json.loads(latest["params"])
-
-
-def _done_increments(spark: SparkSession, out_dir: str) -> List[dict]:
-    """Committed increments: ledger rows (stage='increment', done) whose
-    BOTH side dirs exist — an orphan subdir from a crash before the
-    ledger append is simply not trusted (and a retry overwrites it)."""
-    path = _ledger_path(out_dir)
-    fs, hpath = _hadoop_fs(spark, path)
-    if not fs.exists(hpath):
-        return []
-    ledger = _read_ledger(spark, path).where(
-        (F.col("status") == "done") & (F.col("stage") == "increment")
-    )
-    if "batch_id" not in ledger.columns:
-        return []
-    out = []
-    for r in ledger.select("batch_id", "params", "finished").collect():
-        if r["batch_id"] is None or r["params"] is None:
-            continue  # pre-tracking rows can't describe an increment
-        v = _stage_path(out_dir, f"valid_inc/inc={r['batch_id']}")
-        b = _stage_path(out_dir, f"bands_inc/inc={r['batch_id']}")
-        if fs.exists(_hadoop_fs(spark, v)[1]) and fs.exists(_hadoop_fs(spark, b)[1]):
-            out.append({"batch_id": r["batch_id"], "params": json.loads(r["params"]),
-                        "finished": r["finished"]})
-    return out
-
-
-def run_increment(
-    spark: SparkSession,
-    new_docs: DataFrame,
-    out_dir: str,
-    threshold: Optional[float] = None,
-    batch_id: Optional[str] = None,
-    max_bucket: Optional[int] = None,
-    cap_mode: str = "drop",
-    compact_after: Optional[int] = 64,
-) -> DataFrame:
-    """Incremental ingest against a STAGED selection: dedup *new_docs*
-    against the already-sketched corpus WITHOUT re-sketching it — the
-    daily-batch shape at 10^12 corpus rows, where re-running
-    :func:`run_selection` per ingest would pay the full corpus sketch
-    every day.
-
-    * Banding/validity parameters come from the ledger (band hashes are
-      only comparable under identical parameters); ``threshold``
-      defaults to the staged pairs threshold.  If prior increments were
-      committed under DIFFERENT sketch params (the base was re-run with
-      new params since), the call refuses — their side dirs are stale
-      and must be rebuilt, never silently unioned.
-    * The batch is deduped WITHIN itself first (exact + verified
-      near-dup clusters → min-id representatives), then cross-deduped
-      against staged ``bands/`` ∪ committed increments' bands.  The
-      batch's band table is sketched ONCE and reused for within-batch
-      candidates, cross candidates and the survivors' band append.
-    * Commit is atomic per batch: survivors + their bands OVERWRITE
-      per-batch subdirs (``valid_inc/inc=<batch_id>``,
-      ``bands_inc/inc=<batch_id>``), then the ledger row lands — a crash
-      mid-commit leaves an orphan subdir that is not trusted and is
-      overwritten on retry; re-running a COMMITTED ``batch_id`` is a
-      no-op returning the staged survivors (pass a caller-stable
-      ``batch_id`` to get idempotent retries; the default is a fresh
-      uuid).  Base stages stay immutable → ``run_selection`` resume
-      semantics untouched.
-
-    ``compact_after``: once the lineage ledger exceeds this many part
-    files, it is compacted to one (see :func:`compact_ledger`); ``None``
-    disables.
-
-    Returns the survivors (doc_id, lang, text)."""
-    import uuid
-
-    from localmod_spark.operators.dedup import (
-        candidates_from_bands,
-        cross_dedup_survivors,
-        dup_clusters,
-        exact_dedup,
-        explode_minhash_bands,
-        ngram_jaccard,
-        with_minhash,
-    )
-    from localmod_spark.operators.validate import with_validity
-
-    band_params = _latest_stage_params(spark, out_dir, "bands")
-    pairs_params = _latest_stage_params(spark, out_dir, "pairs")
-    if band_params is None or pairs_params is None:
-        raise ValueError(
-            f"{out_dir} has no staged bands/pairs ledger rows — run run_selection first; "
-            "increments must reuse the exact banding parameters the corpus was sketched with"
-        )
-    if threshold is None:
-        threshold = pairs_params["threshold"]
-    batch_id = batch_id or uuid.uuid4().hex[:12]
-
-    kw = dict(
-        num_hashes=band_params["num_hashes"],
-        shingle_k=band_params["shingle_k"],
-        bands=band_params["bands"],
-        rows_per_band=band_params["rows_per_band"],
-    )
-    committed = _done_increments(spark, out_dir)
-    for inc in committed:
-        if inc["batch_id"] == batch_id:
-            # idempotent retry of a committed batch
-            return spark.read.parquet(_stage_path(out_dir, f"valid_inc/inc={batch_id}"))
-        stale = {k: inc["params"].get(k) for k in kw if inc["params"].get(k) != kw[k]}
-        if stale:
-            raise ValueError(
-                f"increment {inc['batch_id']} was sketched under different banding "
-                f"params ({stale} vs current {kw}) — its band hashes are not comparable "
-                "with the rebuilt base sketch; remove the valid_inc/bands_inc side dirs "
-                "(or re-run run_selection with the original params) before new increments"
-            )
-
-    corpus_docs = spark.read.parquet(_stage_path(out_dir, "valid"))
-    corpus_bands = spark.read.parquet(_stage_path(out_dir, "bands"))
-    for inc in committed:
-        corpus_docs = corpus_docs.unionByName(
-            spark.read.parquet(_stage_path(out_dir, f"valid_inc/inc={inc['batch_id']}"))
-        )
-        corpus_bands = corpus_bands.unionByName(
-            spark.read.parquet(_stage_path(out_dir, f"bands_inc/inc={inc['batch_id']}"))
-        )
-
-    t0 = time.time()
-    new_valid = (
-        with_validity(new_docs, max_len=band_params["max_len"])
-        .where(F.col("valid"))
-        .select("doc_id", "lang", "text")
-    )
-    # within-batch dedup: exact first, then verified near-dup clusters →
-    # min-id representatives (a duplicated pair inside one batch must not
-    # both enter the corpus)
-    new_valid = exact_dedup(new_valid)
-    sigs = with_minhash(
-        new_valid, num_hashes=kw["num_hashes"], shingle_k=kw["shingle_k"], shingle_mode="word"
-    )
-    # the batch band table: sketched ONCE (persisted), reused for
-    # within-batch candidates, cross candidates and the survivor append
-    from pyspark.storagelevel import StorageLevel
-
-    batch_bands = explode_minhash_bands(
-        sigs, bands=kw["bands"], rows_per_band=kw["rows_per_band"]
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    within = ngram_jaccard(
-        new_valid,
-        candidates_from_bands(batch_bands, max_bucket=max_bucket, cap_mode=cap_mode),
-        n=kw["shingle_k"],
-    ).where(F.round("jaccard", 4) >= threshold)
-    reps = dup_clusters(new_valid, within.select("id_a", "id_b"))
-    keep_ids = reps.where(F.col("doc_id") == F.col("cluster")).select("doc_id")
-    batch = new_valid.join(keep_ids, "doc_id", "left_semi")
-    batch_bands_kept = batch_bands.join(keep_ids, "doc_id", "left_semi")
-
-    survivors = cross_dedup_survivors(
-        batch, corpus_docs, corpus_bands,
-        threshold=threshold, new_bands=batch_bands_kept, max_bucket=max_bucket,
-        cap_mode=cap_mode, **kw,
-    ).localCheckpoint()  # feeds two writes + the caller — compute once
-    # atomic per-batch commit: overwrite subdirs, ledger row LAST
-    survivors.write.mode("overwrite").parquet(
-        _stage_path(out_dir, f"valid_inc/inc={batch_id}")
-    )
-    surv_ids = survivors.select("doc_id")
-    batch_bands_kept.join(surv_ids, "doc_id", "left_semi").write.mode("overwrite").parquet(
-        _stage_path(out_dir, f"bands_inc/inc={batch_id}")
-    )
-    batch_bands.unpersist()
-    _append_ledger_row(
-        spark,
-        _ledger_path(out_dir),
-        {
-            "wave": len(STAGES),
-            "stage": "increment",
-            "status": "done",
-            "rows": survivors.count(),
-            "wall_ms": round((time.time() - t0) * 1000, 2),
-            "params": json.dumps(dict(kw, threshold=threshold), sort_keys=True),
-            "metrics": json.dumps({}, sort_keys=True),
-            "finished": time.time(),
-            "batch_id": batch_id,
-        },
-    )
-    if compact_after:
-        # keep the ledger one file wide under a daily-increment regime;
-        # a no-op below the threshold, idempotent above it
-        compact_ledger(spark, out_dir, min_parts=compact_after)
-    return survivors

@@ -21,7 +21,8 @@ masters get it, since there the driver's interpreter, its pyspark and this
 package are the executors' own; a cluster's executors may have none of
 them, so they keep Spark's stock daemon.
 
-``ship_package`` makes the package importable on executors.
+``ship_package`` makes the package importable on executors whose
+workers do not fork from that daemon.
 """
 
 from __future__ import annotations
@@ -75,13 +76,20 @@ def get_spark(
     return builder.getOrCreate()
 
 
-def ship_package(sc: SparkContext, root: str) -> str:
+def ship_package(sc: SparkContext, root: str) -> str | None:
     """Zip ``root``/localmod_spark and ``addPyFile`` it, once per
     SparkContext, so executor Python workers can import the package
     whatever their cwd; returns the zip's path.  The zip is built in a
     fresh ``mkdtemp`` dir (mode 0700, removed at exit): a predictable path
     in the shared tmp dir would let another local user plant the code our
-    executors import."""
+    executors import.
+
+    A context that runs this package's worker daemon (a local master
+    built by :func:`get_spark`) ships nothing and returns None: its
+    workers fork from that daemon, which imported the package from the
+    executors' ``PYTHONPATH`` before forking."""
+    if sc.getConf().get("spark.python.daemon.module") == _worker_daemon.__name__:
+        return None
     shipped = getattr(sc, "_localmod_spark_zip", None)
     if shipped is not None:
         return shipped

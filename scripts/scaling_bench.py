@@ -2,13 +2,14 @@
 4N parallelism on the same input (the sandbox proxy for N- vs 4N-executor
 clusters per BASELINE.json).
 
-Measures three pairs — 1→4 (primary: far below the single socket's
+Measures the pairs 1→4 (primary: far below the single socket's
 memory-bandwidth knee, the faithful proxy for adding independent
 executors), 2→8 and 8→32 (reported for transparency; higher core counts
 saturate the shared socket, contention a real 4N-machine cluster does
-not have) —
-plus a no-Spark multiprocessing run of the same kernel, which
-establishes the hardware's own scaling ceiling on this box.
+not have), each only when its 4N fits the CPUs this process may run on —
+plus a no-Spark multiprocessing run of the same kernel at the largest
+pair's N and 4N workers, which establishes the hardware's own scaling
+ceiling on this box.
 
 Each Spark run is a fresh JVM via subprocess; a full-pass warmup excludes
 Python-worker cold start (paid once per executor on a real cluster);
@@ -99,7 +100,7 @@ def run_at(cores: int, n_turns: int) -> dict:
     baseline and understating scaling.  Pinning makes local[N] a faithful
     proxy for an executor that owns N cores."""
     code = RUN_SNIPPET.format(repo=REPO, cores=cores, n_turns=n_turns)
-    cpus = ",".join(str(c) for c in range(cores))
+    cpus = ",".join(str(c) for c in sorted(os.sched_getaffinity(0))[:cores])
     out = subprocess.run(
         ["taskset", "-c", cpus, sys.executable, "-c", code],
         capture_output=True, text=True, timeout=900,
@@ -122,10 +123,11 @@ def _mp_work(n: int) -> float:
     return time.time() - t0
 
 
-def hardware_ceiling(n_turns: int) -> dict:
-    """Same kernel, no Spark: multiprocessing throughput at 8 and 32."""
+def hardware_ceiling(n_turns: int, n: int) -> dict:
+    """Same kernel, no Spark: multiprocessing throughput at ``n`` and
+    ``4 * n`` workers."""
     out = {}
-    for workers in (8, 32):
+    for workers in (n, 4 * n):
         with mp.Pool(workers) as p:
             p.map(_mp_work, [10] * workers)
             t0 = time.time()
@@ -138,13 +140,17 @@ def main() -> None:
     n_turns = int(sys.argv[1]) if len(sys.argv) > 1 else 800_000
     sys.path.insert(0, REPO)
 
+    nproc = len(os.sched_getaffinity(0))
+    if nproc < 4:
+        raise SystemExit(f"the 1→4 pair needs 4 CPUs; this process may use {nproc}")
     pairs = {}
-    for n in (1, 2, 8):
+    for n in (n for n in (1, 2, 8) if 4 * n <= nproc):
         small = run_at(n, n_turns)
         big = run_at(n * 4, n_turns)
         pairs[n] = (small, big, round(big["turns_per_sec"] / (4 * small["turns_per_sec"]), 3))
-    hw = hardware_ceiling(n_turns)
-    hw_eff = round(hw[32] / (4 * hw[8]), 3)
+    hw_n = max(pairs)
+    hw = hardware_ceiling(n_turns, hw_n)
+    hw_eff = round(hw[4 * hw_n] / (4 * hw[hw_n]), 3)
 
     stamp = datetime.now(timezone.utc).strftime("%Y-%m-%d %H:%M UTC")
 
@@ -157,7 +163,12 @@ def main() -> None:
             f"**Scaling efficiency = {eff}**"
         )
 
-    eff_1, eff_2, eff_8 = pairs[1][2], pairs[2][2], pairs[8][2]
+    def optional_pair(n: int, title: str) -> str:
+        if n not in pairs:
+            return f"{title}\n\nNot run: 4N = {4 * n} exceeds this box's {nproc} CPUs.\n"
+        return f"{title}\n\n{pair_table(n)} (efficiency {pairs[n][2]})\n"
+
+    eff_1 = pairs[1][2]
     md = f"""# BENCH/BASELINE — throughput scaling (N vs 4N parallelism)
 
 North-rule gate: ≥ 0.8 throughput scaling efficiency between N- and
@@ -174,13 +185,10 @@ real cluster), best of 2.
 
 {pair_table(1)} (gate ≥ 0.8: {"PASS" if eff_1 >= 0.8 else "FAIL"})
 
-## Secondary pair: N=2 → 4N=8
-
-{pair_table(2)} (efficiency {eff_2})
-
+{optional_pair(2, "## Secondary pair: N=2 → 4N=8")}
 ## Why this pair is the honest proxy
 
-This sandbox is ONE 32-core socket.  A real 4N-executor cluster adds
+This box is ONE socket with {nproc} CPUs.  A real 4N-executor cluster adds
 independent machines — per-core memory bandwidth stays constant.  On this
 box per-core throughput decays as more of the socket is saturated; the
 no-Spark ceiling below quantifies it.  The 2→8 pair sits below the
@@ -189,20 +197,17 @@ structure, serial overheads) rather than the socket's.
 
 Transparency — the same measurement at saturating core counts:
 
-### N=8 → 4N=32 (full socket)
-
-{pair_table(8)}
-
+{optional_pair(8, "### N=8 → 4N=32 (full socket)")}
 ### Hardware ceiling (no Spark)
 
-The identical kernel via raw multiprocessing: {hw[8]:,} turns/sec at 8
-workers → {hw[32]:,} at 32 workers = **{hw_eff} scaling efficiency** in
-this run.  This box's measurements swing ±30-40% run to run (turbo /
-thermal state): across the session the mp ceiling measured 0.46-0.94 and
-the Spark 8→32 pair 0.28-0.65.  The full-socket residual gap is JVM task
-threads + Python workers co-scheduling on the same 32 cores plus Arrow
-ser/de — a single-box artifact; on a real cluster each executor owns its
-cores.
+The identical kernel via raw multiprocessing, {hw_n} → {4 * hw_n} pool
+workers: {hw[hw_n]:,} → {hw[4 * hw_n]:,} turns/sec = **{hw_eff} scaling
+efficiency** in this run.  On a 32-CPU box the measurements
+swung ±30-40% run to run (turbo / thermal state): the 8→32 mp ceiling
+measured 0.46-0.94 and the Spark 8→32 pair 0.28-0.65.  The full-socket
+residual gap is JVM task threads + Python workers co-scheduling on the
+same cores plus Arrow ser/de — a single-box artifact; on a real cluster
+each executor owns its cores.
 
 Why the job scales: the scoring stage is shuffle-free (narrow
 mapInPandas over cores×3 input splits), the context stage is one conv_id
@@ -245,8 +250,8 @@ Measured {stamp}.  Reproduce: `python scripts/scaling_bench.py {n_turns}`
             manual = old.split(marker, 1)[1]
     with open(path, "w") as f:
         f.write(md + "\n" + marker + manual)
-    print(json.dumps({"pair_1_4": eff_1, "pair_2_8": eff_2, "pair_8_32": eff_8,
-                      "hw_ceiling_8_32": hw_eff}))
+    print(json.dumps({**{f"pair_{n}_{4 * n}": pairs[n][2] for n in pairs},
+                      f"hw_ceiling_{hw_n}_{4 * hw_n}": hw_eff}))
     print(f"wrote {path}")
 
 

@@ -1,6 +1,7 @@
-"""Real BPE (operators/bpe.py): trainer determinism + pin provenance,
-leftmost-lowest-rank encode semantics, distributed == single-machine
-training, and the budget selector consuming REAL tokenizer counts."""
+"""Real BPE (operators/bpe.py): leftmost-lowest-rank encode semantics,
+the encode UDF against the Python loop, pre-tokenization agreement with
+the DuckDB oracle, and the budget selector and packer consuming REAL
+tokenizer counts."""
 
 from __future__ import annotations
 
@@ -15,10 +16,7 @@ from localmod_spark.operators.bpe import (  # noqa: E402
     PINNED_MERGES,
     encode_text,
     encode_word,
-    merges_from_word_freqs,
-    train_bpe,
     with_bpe_tokens,
-    word_frequencies,
 )
 
 SF0001 = "/root/testdata/sf0.001"
@@ -62,21 +60,6 @@ def test_encode_text_pretokenizes_and_flattens():
     assert encode_text("x7ab", ranks) == ["x", "7", "ab"]  # letter/digit runs split
 
 
-def test_merges_from_word_freqs_matches_hand_computation():
-    # freqs: 'low'×5, 'lower'×2 → pair counts: (l,o)=7, (o,w)=7, (w,e)=2,
-    # (e,r)=2; tie (l,o) vs (o,w) → lexicographically smaller ('l','o')
-    merges = merges_from_word_freqs({"low": 5, "lower": 2}, 3)
-    assert merges[0] == ("l", "o")
-    assert merges[1] == ("lo", "w")  # after merge, (lo,w)=7 dominates
-    assert merges[2] in {("e", "r"), ("low", "e")}  # both count 2 → lex smallest
-    assert merges[2] == ("e", "r")
-
-
-def test_merge_loop_stops_when_exhausted():
-    assert merges_from_word_freqs({"ab": 1}, 10) == [("a", "b")]
-    assert merges_from_word_freqs({}, 5) == []
-
-
 # ---- Spark paths ----
 
 
@@ -85,34 +68,6 @@ def docs(spark):
     from localmod_spark.sources.tables import load_table
 
     return load_table(spark, SF0001, "documents")
-
-
-def test_pinned_merges_reproduced_by_trainer(spark, docs):
-    """PINNED_MERGES provenance: the distributed trainer on the sf0.001
-    documents table reproduces the pinned literal exactly (so the oracle's
-    merges literal is genuinely the trainer's output, not a hand edit)."""
-    assert train_bpe(docs, num_merges=24) == PINNED_MERGES
-
-
-def test_training_is_partitioning_invariant(spark, docs):
-    """Word counts are additive → the driver merge loop sees identical
-    inputs at any parallelism (the N-vs-4N determinism requirement)."""
-    assert train_bpe(docs.repartition(13), num_merges=12) == train_bpe(
-        docs.coalesce(1), num_merges=12
-    )
-
-
-def test_distributed_word_freqs_match_local(spark, docs):
-    import re as _re
-
-    from localmod_spark.operators.bpe import BPE_PRETOKEN_PATTERN
-
-    local: dict = {}
-    for r in docs.select("text").collect():
-        for w in _re.findall(BPE_PRETOKEN_PATTERN, r["text"] or ""):
-            local[w] = local.get(w, 0) + 1
-    dist = {r["word"]: r["freq"] for r in word_frequencies(docs).collect()}
-    assert dist == local
 
 
 def test_with_bpe_tokens_matches_python_reference(spark, docs):
@@ -124,16 +79,6 @@ def test_with_bpe_tokens_matches_python_reference(spark, docs):
     for r in docs.select("doc_id", "text").collect():
         want = encode_text(r["text"], ranks)
         assert out[r["doc_id"]] == (want, len(want))
-
-
-def test_min_freq_prunes_rare_words(spark):
-    df = spark.createDataFrame(
-        [("aa bb aa aa",), ("zq",)], "text string"
-    )
-    # 'zq' appears once; with min_freq=2 its chars contribute nothing
-    merges = train_bpe(df, num_merges=2, min_freq=2)
-    assert ("z", "q") not in merges
-    assert merges[0] == ("a", "a")
 
 
 def test_token_budget_driven_by_real_bpe_counts(spark, docs):
@@ -163,12 +108,12 @@ def test_token_budget_driven_by_real_bpe_counts(spark, docs):
             assert r["n_bpe_tokens"] == len(encode_text(r["text"], ranks))
 
 
-def test_pretoken_pattern_agrees_across_engines_on_nbsp(spark):
+def test_pretoken_pattern_agrees_across_engines_on_nbsp():
     """The whitespace class is spelled out as literal control characters
-    precisely so CPython re, Java regex and RE2 agree on NON-ASCII
-    spaces: NBSP is NOT whitespace in any of them — all three must emit
-    it as a punctuation token (a bare \\s would make Python drop it while
-    Java/DuckDB keep it, silently desyncing trainer, encoder and oracle)."""
+    precisely so CPython re and RE2 agree on NON-ASCII spaces: NBSP is
+    NOT whitespace in either — both must emit it as a punctuation token
+    (a bare \\s would make Python drop it while DuckDB keeps it,
+    silently desyncing encoder and oracle)."""
     import re as _re
 
     import duckdb
@@ -178,11 +123,6 @@ def test_pretoken_pattern_agrees_across_engines_on_nbsp(spark):
     text = "a b c"
     py = _re.findall(BPE_PRETOKEN_PATTERN, text)
     assert py == ["a", " ", "b", "c"]
-    df = spark.createDataFrame([(text,)], "text string")
-    jv = sorted(
-        (r["word"], r["freq"]) for r in word_frequencies(df).collect()
-    )
-    assert jv == sorted({w: py.count(w) for w in py}.items())
     duck = duckdb.connect().execute(
         "SELECT regexp_extract_all(?, ?)", [text, BPE_PRETOKEN_PATTERN]
     ).fetchone()[0]

@@ -1,15 +1,12 @@
-"""Deequ-style constraint checks + partition-mergeable quality state."""
+"""Deequ-style constraint checks."""
 
 import pytest
-from pyspark.sql import functions as F
 
 from localmod_spark.operators.checks import (
     check_suite,
     completeness_check,
     in_range_check,
     in_set_check,
-    merge_states,
-    quality_state,
 )
 
 
@@ -45,47 +42,3 @@ def test_check_suite_single_aggregation_pass(df):
     checks = [completeness_check("text"), in_range_check("v", 1, 100)]
     plan = check_suite(df, checks)._jdf.queryExecution().executedPlan().toString()
     assert plan.count("HashAggregate") <= 4, plan  # partial+final, one agg chain
-
-
-def test_quality_state_merges_to_global_metrics(spark):
-    """The differential property: per-partition states merged == direct
-    whole-relation aggregation, for every field."""
-    rows = [(i % 4, f"t{i}" if i % 7 else None, i * 3 % 100) for i in range(200)]
-    data = spark.createDataFrame(rows, "wave int, text string, v long")
-    checks = [completeness_check("text"), in_range_check("v", 0, 50)]
-
-    states = quality_state(data, "wave", "v", checks)
-    merged = merge_states(states, n_checks=2).collect()[0]
-
-    direct = data.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("v").alias("v_sum"),
-        F.min("v").alias("v_min"),
-        F.max("v").alias("v_max"),
-        F.sum(F.col("text").isNotNull().cast("long")).alias("pass_0"),
-        F.sum(F.col("v").between(0, 50).cast("long")).alias("pass_1"),
-    ).collect()[0]
-    for k in ("n", "v_sum", "v_min", "v_max", "pass_0", "pass_1"):
-        assert merged[k] == direct[k], k
-
-
-def test_quality_state_differential_replacement(spark):
-    """Replacing one partition's rows: merge(old states minus that wave's
-    state plus the recomputed wave state) == direct recompute — the
-    corpus-level recheck never rescans the other partitions."""
-    rows = [(i % 3, i, i * 2 % 50) for i in range(90)]
-    data = spark.createDataFrame(rows, "wave int, id long, v long")
-    checks = [in_range_check("v", 0, 25)]
-    states = quality_state(data, "wave", "v", checks)
-
-    new_wave1 = spark.createDataFrame(
-        [(1, 1000 + i, 49) for i in range(10)], "wave int, id long, v long"
-    )
-    replaced = data.where(F.col("wave") != 1).unionByName(new_wave1)
-
-    diff_states = states.where(F.col("wave") != 1).unionByName(
-        quality_state(new_wave1, "wave", "v", checks)
-    )
-    merged = merge_states(diff_states, n_checks=1).collect()[0]
-    direct = merge_states(quality_state(replaced, "wave", "v", checks), n_checks=1).collect()[0]
-    assert merged == direct

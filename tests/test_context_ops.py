@@ -2,8 +2,8 @@
 
 import pyspark.sql.functions as F
 
-from localmod_spark.operators.context import conv_features, with_repetition
-from localmod_spark.operators.skew import salted_repartition, with_salt
+from localmod_spark.operators.context import add_context
+from localmod_spark.operators.skew import SALT_COL, salted_agg
 
 
 def _toy(spark):
@@ -21,35 +21,43 @@ def _toy(spark):
     )
 
 
-def test_conv_features_skew_safe(spark):
-    feats = {r.conv_id: r for r in conv_features(_toy(spark), salt_buckets=4).collect()}
+def test_add_context_conv_features(spark):
+    feats = {r.conv_id: r for r in add_context(_toy(spark)).collect()}
     assert feats["a"].n_turns == 3 and feats["a"].n_flagged == 2
     assert feats["a"].flag_share == 0.666667
-    assert feats["a"].max_severity_rank == 4
+    assert feats["a"].max_severity_rank == 4 and feats["a"].n_pii_turns == 1
     assert feats["b"].n_turns == 4 and feats["b"].n_flagged == 0
     assert feats["b"].max_severity_rank == 0
 
 
 def test_repetition_lag(spark):
-    df = with_repetition(_toy(spark))
-    got = {(r.conv_id, r.turn_idx): r.is_repeat_turn for r in df.collect()}
-    assert got[("a", 0)] is False and got[("a", 1)] is True and got[("a", 2)] is False
+    df = add_context(_toy(spark))
+    got = {(r.conv_id, r.turn_idx): (r.turn_rank, r.is_repeat_turn) for r in df.collect()}
+    assert got[("a", 0)] == (1, False) and got[("a", 1)] == (2, True)
+    assert got[("a", 2)] == (3, False)
     # b: x,x,y,x → repeats only at idx 1 (adjacent equality, not global dup)
-    assert got[("b", 1)] is True and got[("b", 3)] is False
+    assert got[("b", 1)] == (2, True) and got[("b", 3)] == (4, False)
+
+
+def _salted_conv_counts(df, salt_buckets):
+    partial = [F.count(F.lit(1)).alias("_n"), F.sum(F.col("flagged").cast("long")).alias("_nf")]
+    merge = [F.sum("_n").alias("n_turns"), F.sum("_nf").alias("n_flagged")]
+    return salted_agg(df, "conv_id", merge, partial, salt_buckets)
 
 
 def test_salt_deterministic_and_bounded(spark):
-    df = with_salt(_toy(spark), buckets=8)
-    salts = [r._salt for r in df.collect()]
-    assert all(0 <= s < 8 for s in salts)
-    again = [r._salt for r in with_salt(_toy(spark), buckets=8).collect()]
-    assert salts == again  # no rand() — stable across retries/resume
+    """The phase-1 salt is visible to the merge step as a group column."""
+    def salts():
+        got = salted_agg(
+            _toy(spark).repartition(5), "conv_id",
+            [F.sort_array(F.collect_list(SALT_COL)).alias("salts")],
+            [F.count(F.lit(1)).alias("_n")], salt_buckets=3,
+        )
+        return {r.conv_id: r.salts for r in got.collect()}
 
-
-def test_salted_repartition_preserves_rows(spark):
-    df = salted_repartition(_toy(spark), 4)
-    assert df.count() == 7
-    assert "_salt" not in df.columns
+    first = salts()
+    assert all(0 <= s < 3 for ss in first.values() for s in ss)
+    assert first == salts()  # no rand() — stable across retries/resume
 
 
 def test_conv_features_match_unsalted(spark):
@@ -62,7 +70,7 @@ def test_conv_features_match_unsalted(spark):
         .collect()
     }
     salted = {
-        r.conv_id: (r.n_turns, r.n_flagged) for r in conv_features(toy, salt_buckets=3).collect()
+        r.conv_id: (r.n_turns, r.n_flagged) for r in _salted_conv_counts(toy, 3).collect()
     }
     assert naive == salted
 

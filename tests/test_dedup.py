@@ -13,7 +13,6 @@ from localmod_spark.operators.dedup import (
     _shingle_hashes,
     _splitmix64,
     _word_shingle_hashes,
-    exact_dedup,
     exact_dup_groups,
     minhash_candidates,
     ngram_jaccard,
@@ -35,11 +34,6 @@ def docs(spark):
     return spark.createDataFrame(DOCS, "doc_id long, text string").persist()
 
 
-def test_exact_dedup_keeps_min_id_per_text(docs):
-    kept = sorted(r.doc_id for r in exact_dedup(docs).collect())
-    assert kept == [0, 1, 2, 4]  # 3 is the exact dup of 0
-
-
 def test_exact_dup_groups_counts(docs):
     got = {r.rep_id: r.n_dups for r in exact_dup_groups(docs).collect()}
     assert got[0] == 2 and got[1] == 1 and got[2] == 1 and got[4] == 1
@@ -52,7 +46,7 @@ def test_exact_dedup_groups_on_text_not_hash_alone(spark):
     choice guarantees: every distinct text survives.)"""
     rows = [(i, f"unique text number {i}") for i in range(200)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    assert exact_dedup(df).count() == 200
+    assert exact_dup_groups(df).count() == 200
 
 
 def test_minhash_mixing_arithmetic_is_exact():

@@ -73,40 +73,6 @@ def test_quality_score_bounds():
         assert 0.0 <= quality_score(quality_stats(t)) <= 1.0
 
 
-# ---------------------------------------------------------- KN trigram ----
-
-
-def test_kn_table_rows_are_distributions():
-    """Every context's probabilities must sum to exactly 1 — the KN
-    interpolation is a proper distribution, observed context or not."""
-    import numpy as np
-
-    from localmod_spark.kernel.quality import _SEED_CORPUS, kn_logprob_table, trigram_counts
-
-    table = kn_logprob_table(trigram_counts(_SEED_CORPUS))
-    sums = np.exp(table).sum(axis=1)
-    np.testing.assert_allclose(sums, 1.0, atol=1e-9)
-    assert np.isfinite(table).all()  # nothing is ever zero-probability
-
-
-def test_lm_trainer_driver_reduce_is_bounded(spark):
-    """The distributed second-level reduce bounds what reaches the driver
-    at prod(shape) rows REGARDLESS of partition/batch count — the round-3
-    design flaw was one 170 KB count row per Arrow batch funneled to the
-    driver.  Feed a many-partition input and count the reduce's rows."""
-    from localmod_spark.kernel.quality import _N_SYMBOLS, bigram_counts, trigram_counts
-    from localmod_spark.operators.textstats import _ngram_count_rows
-
-    texts = [(f"document number {i} with some english words",) for i in range(200)]
-    docs = spark.createDataFrame(texts, "text string").repartition(16)
-    bi = _ngram_count_rows(docs, "text", bigram_counts, (_N_SYMBOLS, _N_SYMBOLS))
-    assert bi.count() <= _N_SYMBOLS**2
-    tri = _ngram_count_rows(
-        docs, "text", trigram_counts, (_N_SYMBOLS, _N_SYMBOLS, _N_SYMBOLS)
-    )
-    assert tri.count() <= _N_SYMBOLS**3
-
-
 def test_ccnet_buckets_terciles_and_monotonicity(spark):
     """Per-group bands are near-equal thirds, ordered head <= middle <=
     tail in perplexity, and the threshold table reaches the bucket join

@@ -1,7 +1,6 @@
 """Weighted multi-source mixing (sampling.waterfill_budgets /
-mix_corpora) and exact-count stratified sampling (sample_exact_n):
-water-filling invariants (fuzzed), the source-exhaustion refill path,
-share tolerance, determinism, and the per-partition top-k plan shape."""
+mix_corpora): water-filling invariants (fuzzed), the source-exhaustion
+refill path, share tolerance and determinism."""
 
 from __future__ import annotations
 
@@ -139,68 +138,3 @@ def test_mixing_is_partitioning_invariant(spark, corpus_df):
 def test_unweighted_source_is_excluded(spark, corpus_df):
     sel = mix_corpora(corpus_df, {"web": 1.0}, 800).collect()
     assert {r["source"] for r in sel} == {"web"}
-
-
-# ---- exact-count deterministic sampling ----
-
-
-def test_sample_exact_n_sizes_and_determinism(spark, corpus_df):
-    from localmod_spark.operators.sampling import sample_exact_n
-
-    out = sample_exact_n(corpus_df, 25, stratum_col="source")
-    sizes = {
-        r["source"]: r["n"]
-        for r in out.groupBy("source").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    assert sizes == {"web": 25, "code": 25, "chat": 25}
-    a = {r["doc_id"] for r in out.collect()}
-    b = {r["doc_id"] for r in sample_exact_n(corpus_df.repartition(13), 25, stratum_col="source").collect()}
-    assert a == b  # partitioning-invariant
-
-
-def test_sample_exact_n_is_prefix_monotone(spark, corpus_df):
-    """Raising n EXTENDS the sample — history never resamples."""
-    from localmod_spark.operators.sampling import sample_exact_n
-
-    small = {r["doc_id"] for r in sample_exact_n(corpus_df, 10, stratum_col="source").collect()}
-    big = {r["doc_id"] for r in sample_exact_n(corpus_df, 30, stratum_col="source").collect()}
-    assert small < big
-
-
-def test_sample_exact_n_caps_at_stratum_size_and_seed_matters(spark, corpus_df):
-    from localmod_spark.operators.sampling import sample_exact_n
-
-    out = sample_exact_n(corpus_df, 10_000, stratum_col="source")
-    assert out.count() == corpus_df.count()  # whole strata when n exceeds them
-    s1 = {r["doc_id"] for r in sample_exact_n(corpus_df, 20, stratum_col="source", seed=1).collect()}
-    s2 = {r["doc_id"] for r in sample_exact_n(corpus_df, 20, stratum_col="source", seed=2).collect()}
-    assert s1 != s2
-    import pytest as _pt
-
-    with _pt.raises(ValueError):
-        sample_exact_n(corpus_df, -1)
-
-
-def test_sample_exact_n_plan_is_pre_exchange_topk(spark, corpus_df):
-    """The scale claim, plan-asserted per repo convention: Spark's
-    WindowGroupLimit rewrite must run the rank cutoff as a per-partition
-    top-k BEFORE the stratum exchange, so the shuffle carries ~n rows
-    per (partition, stratum) instead of the corpus."""
-    from localmod_spark.operators.sampling import sample_exact_n
-
-    out = sample_exact_n(corpus_df, 5, stratum_col="source")
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("WindowGroupLimit") >= 2  # partial (map-side) + final
-
-
-def test_sample_exact_n_excludes_null_ids(spark):
-    """NULL ids would hash NULL and sort FIRST (occupying a slot at
-    every seed) — they are excluded, matching the rate samplers."""
-    from localmod_spark.operators.sampling import sample_exact_n
-
-    df = spark.createDataFrame(
-        [(None, "a"), (1, "a"), (2, "a"), (3, "a")],
-        "doc_id long, source string",
-    )
-    got = sample_exact_n(df, 2, stratum_col="source").collect()
-    assert len(got) == 2 and all(r["doc_id"] is not None for r in got)

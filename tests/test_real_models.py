@@ -32,7 +32,6 @@ def test_real_model_gate_returns_none_without_deps(tmp_path, monkeypatch):
     monkeypatch.delenv(ri.MODEL_DIR_ENV, raising=False)
     assert ri.load_real_toxicity_batch_fns() is None
     assert ri.load_real_nsfw_prob_fn() is None
-    assert not ri.real_models_available()
     # a base dir with no checkpoint subdirs is just as absent
     assert ri.available_toxicity_checkpoints(str(tmp_path)) == {}
     assert ri.load_real_toxicity_batch_fns(str(tmp_path)) is None
@@ -59,7 +58,7 @@ def test_env_var_selects_model_dir(tmp_path, monkeypatch):
 
 
 @pytest.mark.skipif(
-    not ri.real_models_available(),
+    ri.load_real_toxicity_batch_fns() is None,
     reason="torch/transformers + local checkpoints not present in this sandbox",
 )
 def test_real_toxicity_ensemble_is_drop_in(spark):

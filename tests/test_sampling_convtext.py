@@ -69,8 +69,8 @@ def test_conv_text_order_stable_under_shuffled_input(spark):
 def test_conv_text_feeds_conversation_dedup(spark):
     """Composition: whole-conversation duplicates (invisible at turn
     granularity once order differs across convs) collapse via
-    conv_text → exact_dedup."""
-    from localmod_spark.operators.dedup import exact_dedup
+    conv_text → exact_dup_groups (one representative per text)."""
+    from localmod_spark.operators.dedup import exact_dup_groups
 
     def conv(cid, texts):
         return [(cid, t, x) for t, x in enumerate(texts)]
@@ -83,7 +83,8 @@ def test_conv_text_feeds_conversation_dedup(spark):
     df = spark.createDataFrame(rows, "conv_id string, turn_idx int, text string")
     agg = conv_text(df)
     survivors = sorted(
-        r.conv_id for r in exact_dedup(agg, text_col="conv_text", id_col="conv_id").collect()
+        r.rep_id
+        for r in exact_dup_groups(agg, text_col="conv_text", id_col="conv_id").collect()
     )
     assert survivors == ["a", "c"]  # b collapsed into a; c distinct by order
 

@@ -164,108 +164,6 @@ def test_cross_dedup_survivors_planted(spark):
     assert kept == [11]
 
 
-def test_run_increment_reuses_staged_sketch_and_accumulates(spark, tmp_path):
-    """Plan level: increments dedup against the staged corpus + all prior
-    increments, append only to side dirs (base stages immutable — resume
-    still skips everything), and record ledger rows."""
-    import json
-
-    from localmod_spark.plans.selection import run_increment
-
-    base = spark.createDataFrame(
-        [(0, "en", "the alpine meadow study spans decades of careful fieldwork records"),
-         (1, "en", "a completely different document about quarterly finance and audits")],
-        "doc_id long, lang string, text string",
-    )
-    out = str(tmp_path / "sel")
-    run_selection(spark, base, out)
-
-    inc1 = spark.createDataFrame(
-        [(10, "en", "the alpine meadow study spans decades of careful fieldwork records"),
-         (11, "en", "an entirely novel report covering mountain glacier retreat photography")],
-        "doc_id long, lang string, text string",
-    )
-    s1 = sorted(r.doc_id for r in run_increment(spark, inc1, out).collect())
-    assert s1 == [11]  # dup of corpus doc 0 dropped
-
-    # increment 2: dup of increment-1's survivor must ALSO drop
-    inc2 = spark.createDataFrame(
-        [(20, "en", "an entirely novel report covering mountain glacier retreat photography"),
-         (21, "en", "fresh content about deep sea hydrothermal vent ecosystems and sampling")],
-        "doc_id long, lang string, text string",
-    )
-    s2 = sorted(r.doc_id for r in run_increment(spark, inc2, out).collect())
-    assert s2 == [21]
-
-    # side dirs accumulated; base stages untouched → full resume skip
-    inc_rows = sorted(r.doc_id for r in spark.read.parquet(f"{out}/valid_inc").collect())
-    assert inc_rows == [11, 21]
-    again = run_selection(spark, base, out)
-    assert again.stages_run == []
-    ledger = spark.read.parquet(f"{out}/_lineage")
-    incs = ledger.where("stage = 'increment'").collect()
-    assert len(incs) == 2 and all(r.status == "done" for r in incs)
-    assert all(json.loads(r.params)["threshold"] == 0.9 for r in incs)
-
-
-def test_run_increment_requires_staged_selection(spark, tmp_path):
-    from localmod_spark.plans.selection import run_increment
-
-    new = spark.createDataFrame([(1, "en", "text here ok")],
-                                "doc_id long, lang string, text string")
-    with pytest.raises(ValueError, match="run_selection first"):
-        run_increment(spark, new, str(tmp_path / "nothing"))
-
-
-def test_run_increment_dedups_within_batch(spark, tmp_path):
-    """A duplicated pair INSIDE one batch yields exactly one survivor —
-    duplicates never enter the incremental corpus together."""
-    from localmod_spark.plans.selection import run_increment
-
-    base = spark.createDataFrame(
-        [(0, "en", "a completely different document about quarterly finance and audits")],
-        "doc_id long, lang string, text string",
-    )
-    out = str(tmp_path / "sel")
-    run_selection(spark, base, out)
-    batch = spark.createDataFrame(
-        [(10, "en", "an entirely novel report covering mountain glacier retreat photography"),
-         (11, "en", "an entirely novel report covering mountain glacier retreat photography"),
-         (12, "en", "fresh content about deep sea hydrothermal vent ecosystems and sampling")],
-        "doc_id long, lang string, text string",
-    )
-    kept = sorted(r.doc_id for r in run_increment(spark, batch, out).collect())
-    assert kept == [10, 12]  # min-id representative of the within-batch pair
-
-
-def test_run_increment_idempotent_retry_and_stale_params(spark, tmp_path):
-    """Retrying a committed batch_id is a no-op (no double append); after
-    the base is re-sketched under different params, increments refuse to
-    union stale side dirs."""
-    from localmod_spark.plans.selection import run_increment
-
-    base = spark.createDataFrame(
-        [(0, "en", "a completely different document about quarterly finance and audits")],
-        "doc_id long, lang string, text string",
-    )
-    out = str(tmp_path / "sel")
-    run_selection(spark, base, out)
-    batch = spark.createDataFrame(
-        [(10, "en", "an entirely novel report covering mountain glacier retreat photography")],
-        "doc_id long, lang string, text string",
-    )
-    s1 = run_increment(spark, batch, out, batch_id="day1")
-    assert [r.doc_id for r in s1.collect()] == [10]
-    s2 = run_increment(spark, batch, out, batch_id="day1")  # committed → no-op
-    assert [r.doc_id for r in s2.collect()] == [10]
-    ledger = spark.read.parquet(f"{out}/_lineage")
-    assert ledger.where("stage = 'increment'").count() == 1
-    # rebuild the base under different sketch params → stale increments refused
-    run_selection(spark, base, out, num_hashes=32)
-    with pytest.raises(ValueError, match="different banding params"):
-        run_increment(spark, batch, out, batch_id="day2")
-
-
 def test_token_budget_scalable_null_scores_match_exact(spark):
     """NULL quality scores (desc → nulls last in the exact operator) get
     their own lowest histogram bin — outputs stay identical."""
@@ -337,55 +235,6 @@ def test_pre_tracking_stage_row_recomputes_that_stage_only(spark, docs, tmp_path
     assert set(res.stages_skipped) == {"valid", "bands"}
 
 
-def test_increment_refuses_pre_tracking_bands_with_clear_message(spark, docs, tmp_path):
-    """run_increment against a base whose bands row predates parameter
-    tracking must name the real problem (ledger predates tracking), not
-    claim there are no staged bands."""
-    from localmod_spark.plans.selection import run_increment
-
-    out = str(tmp_path / "sel")
-    run_selection(spark, docs, out)
-    _drop_stage_ledger_files(out, STAGES.index("bands"))
-    _append_old_schema_row(spark, out, "bands", STAGES.index("bands"))
-    batch = spark.createDataFrame(
-        [(900_001, "en", "a fresh increment document about harbor logistics and tides")],
-        "doc_id long, lang string, text string",
-    )
-    with pytest.raises(ValueError, match="predates parameter tracking"):
-        run_increment(spark, batch, out)
-
-
-def test_increment_shard_mode_matches_uncapped(spark, tmp_path):
-    """run_increment(cap_mode='shard') with a tiny cap must keep exactly
-    the uncapped increment's survivors — the cross-set AND within-batch
-    candidate joins both preserve recall under sharding."""
-    from localmod_spark.plans.selection import run_increment, run_selection
-
-    corpus_text = "the alpine meadow study spans decades of careful fieldwork records"
-    base = spark.createDataFrame(
-        [(0, "en", corpus_text),
-         (1, "en", "a completely different document about quarterly finance and audits")],
-        "doc_id long, lang string, text string",
-    )
-    batch = spark.createDataFrame(
-        [(100, "en", corpus_text),  # dup of the corpus -> rejected
-         (101, "en", "fresh report on harbor logistics and tide tables this season"),
-         (102, "en", "identical within batch document body repeated across the ingest"),
-         (103, "en", "identical within batch document body repeated across the ingest")],
-        "doc_id long, lang string, text string",
-    )
-
-    def survivors(cap_kw, sub):
-        out = str(tmp_path / sub)
-        run_selection(spark, base, out)
-        got = run_increment(spark, batch, out, batch_id="b1", **cap_kw)
-        return sorted(r.doc_id for r in got.collect())
-
-    uncapped = survivors({}, "a")
-    sharded = survivors({"max_bucket": 2, "cap_mode": "shard"}, "b")
-    assert sharded == uncapped == [101, 102]  # min-id rep survives the pair
-
-
 # ---- ledger compaction (r6) ----
 
 
@@ -428,12 +277,11 @@ def _ledger_files(spark, out):
 
 
 def test_compact_ledger_100_batches_preserves_everything(spark, docs, tmp_path):
-    """100 appended increment rows compact to ONE file; every consumer
-    reads identically before and after (resume stages, latest params,
-    increment idempotency keys), later appends coexist with the
-    compacted file, and re-compaction below threshold is a no-op."""
+    """100 appended ledger rows compact to ONE file; every consumer
+    reads identically before and after (all rows, resume stages), later
+    appends coexist with the compacted file, and re-compaction below
+    threshold is a no-op."""
     from localmod_spark.plans.selection import (
-        _latest_stage_params,
         _read_ledger,
         _ledger_path,
         compact_ledger,
@@ -449,7 +297,6 @@ def test_compact_ledger_100_batches_preserves_everything(spark, docs, tmp_path):
         tuple(r) for r in _read_ledger(spark, _ledger_path(out)).collect()
     }
     before_stages = completed_stages(spark, out)
-    before_params = _latest_stage_params(spark, out, "bands")
 
     n = compact_ledger(spark, out, min_parts=32)
     assert n >= 100
@@ -458,7 +305,6 @@ def test_compact_ledger_100_batches_preserves_everything(spark, docs, tmp_path):
     after = _read_ledger(spark, _ledger_path(out))
     assert {tuple(r) for r in after.collect()} == before_rows
     assert completed_stages(spark, out) == before_stages
-    assert _latest_stage_params(spark, out, "bands") == before_params
     # second pass: 1 file < threshold -> no-op
     assert compact_ledger(spark, out, min_parts=32) == 0
     # appends after compaction coexist with the compacted file

@@ -1,4 +1,6 @@
-"""The package zip executors import is built in a private staging dir."""
+"""The package zip executors import is built in a private staging dir,
+and only for contexts whose workers do not fork from the package's own
+worker daemon."""
 
 import os
 import stat
@@ -11,8 +13,12 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 class _Context:
-    def __init__(self):
+    def __init__(self, conf=None):
         self.added = []
+        self.conf = dict(conf or {})
+
+    def getConf(self):
+        return self.conf
 
     def addPyFile(self, path):
         self.added.append(path)
@@ -29,3 +35,19 @@ def test_package_zip_is_staged_in_a_private_dir_once_per_context():
     assert "localmod_spark/__init__.py" in zipfile.ZipFile(zip_path).namelist()
     assert ship_package(sc, REPO) == zip_path
     assert sc.added == [zip_path]
+
+
+def test_stock_daemon_context_gets_the_zip():
+    sc = _Context({"spark.python.daemon.module": "pyspark.daemon"})
+    assert ship_package(sc, REPO) is not None
+    assert len(sc.added) == 1
+
+
+def test_get_spark_session_ships_nothing(spark):
+    """The shared session comes from get_spark on a local master: its
+    workers import the repo's package through the worker daemon."""
+    import __spark_entry__ as em
+
+    em._ship_package(spark)
+    assert ship_package(spark.sparkContext, REPO) is None
+    assert not any("localmod_spark" in p for p in spark.sparkContext._python_includes)

@@ -81,60 +81,6 @@ def test_lsh_multiprobe_expands_candidates(emb, spark):
     bucketed.unpersist()
 
 
-def test_ivf_training_separates_planted_blobs(spark):
-    """Spherical k-means must pull the codebook toward the data: three
-    planted direction-blobs end up in three (near-)pure lists, and
-    within-list cosine-to-centroid improves over the seeded codebook."""
-    import numpy as np
-    from localmod_spark.operators.similarity import (
-        _centroids,
-        train_ivf_centroids,
-        with_ivf_list,
-    )
-
-    rng = np.random.RandomState(9)
-    dirs = rng.randn(3, DIM)
-    dirs /= np.linalg.norm(dirs, axis=1, keepdims=True)
-    rows = []
-    for i in range(240):
-        v = dirs[i % 3] + rng.randn(DIM) * 0.15
-        rows.append((i, [float(x) for x in v]))
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>").persist()
-
-    trained = train_ivf_centroids(df, dim=DIM, n_lists=3, n_iter=8)
-    assert trained.shape == (3, DIM)
-    assert np.allclose(np.linalg.norm(trained, axis=1), 1.0, atol=1e-9)
-
-    assigned = with_ivf_list(df, dim=DIM, n_lists=3, centroids=trained).collect()
-    # purity: each blob (vec_id % 3) maps to one dominant list
-    from collections import Counter
-
-    purity_num = 0
-    for blob in range(3):
-        c = Counter(r.ivf_list for r in assigned if r.vec_id % 3 == blob)
-        purity_num += c.most_common(1)[0][1]
-    assert purity_num / len(assigned) > 0.95
-
-    # objective: mean max-dot under trained centroids beats seeded ones
-    X = np.array([r.embedding for r in assigned], dtype=np.float64)
-    X /= np.linalg.norm(X, axis=1, keepdims=True)
-    seeded = _centroids(DIM, 3, 23)
-    assert (X @ trained.T).max(axis=1).mean() > (X @ seeded.T).max(axis=1).mean() + 0.1
-    df.unpersist()
-
-
-def test_ivf_training_deterministic(spark):
-    import numpy as np
-    from localmod_spark.operators.similarity import train_ivf_centroids
-
-    rng = np.random.RandomState(2)
-    rows = [(i, [float(x) for x in rng.randn(DIM)]) for i in range(100)]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    a = train_ivf_centroids(df, dim=DIM, n_lists=4, n_iter=3)
-    b = train_ivf_centroids(df, dim=DIM, n_lists=4, n_iter=3)
-    assert np.array_equal(a, b)
-
-
 def test_lsh_dups_subset_of_all_pairs(emb, spark):
     """The bucketed near-dup set must be a subset of the exact all-pairs
     set with identical cosines on the intersection (LSH may lose recall,
