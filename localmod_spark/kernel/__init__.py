@@ -14,7 +14,7 @@ and pandas Series so it can serve simultaneously as
   * the oracle in the pytest suite (`python -m pytest -x -q`).
 """
 
-from localmod_spark.kernel.pii import pii_scan, pii_scrub, pii_result
+from localmod_spark.kernel.pii import pii_scan, pii_scrub
 from localmod_spark.kernel.spam import spam_result
 from localmod_spark.kernel.injection import injection_result
 from localmod_spark.kernel.nsfw import nsfw_result
@@ -24,7 +24,6 @@ from localmod_spark.kernel.aggregate import analyze_text, analyze_frame, Pipelin
 __all__ = [
     "pii_scan",
     "pii_scrub",
-    "pii_result",
     "spam_result",
     "injection_result",
     "nsfw_result",

@@ -16,8 +16,9 @@ Two entry points with identical semantics (asserted equal in tests):
   * :func:`analyze_frame` — a pandas Series of texts → a pandas DataFrame,
     one call per Arrow batch inside the ``score_turns`` pandas UDF.  Its
     pattern layers run CPython ``re`` (the reference's engine) only on
-    the rows a literal gate (:mod:`localmod_spark.kernel.literals`)
-    leaves as possible matches.
+    the non-ASCII rows and the ASCII rows each regex's RE2 prefilter
+    (:mod:`localmod_spark.kernel.prefilter`) matches, evaluated once per
+    batch in Arrow; the spam caps test runs in Arrow for ASCII rows too.
 """
 
 from __future__ import annotations
@@ -26,6 +27,7 @@ from typing import Callable, List, Mapping, NamedTuple, Optional
 
 import numpy as np
 import pandas as pd
+import pyarrow.compute as pc
 
 from localmod_spark.kernel import injection as inj_mod
 from localmod_spark.kernel import nsfw as nsfw_mod
@@ -33,7 +35,7 @@ from localmod_spark.kernel import spam as spam_mod
 from localmod_spark.kernel import toxicity as tox_mod
 from localmod_spark.kernel.injection import injection_result
 from localmod_spark.kernel.langid import detect_language
-from localmod_spark.kernel.literals import gated_search, required_literals
+from localmod_spark.kernel.prefilter import AsciiBatch, gate
 from localmod_spark.kernel.nsfw import nsfw_result
 from localmod_spark.kernel.pii import pii_result_from, pii_scrub
 from localmod_spark.kernel.quality import quality_flagged, quality_score, quality_stats
@@ -86,16 +88,17 @@ class PipelineConfig(NamedTuple):
 
 DEFAULT_CONFIG = PipelineConfig()
 
-# Every regex analyze_frame runs → its necessary literals (see
-# kernel/literals.py), derived once per worker at import from the
-# pattern's own parse tree.
-GATE_LITERALS = {
-    p: required_literals(p)
+# Every regex analyze_frame runs → its gate: the RE2 prefilter of
+# kernel/prefilter.py, built once per worker at import from the regex's
+# own parse tree.  The NSFW keyword scans read lowered text, so their
+# prefilters are built over lowered characters.
+_LOWERED_SCANS = (nsfw_mod._KEYWORD_ALT, nsfw_mod._SUGGESTIVE_ALT)
+GATES = {
+    p: gate(p, lowered=p in _LOWERED_SCANS)
     for p in (
         *(p for _, p, _ in spam_mod._COMPILED),
         *(p for _, p in inj_mod._CAT_ALT),
-        nsfw_mod._KEYWORD_ALT,
-        nsfw_mod._SUGGESTIVE_ALT,
+        *_LOWERED_SCANS,
         nsfw_mod._SAFE_ALT,
     )
 }
@@ -284,16 +287,30 @@ def _severity_bands(conf: np.ndarray, flagged: np.ndarray, bands) -> np.ndarray:
     return out
 
 
+def _caps_over_half(batch: AsciiBatch) -> np.ndarray:
+    """``spam.caps_ratio(t) > 0.5`` per row.  On ASCII text ``str.isupper``
+    is ``[A-Z]``, so Arrow decides the ASCII rows as
+    ``2·count([A-Z]) > length``; non-ASCII rows keep ``str.isupper``."""
+    out = np.empty(len(batch.texts), dtype=bool)
+    upper = pc.count_substring_regex(batch.arrow, pattern="[A-Z]")
+    over = pc.greater(pc.multiply(upper, 2), pc.utf8_length(batch.arrow))
+    out[batch.ascii] = over.to_numpy(zero_copy_only=False)
+    out[~batch.ascii] = [spam_mod.caps_ratio(t) > 0.5 for t in batch.texts[~batch.ascii]]
+    return out
+
+
 def analyze_frame(texts: pd.Series, cfg: PipelineConfig = DEFAULT_CONFIG) -> pd.DataFrame:
     """Vectorized batch scoring: one call per Arrow batch on executors.
 
-    Pattern layers (spam/injection/nsfw) run each regex only on its
-    candidate rows: non-ASCII rows and rows whose lowered text contains
-    one of the pattern's :data:`GATE_LITERALS`; every other row provably
-    has no match.  PII scan/scrub, toxicity lexicon, langid and quality
-    run as tight per-text loops over the batch (regex-backtracking-bound
-    work that cannot be expressed columnar) — still one Python roundtrip
-    per thousands of rows, never a per-row UDF.
+    Pattern layers (spam/injection/nsfw) run each regex in CPython ``re``
+    only on its candidate rows: the non-ASCII rows and the ASCII rows its
+    :data:`GATES` prefilter matches, one RE2 pass per regex over the
+    batch's ASCII rows as an Arrow array; every other row provably has no
+    match.  The spam caps test is decided in Arrow for ASCII rows.  PII
+    scan/scrub, toxicity lexicon, langid and quality run as tight
+    per-text loops over the batch (regex-backtracking-bound work that
+    cannot be expressed columnar) — still one Python roundtrip per
+    thousands of rows, never a per-row UDF.
     """
     raw = texts
     s = texts.fillna("").astype(str)
@@ -321,26 +338,20 @@ def analyze_frame(texts: pd.Series, cfg: PipelineConfig = DEFAULT_CONFIG) -> pd.
             out[nz] = np.fromiter((fn(t) for t in s_arr[nz]), dtype=float, count=k)
         return out
 
-    # the literals' space: lowered text (the NSFW scans' own input, and
-    # what IGNORECASE literals are checked against)
-    lowered = np.fromiter(map(str.lower, s_arr), dtype=object, count=n)
-    non_ascii = ~np.fromiter(map(str.isascii, s_arr), dtype=bool, count=n)
+    batch = AsciiBatch(s_arr)
 
-    def _search(pattern, scanned: np.ndarray, rows: Optional[np.ndarray] = None) -> np.ndarray:
-        return gated_search(pattern, GATE_LITERALS[pattern], scanned, lowered, non_ascii, rows)
+    def _search(pattern, rows: Optional[np.ndarray] = None) -> np.ndarray:
+        return batch.search(GATES[pattern], rows)
 
-    # ---- spam (gated patterns + per-text caps ratio) ----
+    # ---- spam (gated patterns + caps ratio) ----
     spam_score = np.zeros(n)
     spam_masks = []
     if "spam" in enabled:
         for name, pattern, weight in spam_mod._COMPILED:
-            m = _search(pattern, s_arr)
+            m = _search(pattern)
             spam_masks.append((name, m))
             spam_score += np.where(m, weight, 0.0)
-        caps = np.fromiter(
-            (spam_mod.caps_ratio(t) for t in s_arr), dtype=float, count=n
-        )
-        caps_mask = caps > 0.5
+        caps_mask = _caps_over_half(batch)
         spam_masks.append(("high_caps_ratio", caps_mask))
         spam_score = np.minimum(spam_score + np.where(caps_mask, 0.15, 0.0), 1.0)
         if cfg.spam_ml_fn is not None:  # `spam.py:102-105` blend
@@ -354,7 +365,7 @@ def analyze_frame(texts: pd.Series, cfg: PipelineConfig = DEFAULT_CONFIG) -> pd.
     inj_critical = np.zeros(n, dtype=bool)
     if "prompt_injection" in enabled:
         for cat, alt in inj_mod._CAT_ALT:
-            inj_cat_masks.append((cat, _search(alt, s_arr)))
+            inj_cat_masks.append((cat, _search(alt)))
         inj_n = np.sum([m for _, m in inj_cat_masks], axis=0)
         inj_score = np.where(inj_n > 0, np.minimum(inj_n * 0.3, 0.9), 0.0)
         if cfg.injection_ml_fn is not None:  # `prompt_injection.py:128-132`
@@ -371,11 +382,11 @@ def analyze_frame(texts: pd.Series, cfg: PipelineConfig = DEFAULT_CONFIG) -> pd.
     # ---- nsfw (gated keyword/safe layers + model-or-surrogate prob) ----
     nsfw_prob = np.zeros(n)
     if "nsfw" in enabled:
-        explicit = _search(nsfw_mod._KEYWORD_ALT, lowered)
+        explicit = _search(nsfw_mod._KEYWORD_ALT)
         if cfg.nsfw_prob_fn is not None:
             # model path: the prob can exceed 0.5 anywhere, so the safe
             # scan covers the whole batch
-            safe = _search(nsfw_mod._SAFE_ALT, s_arr) & ~explicit  # `nsfw.py:82-87`
+            safe = _search(nsfw_mod._SAFE_ALT) & ~explicit  # `nsfw.py:82-87`
             nsfw_prob = _ml_probs(cfg.nsfw_prob_fn)
         else:
             # surrogate path, decision-gated scans: suggestive only ever
@@ -383,10 +394,10 @@ def analyze_frame(texts: pd.Series, cfg: PipelineConfig = DEFAULT_CONFIG) -> pd.
             # override only fires where prob > 0.5 — i.e. only on
             # explicit/suggestive rows (everything else scores 0.03) —
             # so both regexes run on those slices only, truth-identical
-            suggestive = _search(nsfw_mod._SUGGESTIVE_ALT, lowered, ~explicit)
+            suggestive = _search(nsfw_mod._SUGGESTIVE_ALT, ~explicit)
             nsfw_prob = np.where(explicit, 0.97, np.where(suggestive, 0.55, 0.03))
             # `safe` is masked by ~explicit anyway
-            safe = _search(nsfw_mod._SAFE_ALT, s_arr, ~explicit & suggestive)
+            safe = _search(nsfw_mod._SAFE_ALT, ~explicit & suggestive)
         nsfw_prob = np.where(  # `nsfw.py:127-129`
             safe & (nsfw_prob > 0.5), np.minimum(nsfw_prob * 0.1, 0.3), nsfw_prob
         )

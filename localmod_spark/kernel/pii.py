@@ -174,7 +174,10 @@ def _pii_severity(hits: List[PIIHit]) -> str:
 
 
 def pii_categories_from(hits: List[PIIHit]) -> tuple:
-    """Distinct detected types in first-seen order (see pii_result note)."""
+    """Distinct detected types in first-seen order.  The reference builds
+    ``list(set(...))`` (`src/localmod/classifiers/pii.py:88`), whose order
+    is unspecified, so categories never feed an ordered decision there
+    either; first-seen order makes them deterministic."""
     seen: List[str] = []
     for h in hits:
         if h.type not in seen:
@@ -183,8 +186,10 @@ def pii_categories_from(hits: List[PIIHit]) -> tuple:
 
 
 def pii_result_from(text: str, hits: List[PIIHit]) -> KernelResult:
-    """Verdict from an existing scan — lets callers that already scrubbed
-    (and therefore scanned) avoid a second full regex pass."""
+    """Full PII verdict (`src/localmod/classifiers/pii.py:69-111`) from an
+    existing scan, so callers that already scrubbed (and therefore
+    scanned) make no second regex pass: flagged iff any hit, confidence
+    1.0/0.0, categories = distinct types."""
     if is_blank(text):
         return KernelResult("pii", False, 0.0, NONE, ())
     flagged = len(hits) > 0
@@ -196,14 +201,3 @@ def pii_result_from(text: str, hits: List[PIIHit]) -> KernelResult:
         pii_categories_from(hits),
     )
 
-
-def pii_result(text: str) -> KernelResult:
-    """Full PII verdict (`src/localmod/classifiers/pii.py:69-111`):
-    flagged iff any hit, confidence 1.0/0.0, categories = distinct types.
-
-    Category ordering: the reference builds ``list(set(...))`` (`pii.py:88`)
-    — set order is unspecified, so categories never feed ordered output in
-    the reference either (the summary joins them, but only the *flag* and
-    severity gate decisions).  We use first-seen order for determinism.
-    """
-    return pii_result_from(text, [] if is_blank(text) else pii_scan(text))

@@ -32,7 +32,7 @@ _COMPILED = [(n, re.compile(p, re.IGNORECASE), w) for n, p, w in _SPAM_SPECS]
 # No union prescreen: ``excessive_caps`` is ``[A-Z]{5,}`` under IGNORECASE
 # (the reference's flags), so it matches any five letters and a union of
 # the specs passes nearly every row.  The vectorized path gates each
-# pattern on its own necessary literals instead (kernel/literals.py).
+# pattern on its own RE2 prefilter instead (kernel/prefilter.py).
 
 DEFAULT_THRESHOLD = 0.3  # pattern-only config, `tests/test_classifiers/test_spam.py:14`
 

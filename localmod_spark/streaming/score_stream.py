@@ -7,9 +7,7 @@ keys the corpus Bloom artifact has never seen, verifying the bloom's
 "maybe" rows exactly against the admitted dirs, lands them under
 ``run=<query-id>/batch=<id>`` and extends the artifact
 (:func:`ingest_bloom_stream`).  An optional ``transform_fn`` scores the
-admitted rows before they land.  :func:`compact_ingest_corpus` folds the
-accumulated per-batch dirs into one recorded corpus dir while the
-stream is stopped.
+admitted rows before they land.
 """
 
 from __future__ import annotations
@@ -297,99 +295,3 @@ def ingest_bloom_stream(
         w = w.trigger(availableNow=True)
     return w.start()
 
-
-def compact_ingest_corpus(
-    spark,
-    out_dir: str,
-    dest_dir: str,
-    bloom_dir: str,
-    key_col: str = "text",
-) -> dict:
-    """Compact an ingest stream's accumulated ``run=*/batch=*`` dirs into
-    ONE parquet dir and record it in the bloom artifact's covered
-    ``corpus_dirs`` — the periodic maintenance that keeps a long-lived
-    ingest from re-listing thousands of tiny per-batch dirs on every
-    maybe-path verification.  Run ONLY with the stream stopped.
-
-    Crash-safe order:
-
-      1. rewrite every admitted row into ``dest_dir`` (overwrite);
-      2. save the artifact with ``dest_dir`` folded into corpus_dirs and
-         n_keys RECOUNTED exactly (count_distinct over the full recorded
-         corpus — this also repairs any upper-bound drift the per-batch
-         bookkeeping accumulated);
-      3. delete the run dirs.
-
-    Die after (1): dest exists but unrecorded, run dirs intact — the
-    verification corpus is still complete and a re-run (with a FRESH
-    dest_dir; reusing a recorded one is refused) re-copies the rows.
-    Die after (2): the keys exist in BOTH the recorded dest and the run
-    dirs — duplicates are harmless to an anti-join; a re-run deletes the
-    leftovers.  An uncommitted tail batch whose dir gets compacted
-    re-admits nothing on retry: its keys verify against dest, and its
-    bits are folded into the filter here (step 2 extends before saving —
-    the (3)-(4) ingest crash window leaves keys OUT of the bits, and
-    compaction must not let them bypass verification as definitely-new).
-
-    Returns {"compacted_dirs", "rows", "n_keys"}."""
-    from localmod_spark.operators.bloom import extend_bloom, load_bloom, save_bloom
-    from localmod_spark.plans.pipeline import _hadoop_fs
-
-    bloom, params = load_bloom(spark, bloom_dir)
-    bound = params.get("bound_out_dir")
-    if bound is not None and bound != out_dir:
-        raise ValueError(
-            f"bloom artifact {bloom_dir} is bound to {bound!r}, not {out_dir!r}"
-        )
-    recorded_now = set(d for d in (params.get("corpus_dirs") or "").split(",") if d)
-    fs, _ = _hadoop_fs(spark, out_dir)
-    jpath = spark._jvm.org.apache.hadoop.fs.Path
-    # dest may live on a different filesystem than out_dir — resolve its
-    # own FS for the existence probe
-    dest_fs, _ = _hadoop_fs(spark, dest_dir)
-    if dest_dir in recorded_now or dest_fs.exists(jpath(dest_dir)):
-        # overwriting a recorded corpus dir would DESTROY previously
-        # admitted rows while the bloom bits still cover their keys
-        raise ValueError(
-            f"compaction dest {dest_dir!r} already exists or is a recorded "
-            "corpus dir — pass a fresh dest per compaction"
-        )
-    run_dirs = _ingest_batch_dirs(spark, out_dir)
-    if not run_dirs:
-        return {"compacted_dirs": 0, "rows": 0, "n_keys": params["n_keys"]}
-    rows = spark.read.parquet(*run_dirs)
-    rows.write.mode("overwrite").parquet(dest_dir)
-    n_rows = spark.read.parquet(dest_dir).count()
-    new_dirs = sorted(recorded_now | {dest_dir})
-    n_keys = (
-        spark.read.parquet(*new_dirs)
-        .select(key_col)
-        .where(F.col(key_col).isNotNull())
-        .select(F.count_distinct(key_col).alias("n"))
-        .first()["n"]
-    )
-    save_bloom(
-        # fold the compacted keys' bits in: an uncommitted tail batch's
-        # keys may be missing from the filter (ingest died between its
-        # data write and its save) and must not probe definitely-new
-        extend_bloom(
-            bloom,
-            spark.read.parquet(dest_dir),
-            key_col,
-            num_bits=params["num_bits"],
-            k=params["k"],
-            seed=params["seed"],
-        ),
-        bloom_dir,
-        num_bits=params["num_bits"],
-        k=params["k"],
-        seed=params["seed"],
-        n_keys=n_keys,
-        last_batch=params.get("last_batch"),
-        bound_out_dir=bound or out_dir,
-        corpus_dirs=",".join(new_dirs),
-    )
-    for st in fs.listStatus(jpath(out_dir)):
-        if st.isDirectory() and st.getPath().getName().startswith("run="):
-            fs.delete(st.getPath(), True)
-    return {"compacted_dirs": len(run_dirs), "rows": n_rows, "n_keys": n_keys}

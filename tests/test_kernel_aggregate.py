@@ -6,10 +6,15 @@ import re
 import string
 
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 import pytest
 
-from localmod_spark.kernel.aggregate import OUTPUT_COLUMNS, analyze_frame, analyze_text
-from localmod_spark.kernel.literals import required_literals
+from localmod_spark.kernel import injection as inj_mod
+from localmod_spark.kernel import nsfw as nsfw_mod
+from localmod_spark.kernel import spam as spam_mod
+from localmod_spark.kernel.aggregate import GATES, OUTPUT_COLUMNS, analyze_frame, analyze_text
+from localmod_spark.kernel.prefilter import re2_prefilter
 from localmod_spark.sources.transcripts import CORPUS
 
 
@@ -113,26 +118,73 @@ def test_config_from_env_overrides_and_defaults():
     assert not analyze_text(t, cfg2._replace(toxicity_threshold=0.99))["tox_flagged"]
 
 
+def _re2_matches(source, texts):
+    return pc.match_substring_regex(pa.array(list(texts), pa.string()), pattern=source).to_pylist()
+
+
+# want: (ASCII texts the prefilter must match, ASCII texts it must not
+# match), or None when the pattern has no prefilter
 @pytest.mark.parametrize(
     "pattern, flags, want",
     [
-        ("[A-Z]{5,}", re.IGNORECASE, None),  # a range: no literal
-        ("[$€£¥]\\s*\\d+", 0, ("$",)),  # only '$' can match in ASCII text
-        ("ſ", re.IGNORECASE, ("s",)),  # long s folds onto s/S
-        ("K", re.IGNORECASE, ("k",)),  # Kelvin sign folds onto k/K
-        ("ſ", 0, ()),  # no ASCII text can match
-        ("Hello", re.IGNORECASE, ("hello",)),  # IGNORECASE: lowered space
-        ("Hello", 0, ("Hello",)),
-        ("\\bact\\s+now\\b", re.IGNORECASE, ("act",)),  # anchors, categories split runs
-        ("click\\s+here", 0, ("click",)),  # the longest shortest string wins
-        ("you(?!going)", 0, ("you",)),  # a lookaround adds nothing
-        ("ab|c", 0, ("ab", "c")),
-        ("ab|c*", 0, None),  # one alternative without a literal
-        ("x?yz", 0, ("yz",)),  # min 0 repeat: no literal
-        ("(?:ab){2,}", 0, ("ab",)),
-        ("nude|nudes", 0, ("nude",)),  # a superstring adds no row
-        ("(?i:ab)c", 0, ("c",)),  # a local flag change: no literal inside
+        ("[A-Z]{5,}", re.IGNORECASE, (("abcde", "xABCDE"), ("abcd", "ab cde"))),
+        ("[$€£¥]\\s*\\d+", 0, (("$ 5", "$\x0b5"), ("5$", "$x5"))),  # only '$' is ASCII
+        ("ſ", re.IGNORECASE, (("s", "S"), ("t",))),  # long s folds onto s/S
+        ("K", re.IGNORECASE, (("k", "K"), ("x",))),  # Kelvin sign folds onto k/K
+        ("ſ", 0, ((), ("s", "S", ""))),  # no ASCII text can match
+        ("Hello", re.IGNORECASE, (("hello", "HeLLo"), ("hell",))),
+        ("Hello", 0, (("Hello",), ("hello",))),
+        ("\\bact\\s+now\\b", re.IGNORECASE, (("ACT\x0bnow", "act \x1c now"), ("react now", "act nowhere", "act_now"))),
+        ("click\\s+here", 0, (("click\x1fhere", "click\x1dhere"), ("clickhere",))),  # Python's \s
+        ("you(?!going)", 0, (("yougoing",), ("yo",))),  # a lookahead is dropped
+        ("ab|c", 0, (("ab", "c"), ("a", "b"))),
+        ("ab|c*", 0, (("", "z"), ())),  # matches the empty string
+        ("x?yz", 0, (("yz", "xyz"), ("xz",))),
+        ("(?:ab){2,}", 0, (("abab",), ("ab", "aba b"))),
+        ("nude|nudes", 0, (("nudes",), ("nud",))),
+        ("(?i:ab)c", 0, (("ABc",), ("ABC",))),  # a local flag group
+        ("a$", 0, (("a\n", "ab"), ("b",))),  # $ before a final newline: anchors drop
+        ("\\s", 0, (("\x0b", "\x1c", "\x1d", "\x1e", "\x1f"), ("a", "_"))),
+        ("[\\s\\S]x", 0, (("\nx",), ("x",))),  # a class of complementary categories
+        ("\\bDAN\\b", re.IGNORECASE, (("dan.", "a dan"), ("dan_", "1dan", "dan2"))),
+        ("[^a]", re.IGNORECASE, (("b",), ("a", "A", ""))),
+        (".", 0, (("a",), ("\n", ""))),
+        ("(a)\\1", 0, None),  # a backreference
+        ("a{1001}", 0, None),  # above RE2's repeat limit
+        ("(?>ab)c", 0, None),  # an atomic group
     ],
 )
 def test_required_literals_rules(pattern, flags, want):
-    assert required_literals(re.compile(pattern, flags)) == want
+    """The RE2 prefilter's rules (kernel/prefilter.py), row by row; every
+    text a row lists that Python matches, RE2 must match too."""
+    compiled = re.compile(pattern, flags)
+    source = re2_prefilter(compiled)
+    if want is None:
+        assert source is None
+        return
+    matched, unmatched = want
+    assert _re2_matches(source, matched) == [True] * len(matched)
+    assert _re2_matches(source, unmatched) == [False] * len(unmatched)
+    assert all(compiled.search(t) is None for t in unmatched)
+
+
+def test_lowered_prefilter_decides_the_lowered_scan():
+    """A lowered prefilter matches, over the original text, what the
+    pattern matches on the lowered text."""
+    compiled = re.compile("nsfw|k")  # case-sensitive, scanned lowered
+    source = re2_prefilter(compiled, lowered=True)
+    assert _re2_matches(source, ["NSFW", "nSfW", "K", "x"]) == [True, True, True, False]
+    assert _re2_matches(re2_prefilter(compiled), ["NSFW", "K"]) == [False, False]
+
+
+def test_every_kernel_pattern_has_a_prefilter_re2_compiles():
+    """A pattern edit that loses the prefilter would silently scan every
+    row in CPython ``re``."""
+    assert set(GATES) == {
+        *(p for _, p, _ in spam_mod._COMPILED),
+        *(p for _, p in inj_mod._CAT_ALT),
+        nsfw_mod._KEYWORD_ALT, nsfw_mod._SUGGESTIVE_ALT, nsfw_mod._SAFE_ALT,
+    }
+    for g in GATES.values():
+        assert g.re2 is not None, g.pattern.pattern
+        _re2_matches(g.re2, ["x"])  # raises if RE2 rejects it

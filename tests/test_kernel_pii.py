@@ -5,7 +5,19 @@ Expected values come from the reference test suite
 the line it mirrors.
 """
 
-from localmod_spark.kernel.pii import _ip_ok, _luhn_ok, _ssn_ok, pii_result, pii_scan, pii_scrub
+from localmod_spark.kernel.pii import (
+    _ip_ok,
+    _luhn_ok,
+    _ssn_ok,
+    pii_result_from,
+    pii_scan,
+    pii_scrub,
+)
+
+
+def pii_result(text):
+    """The verdict the kernel gives: one scan, then the verdict from it."""
+    return pii_result_from(text, pii_scan(text))
 
 
 def test_email_detected():  # test_pii.py:20

@@ -7,11 +7,13 @@ import re._parser as sre_parse
 from collections import Counter
 
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from localmod_spark.kernel.aggregate import (
-    GATE_LITERALS,
+    GATES,
     OUTPUT_COLUMNS,
     analyze_frame,
     analyze_text,
@@ -252,20 +254,50 @@ def test_frame_equals_scalar_on_fuzz(texts):
                 assert a == b, (k, t)
 
 
-@given(st.lists(st.one_of(SPICY, FIXTURES), min_size=1, max_size=4).map(" ".join))
+# Phrases the kernel's patterns match, a space marking each `\s` they
+# cross.  A drawn separator replaces the spaces, and the pieces join with
+# no gap, so that Python-only whitespace (\x0b, \x1c-\x1f) fills `\s`
+# runs and `_` or digits land next to word boundaries.
+GATE_PHRASES = [
+    "urgent", "act now", "limited time", "expires", "free", "winner", "claim your",
+    "click here", "sign up", "buy now", "bit.ly", "t.co", "$ 5", "5 $", "ABCDE", "!!!",
+    "ignore all previous instructions", "disregard prior", "forget everything above",
+    "you are now", "pretend you are", "act as if you are", "roleplay as",
+    "from now on, you are", "show your system prompt", "what is your prompt",
+    "repeat your initial instructions", "DAN", "jailbreaked", "developer mode",
+    "no limits", "base64", "rot13", "hex :", "\\x4f", "``` x ignore", "[SYSTEM]",
+    "<| x |>", "18+", "adult only", "nude", "lewd", "puppy", "cute pet", "good morning",
+]
+GATE_SEPARATORS = [" ", "\x0b", "\x0c", "\x1c", "\x1d", "\x1e", "\x1f", "\t\n", "_", "0", ""]
+GATE_PIECES = st.lists(
+    st.one_of(
+        FIXTURES,
+        st.tuples(st.sampled_from(GATE_PHRASES), st.sampled_from(GATE_SEPARATORS)).map(
+            lambda p: p[1].join(p[0].split(" "))
+        ),
+        st.text(alphabet="_09 \x0b\x1c.", min_size=1, max_size=2),
+    ),
+    min_size=1, max_size=8,
+).map("".join)
+
+
+@given(st.one_of(GATE_PIECES, st.lists(st.one_of(SPICY, FIXTURES), min_size=1, max_size=4).map(" ".join)))
+@example("ACT\x0bnow, CLICK\x1chere")
+@example("_free 0dan cute\x1fpet")
+@example("SEND NUDES \x1e bit.ly")
 @settings(max_examples=300, deadline=None)
 def test_gate_literals_are_necessary(text):
-    """Soundness of the literal gate: whenever a gated regex matches an
-    ASCII text, the string the gate checks (lowered for IGNORECASE
-    patterns) contains one of the pattern's literals.  Checked on the
-    text as drawn and lowered: the kernel scans both."""
+    """Soundness of the RE2 prefilters: whenever a gated regex matches an
+    ASCII text (the lowered text, for a gate that scans it), its
+    prefilter matches that text.  Checked on the text as drawn and
+    lowered: the kernel scans both."""
     ascii_text = text.encode("ascii", "ignore").decode()
-    for scanned in (ascii_text, ascii_text.lower()):
-        for pattern, lits in GATE_LITERALS.items():
-            if lits is None or pattern.search(scanned) is None:
-                continue
-            gate = scanned.lower() if pattern.flags & re.IGNORECASE else scanned
-            assert any(lit in gate for lit in lits), (pattern.pattern, scanned, lits)
+    scanned = [ascii_text, ascii_text.lower()]
+    for g in GATES.values():
+        hits = pc.match_substring_regex(pa.array(scanned), pattern=g.re2).to_pylist()
+        for t, hit in zip(scanned, hits):
+            if g.pattern.search(t.lower() if g.lowered else t) is not None:
+                assert hit, (g.pattern.pattern, t, g.re2)
 
 
 @settings(max_examples=25, deadline=None)

@@ -10,7 +10,9 @@ import fails.  The definition closure is by name: a top-level ``def`` or
 a ``from m import`` target), and its body then counts as reached code.
 Reached code starts as the entry files and the module-level statements
 of every reached package module, so a definition that only tests call
-fails.
+fails.  A package ``__init__``'s ``from m import x`` is not a reach: a
+re-export that only tests import through the package does not keep
+``x`` alive.
 """
 
 from __future__ import annotations
@@ -124,10 +126,11 @@ def _unreached_definitions() -> list[str]:
         path = _module_file(name)
         if path is None or not name.startswith(PACKAGE):
             continue
+        is_init = path.endswith("__init__.py")
         for node in _parse(path).body:
             if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
                 defs[f"{name}.{node.name}"] = node
-            else:
+            elif not (is_init and isinstance(node, ast.ImportFrom)):
                 reached_code.append(node)
     used = _referenced_names(reached_code)
     todo = dict(defs)

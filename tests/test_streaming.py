@@ -137,66 +137,6 @@ def test_ingest_bloom_stream_checkpoint_reset_and_wrong_outdir(spark, tmp_path_f
     assert load_bloom(spark, art)[1]["n_keys"] == 5
 
 
-def test_compact_ingest_corpus_preserves_dedup_and_counters(spark, tmp_path_factory):
-    """Compaction folds run=*/batch=* into one recorded corpus dir: rows
-    preserved, run dirs gone, n_keys recounted exactly — and a follow-up
-    ingest still dedups against the compacted corpus."""
-    from localmod_spark.operators.bloom import load_bloom
-    from localmod_spark.streaming import compact_ingest_corpus, ingest_bloom_stream
-
-    root = tmp_path_factory.mktemp("bloom_compact")
-    src, out, art = str(root / "src"), str(root / "out"), str(root / "bloom")
-    dest = str(root / "corpus_0001")
-
-    def write_file(name, texts):
-        spark.createDataFrame(
-            [(f"{name}-{i}", t) for i, t in enumerate(texts)], "msg_id string, text string"
-        ).coalesce(1).write.mode("overwrite").parquet(f"{src}/{name}")
-
-    def run(ckpt):
-        stream = (
-            spark.readStream.schema("msg_id string, text string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src + "/*")
-        )
-        q = ingest_bloom_stream(
-            stream, out, ckpt, art, key_col="text", num_bits=1 << 14, k=3
-        )
-        q.awaitTermination(180)
-
-    write_file("f0", ["alpha", "beta"])
-    write_file("f1", ["beta", "gamma"])
-    run(str(root / "ckpt1"))
-    assert load_bloom(spark, art)[1]["n_keys"] == 3
-
-    res = compact_ingest_corpus(spark, out, dest, art, key_col="text")
-    assert res == {"compacted_dirs": 2, "rows": 3, "n_keys": 3}
-    import glob
-
-    assert glob.glob(out + "/run=*") == []
-    assert sorted(r.text for r in spark.read.parquet(dest).collect()) == [
-        "alpha", "beta", "gamma",
-    ]
-    params = load_bloom(spark, art)[1]
-    assert params["corpus_dirs"] and dest in params["corpus_dirs"]
-
-    # follow-up ingest (fresh checkpoint — the old batch dirs are gone):
-    # redelivered keys verify against the compacted corpus, new key lands
-    write_file("f2", ["gamma", "delta"])
-    run(str(root / "ckpt2"))
-    admitted = sorted(
-        r.text for r in spark.read.parquet(out + "/run=*/batch=*").collect()
-    )
-    assert admitted == ["delta"]
-    assert load_bloom(spark, art)[1]["n_keys"] == 4
-
-    # idempotent no-op when nothing to compact... after compacting again
-    res2 = compact_ingest_corpus(spark, out, str(root / "corpus_0002"), art)
-    assert res2["rows"] == 1 and res2["n_keys"] == 4
-    res3 = compact_ingest_corpus(spark, out, str(root / "corpus_0003"), art)
-    assert res3 == {"compacted_dirs": 0, "rows": 0, "n_keys": 4}
-
-
 def test_ingest_bloom_stream_transform_scores_admitted_rows(spark, tmp_path_factory):
     """gate → score → land: transform_fn runs the fused scoring stage on
     admitted rows only; landed rows keep the key column (they ARE the
@@ -234,64 +174,3 @@ def test_ingest_bloom_stream_transform_scores_admitted_rows(spark, tmp_path_fact
         q2.awaitTermination(180)
         q2.processAllAvailable()
     assert "must keep the key" in str(ei.value)
-
-
-def test_compact_ingest_corpus_crash_windows(spark, tmp_path_factory):
-    """Compaction repairs the ingest's (3)-(4) window and its own record
-    survives a later marker-window crash: (a) a tail batch dir whose keys
-    never reached the bloom bits is folded in by compaction, so its keys
-    are not re-admitted; (b) reusing a recorded dest is refused; (c) a
-    post-compaction params wipe self-heals WITH the compacted corpus."""
-    import shutil
-
-    from localmod_spark.operators.bloom import load_bloom
-    from localmod_spark.streaming import compact_ingest_corpus, ingest_bloom_stream
-
-    root = tmp_path_factory.mktemp("bloom_cwin")
-    src, out, art = str(root / "src"), str(root / "out"), str(root / "bloom")
-    dest = str(root / "corpus_0001")
-
-    def write_file(name, texts):
-        spark.createDataFrame(
-            [(f"{name}-{i}", t) for i, t in enumerate(texts)], "msg_id string, text string"
-        ).coalesce(1).write.mode("overwrite").parquet(f"{src}/{name}")
-
-    def run(ckpt):
-        q = ingest_bloom_stream(
-            spark.readStream.schema("msg_id string, text string").parquet(src + "/*"),
-            out, ckpt, art, key_col="text", num_bits=1 << 14, k=3,
-        )
-        q.awaitTermination(180)
-
-    write_file("f0", ["alpha", "beta"])
-    run(str(root / "ckpt1"))
-
-    # (a) simulate a crash between the data write and the bloom save: a
-    # batch dir exists whose key never entered the bits
-    spark.createDataFrame(
-        [("x-0", "orphan")], "msg_id string, text string"
-    ).write.mode("overwrite").parquet(out + "/run=deadrun/batch=9")
-    res = compact_ingest_corpus(spark, out, dest, art, key_col="text")
-    assert res["rows"] == 3 and res["n_keys"] == 3  # orphan counted exactly
-    write_file("f1", ["orphan", "zeta"])
-    run(str(root / "ckpt2"))
-    admitted = sorted(
-        r.text for r in spark.read.parquet(out + "/run=*/batch=*").collect()
-    )
-    assert admitted == ["zeta"]  # orphan probed maybe (bits folded) + verified
-
-    # (b) a recorded dest cannot be overwritten
-    with pytest.raises(ValueError, match="fresh dest"):
-        compact_ingest_corpus(spark, out, dest, art, key_col="text")
-
-    # (c) params wiped after compaction: heal must keep the compacted
-    # corpus via the sidecar — redelivered keys stay rejected
-    shutil.rmtree(art + "/_bloom_params")
-    write_file("f2", ["beta", "omega"])
-    run(str(root / "ckpt3"))
-    final = sorted(
-        r.text for r in spark.read.parquet(out + "/run=*/batch=*").collect()
-    )
-    assert final == ["omega", "zeta"]
-    params = load_bloom(spark, art)[1]
-    assert params["n_keys"] == 5 and dest in (params["corpus_dirs"] or "")
