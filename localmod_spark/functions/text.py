@@ -19,9 +19,10 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from localmod_spark.kernel.langid import detect_language
+from localmod_spark.kernel.langid import detect_language_batch
 from localmod_spark.kernel.pii import pii_scrub
-from localmod_spark.kernel.quality import quality_flagged, quality_score, quality_stats
+from localmod_spark.kernel.prefilter import AsciiBatch
+from localmod_spark.kernel.quality import quality_flagged, quality_score, quality_stats_batch
 
 PII_SCRUB_TYPE = StructType(
     [
@@ -56,11 +57,7 @@ LANGID_TYPE = StructType(
 
 @F.pandas_udf(LANGID_TYPE)
 def langid_udf(texts: pd.Series) -> pd.DataFrame:
-    langs, confs = [], []
-    for t in texts.fillna(""):
-        lg, c = detect_language(t)
-        langs.append(lg)
-        confs.append(c)
+    langs, confs = detect_language_batch(AsciiBatch(texts.fillna("").astype(str).to_numpy()))
     return pd.DataFrame({"lang": langs, "lang_conf": confs})
 
 
@@ -76,15 +73,14 @@ QUALITY_TYPE = StructType(
 
 @F.pandas_udf(QUALITY_TYPE)
 def quality_udf(texts: pd.Series) -> pd.DataFrame:
-    ppl, qs, qf, nt = [], [], [], []
-    for t in texts.fillna(""):
-        st = quality_stats(t)
-        ppl.append(st.perplexity)
-        qs.append(quality_score(st))
-        qf.append(bool(quality_flagged(st)))
-        nt.append(st.n_tokens)
+    stats = quality_stats_batch(AsciiBatch(texts.fillna("").astype(str).to_numpy()))
     return pd.DataFrame(
-        {"perplexity": ppl, "quality_score": qs, "quality_flagged": qf, "n_tokens": nt}
+        {
+            "perplexity": [st.perplexity for st in stats],
+            "quality_score": [quality_score(st) for st in stats],
+            "quality_flagged": [bool(quality_flagged(st)) for st in stats],
+            "n_tokens": [st.n_tokens for st in stats],
+        }
     )
 
 

@@ -18,7 +18,11 @@ Two entry points with identical semantics (asserted equal in tests):
     pattern layers run CPython ``re`` (the reference's engine) only on
     the non-ASCII rows and the ASCII rows each regex's RE2 prefilter
     (:mod:`localmod_spark.kernel.prefilter`) matches, evaluated once per
-    batch in Arrow; the spam caps test runs in Arrow for ASCII rows too.
+    batch in Arrow.  The toxicity lexicon and PII are gated the same way
+    (a lexicon token; a digit or an '@'), the spam caps test is decided
+    in Arrow, and langid and quality decide the ASCII rows from one Arrow
+    token pass each over the batch's bytes.  Non-ASCII rows run the
+    per-text functions :func:`analyze_text` runs.
 """
 
 from __future__ import annotations
@@ -34,11 +38,16 @@ from localmod_spark.kernel import nsfw as nsfw_mod
 from localmod_spark.kernel import spam as spam_mod
 from localmod_spark.kernel import toxicity as tox_mod
 from localmod_spark.kernel.injection import injection_result
-from localmod_spark.kernel.langid import detect_language
+from localmod_spark.kernel.langid import detect_language, detect_language_batch
 from localmod_spark.kernel.prefilter import AsciiBatch, gate
 from localmod_spark.kernel.nsfw import nsfw_result
-from localmod_spark.kernel.pii import pii_result_from, pii_scrub
-from localmod_spark.kernel.quality import quality_flagged, quality_score, quality_stats
+from localmod_spark.kernel.pii import pii_result_from, pii_scrub, scan_rows
+from localmod_spark.kernel.quality import (
+    quality_flagged,
+    quality_score,
+    quality_stats,
+    quality_stats_batch,
+)
 from localmod_spark.kernel.spam import spam_result
 from localmod_spark.kernel.toxicity import toxicity_result
 from localmod_spark.kernel.types import NONE, SEVERITY_RANK, KernelResult, max_severity
@@ -306,11 +315,13 @@ def analyze_frame(texts: pd.Series, cfg: PipelineConfig = DEFAULT_CONFIG) -> pd.
     only on its candidate rows: the non-ASCII rows and the ASCII rows its
     :data:`GATES` prefilter matches, one RE2 pass per regex over the
     batch's ASCII rows as an Arrow array; every other row provably has no
-    match.  The spam caps test is decided in Arrow for ASCII rows.  PII
-    scan/scrub, toxicity lexicon, langid and quality run as tight
-    per-text loops over the batch (regex-backtracking-bound work that
-    cannot be expressed columnar) — still one Python roundtrip per
-    thousands of rows, never a per-row UDF.
+    match.  The toxicity lexicon surrogate runs only on the rows with a
+    lexicon token, found the same way (:func:`surrogate_prob_batch`).
+    The spam caps test is decided in Arrow for ASCII rows, and langid and
+    quality decide the ASCII rows from one Arrow token pass each over the
+    batch's bytes (:func:`detect_language_batch`,
+    :func:`quality_stats_batch`).  The one per-text loop left is the PII
+    scan and scrub, over the rows with a digit or an '@' only.
     """
     raw = texts
     s = texts.fillna("").astype(str)
@@ -416,7 +427,7 @@ def analyze_frame(texts: pd.Series, cfg: PipelineConfig = DEFAULT_CONFIG) -> pd.
             out[nz] = np.asarray(fn(list(s_arr[nz])), dtype=float)
         return out
 
-    # ---- per-text loops: toxicity lexicon/ensemble, pii scan/scrub, langid, quality ----
+    # ---- toxicity: lexicon surrogate or model ensemble ----
     if "toxicity" in enabled:
         if cfg.toxicity_model_batch_fns:
             # the real inference-stage shape: per model, ONE batched
@@ -435,51 +446,34 @@ def analyze_frame(texts: pd.Series, cfg: PipelineConfig = DEFAULT_CONFIG) -> pd.
             }
             tox_prob = np.where(blank_np, 0.0, tox_mod.ensemble_prob_batch(all_probs))
         else:
-            tox_prob = np.fromiter(
-                (0.0 if b else tox_mod.surrogate_prob(t) for t, b in zip(s_arr, blank_np)),
-                dtype=float, count=n,
-            )
+            tox_prob = tox_mod.surrogate_prob_batch(batch)
     else:
         tox_prob = np.zeros(n)
     tox_flag = (tox_prob >= cfg.toxicity_threshold) & ~blank_np & ("toxicity" in enabled)
 
-    scrubbed: List[Optional[str]] = []
-    redactions: List[list] = []
-    pii_sev: List[str] = []
-    pii_cats: List[list] = []
-    langs: List[str] = []
-    lang_confs: List[float] = []
-    ppl: List[float] = []
-    qscore: List[float] = []
-    qflag: List[bool] = []
-    ntok: List[int] = []
-    raw_arr = raw.to_numpy()
-    pii_on = "pii" in enabled
-    for i, t in enumerate(s_arr):
-        if blank_np[i] or not pii_on:
-            scrub, hits = (t, [])
-        else:
+    # ---- pii scan/scrub: the one per-text loop, over the rows with a digit or '@' ----
+    scrubbed: List[Optional[str]] = [None if na else t for t, na in zip(s_arr, raw.isna())]
+    redactions: List[list] = [[] for _ in range(n)]
+    pii_sev: List[str] = [NONE] * n
+    pii_cats: List[list] = [[] for _ in range(n)]
+    if "pii" in enabled:
+        for i in np.flatnonzero(scan_rows(batch) & ~blank_np):
+            t = s_arr[i]
             scrub, hits = pii_scrub(t)
-        scrubbed.append(scrub if raw_arr[i] is not None and not pd.isna(raw_arr[i]) else None)
-        redactions.append(
-            [{"type": h.type, "start": h.start, "end": h.end, "replacement": h.label} for h in hits]
-        )
-        if pii_on:
+            if not hits:
+                continue
+            scrubbed[i] = scrub  # a missing text is blank, so never scanned
+            redactions[i] = [
+                {"type": h.type, "start": h.start, "end": h.end, "replacement": h.label}
+                for h in hits
+            ]
             r = pii_result_from(t, hits)  # reuse the scrub pass's scan
-            pii_sev.append(r.severity)
-            pii_cats.append(list(r.categories))
-        else:
-            pii_sev.append(NONE)
-            pii_cats.append([])
-        lg, lc = detect_language(t)
-        langs.append(lg)
-        lang_confs.append(lc)
-        st = quality_stats(t)
-        ppl.append(st.perplexity)
-        qscore.append(quality_score(st))
-        qflag.append(quality_flagged(st))
-        ntok.append(st.n_tokens)
-    pii_flag = np.array([len(r) > 0 for r in redactions]) & ~blank_np & pii_on
+            pii_sev[i] = r.severity
+            pii_cats[i] = list(r.categories)
+    pii_flag = np.array([len(r) > 0 for r in redactions], dtype=bool)
+
+    langs, lang_confs = detect_language_batch(batch)
+    stats = quality_stats_batch(batch)
     pii_conf = np.where(pii_flag, 1.0, 0.0)
 
     # ---- severities (vectorized bands, same cut points as kernel modules) ----
@@ -555,10 +549,10 @@ def analyze_frame(texts: pd.Series, cfg: PipelineConfig = DEFAULT_CONFIG) -> pd.
             "nsfw_flagged": nsfw_flag, "nsfw_conf": nsfw_prob,
             "categories": categories,
             "lang": langs, "lang_conf": lang_confs,
-            "perplexity": ppl,
-            "quality_score": qscore,
-            "quality_flagged": qflag,
-            "n_tokens": ntok,
+            "perplexity": [st.perplexity for st in stats],
+            "quality_score": [quality_score(st) for st in stats],
+            "quality_flagged": [quality_flagged(st) for st in stats],
+            "n_tokens": [st.n_tokens for st in stats],
             "tox_severity": tox_sev.astype(str),
             "pii_severity": pii_sev,
             "inj_severity": inj_sev.astype(str),

@@ -12,7 +12,9 @@ character-n-gram approach:
      characteristic diacritics, scored as (hits / tokens); argmax with a
      fixed tie-break order.
 
-Pure Python/regex; vectorizes per Arrow batch inside the Spark UDF.
+:func:`detect_language` decides one text; :func:`detect_language_batch`
+decides a batch's ASCII rows from one Arrow token pass and runs
+:func:`detect_language` on the rest.
 """
 
 from __future__ import annotations
@@ -20,6 +22,12 @@ from __future__ import annotations
 import re
 from collections import Counter
 from typing import List, Tuple
+
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+
+from localmod_spark.kernel.prefilter import AsciiBatch, ascii_table
 
 # Fixed evaluation order = deterministic tie-break.
 _LATIN_PROFILES: List[Tuple[str, frozenset, str]] = [
@@ -60,6 +68,14 @@ for _i, (_lang, _words, _chars) in enumerate(_LATIN_PROFILES):
 _N_PROFILES = len(_LATIN_PROFILES)
 
 UNKNOWN = "und"
+
+# ASCII byte → its lowered character where that is a ``_WORD_RE`` char,
+# else a space: the mapped text's space-split tokens are the findall
+# tokens of the lowered text (an ASCII text matches no diacritic class
+# and no script range)
+WORD_BYTES = ascii_table(lambda c: c.lower() if _WORD_RE.fullmatch(c.lower()) else " ")
+_PROFILE_WORDS = [pa.array(sorted(words)) for _lang, words, _chars in _LATIN_PROFILES]
+_LANGS = np.array([lang for lang, _words, _chars in _LATIN_PROFILES] + [UNKNOWN], dtype=object)
 
 
 def detect_language(text: str) -> Tuple[str, float]:
@@ -108,3 +124,33 @@ def detect_language(text: str) -> Tuple[str, float]:
     if best_score == 0.0:
         return UNKNOWN, 0.0
     return best_lang, min(best_score, 1.0)
+
+
+def detect_language_batch(batch: AsciiBatch) -> Tuple[np.ndarray, np.ndarray]:
+    """:func:`detect_language` of every text of *batch*, as (lang, conf)
+    arrays.  The ASCII rows are scored from their word tokens: per profile,
+    ``pc.is_in`` over the distinct tokens and a per-row count of the hits,
+    divided by the row's token count, argmax in profile order (the first
+    of equal scores, as the strict ``>`` keeps).  The other rows run
+    :func:`detect_language`."""
+    m = len(batch.arrow)
+    best = np.zeros(m)
+    best_ix = np.full(m, _N_PROFILES)
+    for tokens in batch.tokens(WORD_BYTES):
+        rows = slice(tokens.lo, tokens.lo + tokens.n_rows)
+        n_tokens = np.bincount(tokens.rows, minlength=tokens.n_rows)
+        chunk_best, chunk_ix = best[rows], best_ix[rows]  # views
+        for i, words in enumerate(_PROFILE_WORDS):
+            hit = pc.is_in(tokens.words, value_set=words).to_numpy(zero_copy_only=False)
+            hits = np.bincount(tokens.rows[hit[tokens.codes]], minlength=tokens.n_rows)
+            score = np.divide(hits, n_tokens, out=np.zeros(tokens.n_rows), where=n_tokens > 0)
+            better = score > chunk_best
+            chunk_best[better] = score[better]
+            chunk_ix[better] = i
+    langs = np.empty(len(batch.texts), dtype=object)
+    confs = np.zeros(len(batch.texts))
+    langs[batch.ascii] = _LANGS[best_ix]
+    confs[batch.ascii] = np.minimum(best, 1.0)
+    for i in np.flatnonzero(~batch.ascii):
+        langs[i], confs[i] = detect_language(batch.texts[i])
+    return langs, confs

@@ -24,6 +24,9 @@ from __future__ import annotations
 import re
 from typing import List, NamedTuple, Optional, Tuple
 
+import numpy as np
+
+from localmod_spark.kernel.prefilter import AsciiBatch, gate
 from localmod_spark.kernel.types import CRITICAL, HIGH, LOW, MEDIUM, NONE, KernelResult, is_blank
 
 # (type, pattern, redaction label) in the reference's dict insertion order.
@@ -48,20 +51,36 @@ _COMPILED: List[Tuple[str, "re.Pattern[str]", str]] = [
 _NON_DIGIT = re.compile(r"\D")
 
 # Digit windows: maximal runs of the chars the six digit patterns can
-# match, each starting at a digit or at a '+'/'(' right before one.  Why
-# scanning only inside them finds exactly the full-text matches:
+# match, each starting at a digit, '+' or '('.  Why scanning only inside
+# them finds exactly the full-text matches:
 #   * every char that phone_us, phone_intl, ssn, credit_card, ip_address
 #     or date_of_birth can match is in ``[\d+\-.()/\s]``, so a match never
 #     crosses a window's end;
 #   * every such match starts at a digit, or at a '+' or '(' right before
 #     one, so its start lies inside a window (the window runs greedily to
 #     the end of its char run);
+#   * a window may also start at a '+' or '(' with no digit after it
+#     (``+ 12``, ``(see 12)``, the '+' of ``+(12)``); no match starts
+#     there, so the scan finds what it finds from the window's next digit
+#     or the '+'/'(' right before that digit.  A pattern that starts with
+#     a class lets sre search for the window's first char directly;
 #   * ``pos`` lets ``\b`` see the real previous char, but sre treats
 #     ``endpos`` as the end of the string — so the scan bound is the
 #     window end + 1, the (non-window) char ``\b`` must see.
 # Same engine as the patterns, so ``\d``/``\s`` cover the same Unicode
 # digits and spaces.
-_DIGIT_WINDOW = re.compile(r"[+(]?\d[\d+\-.()/\s]*")
+_DIGIT_WINDOW = re.compile(r"[+(\d][\d+\-.()/\s]*")
+
+
+# Every PII match holds an '@' (email) or a digit (the six others), so a
+# text without either has no hit.
+_SCAN_GATE = gate(re.compile(r"[\d@]"))
+
+
+def scan_rows(batch: AsciiBatch) -> np.ndarray:
+    """The rows of *batch* that :func:`pii_scan` can find a hit in: those
+    with a digit or an '@', decided in RE2 for the ASCII rows."""
+    return batch.search(_SCAN_GATE)
 
 
 class PIIHit(NamedTuple):

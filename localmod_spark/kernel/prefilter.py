@@ -30,6 +30,13 @@ batch's ASCII rows only; RE2 folds case and classes characters
 differently from Python outside ASCII, so a non-ASCII row (a lone
 surrogate included) never reaches pyarrow.  CPython ``re`` then confirms
 the RE2 hits and scans the non-ASCII rows.
+
+:meth:`AsciiBatch.tokens` gives the ASCII rows' tokens in one Arrow
+pass per chunk of about 256 KB of text: the bytes go through a 256-entry
+map (:func:`ascii_table`, built by asking Python's own rule about each
+ASCII character), the mapped rows split at spaces, and the tokens are
+dictionary-encoded.  The langid and quality kernels decide their ASCII
+rows from it.
 """
 
 from __future__ import annotations
@@ -38,7 +45,7 @@ import re
 from functools import lru_cache
 from re import _compiler, _parser
 from re import _constants as C
-from typing import NamedTuple, Optional
+from typing import Callable, Iterator, NamedTuple, Optional, Tuple
 
 import numpy as np
 import pyarrow as pa
@@ -145,6 +152,31 @@ def gate(pattern: re.Pattern, lowered: bool = False) -> Gate:
     return Gate(pattern, lowered, re2_prefilter(pattern, lowered))
 
 
+def ascii_table(rule: Callable[[str], str]) -> np.ndarray:
+    """256-entry byte map: each ASCII byte to ``rule`` of its character (one
+    ASCII character), every other byte to a space.  ASCII rows hold no
+    byte above 0x7f."""
+    table = np.full(256, ord(" "), dtype=np.uint8)
+    table[:128] = [ord(rule(c)) for c in _ASCII]
+    return table
+
+
+class Tokens(NamedTuple):
+    """The tokens of ASCII rows ``lo`` to ``lo + n_rows`` of a batch, in
+    text order."""
+
+    lo: int
+    n_rows: int
+    codes: np.ndarray  # int32: each token's index into ``words``
+    rows: np.ndarray  # int32: each token's row, counted from ``lo``; ascending
+    words: pa.Array  # the distinct tokens
+
+
+# Text bytes per token pass of AsciiBatch.tokens: bounds the pass's
+# temporaries, however large the batch
+_TOKEN_CHUNK_BYTES = 1 << 18
+
+
 class AsciiBatch:
     """One batch of texts with its ASCII rows as an Arrow array."""
 
@@ -152,6 +184,45 @@ class AsciiBatch:
         self.texts = texts
         self.ascii = np.fromiter(map(str.isascii, texts), dtype=bool, count=len(texts))
         self.arrow = pa.array(texts[self.ascii], type=pa.string())
+
+    def buffers(self) -> Tuple[np.ndarray, np.ndarray]:
+        """The ASCII rows' int32 offsets and their bytes, as numpy views."""
+        _, offsets, data = self.arrow.buffers()
+        offsets = np.frombuffer(offsets, dtype=np.int32)[: len(self.arrow) + 1]
+        return offsets, np.frombuffer(data, dtype=np.uint8)[: offsets[-1]]
+
+    def tokens(self, table: np.ndarray) -> Iterator[Tokens]:
+        """The ASCII rows' maximal runs of non-space bytes after mapping every
+        byte through *table*: ``str.split`` of the mapped text, as *table*
+        sends every byte Arrow counts as whitespace to a space.  One Arrow
+        split and dictionary encoding per chunk of whole rows of about
+        ``_TOKEN_CHUNK_BYTES`` bytes."""
+        offsets, data = self.buffers()
+        m = len(self.arrow)
+        # each chunk after the first starts at the row holding its first byte
+        firsts = np.arange(_TOKEN_CHUNK_BYTES, offsets[-1], _TOKEN_CHUNK_BYTES)
+        cuts = np.searchsorted(offsets, firsts, "right") - 1
+        bounds = np.unique([0, *cuts.tolist(), m]).tolist()
+        for lo, hi in zip(bounds, bounds[1:]):
+            start, end = offsets[lo], offsets[hi]
+            mapped = pa.StringArray.from_buffers(
+                hi - lo,
+                pa.py_buffer(offsets[lo : hi + 1] - start),
+                pa.py_buffer(table[data[start:end]]),
+            )
+            split = pc.ascii_split_whitespace(mapped)
+            per_row = np.diff(np.frombuffer(split.buffers()[1], dtype=np.int32)[: hi - lo + 1])
+            rows = np.repeat(np.arange(hi - lo, dtype=np.int32), per_row)
+            encoded = pc.list_flatten(split).dictionary_encode()
+            del mapped, split
+            codes = encoded.indices.to_numpy()
+            # Arrow gives an empty token at a leading or trailing space,
+            # where str.split gives none
+            empty = pc.index(encoded.dictionary, "").as_py()
+            if empty >= 0:
+                kept = codes != empty
+                codes, rows = codes[kept], rows[kept]
+            yield Tokens(lo, hi - lo, codes, rows, encoded.dictionary)
 
     def search(self, g: Gate, rows: Optional[np.ndarray] = None) -> np.ndarray:
         """``g.pattern.search`` truthiness per row (on the lowered text when

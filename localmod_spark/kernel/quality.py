@@ -25,7 +25,11 @@ from __future__ import annotations
 import math
 import string
 from collections import Counter
-from typing import NamedTuple
+from typing import List, NamedTuple, Tuple
+
+import pyarrow.compute as pc
+
+from localmod_spark.kernel.prefilter import AsciiBatch, Tokens, ascii_table
 
 # ~1.5 kB of ordinary English prose (written for this module) used purely
 # as bigram-statistics seed material.
@@ -62,7 +66,9 @@ for _i, _c in enumerate(_ALPHABET):
 
 
 def _sym_indices(text: str) -> np.ndarray:
-    return _BYTE_TO_SYM[np.frombuffer(text.lower().encode("utf-8"), dtype=np.uint8)]
+    # "surrogatepass": a lone surrogate encodes to three bytes >= 0x80
+    encoded = text.lower().encode("utf-8", "surrogatepass")
+    return _BYTE_TO_SYM[np.frombuffer(encoded, dtype=np.uint8)]
 
 
 def bigram_counts(text: str) -> np.ndarray:
@@ -93,6 +99,23 @@ _LOGPROB_FLAT = _LOGPROB.reshape(-1)
 # no Kelvin sign or long s; every byte of a multi-byte char is >= 0x80).
 _NON_ALPHA_BYTES = bytes(b for b in range(256) if chr(b) not in string.ascii_letters)
 
+# The batch form's byte tables, each built by asking Python about every
+# ASCII character (an ASCII row holds no other byte):
+#   * SPACE_BYTES: what ``str.split`` splits at (``\x0b`` and
+#     ``\x1c``-``\x1f`` included, unlike Arrow's whitespace) to a space,
+#     every other character kept;
+#   * _ALPHA_BYTES: 1 where ``_NON_ALPHA_BYTES`` keeps the byte
+#     (``[A-Za-z]``), else 0;
+#   * _LOWER_SYM: the bigram symbol of the lowered character;
+#   * _PAIR_LOGPROB: two bytes, read as one little-endian uint16, to the
+#     logprob of the transition between their symbols.
+SPACE_BYTES = ascii_table(lambda c: c if c.split() else " ")
+_ALPHA_BYTES = np.array([len(bytes([b]).translate(None, _NON_ALPHA_BYTES)) for b in range(256)])
+_LOWER_SYM = np.array(
+    [_BYTE_TO_SYM[ord(chr(b).lower())] if b < 128 else _N_SYMBOLS - 1 for b in range(256)]
+)
+_PAIR_LOGPROB = _LOGPROB[_LOWER_SYM[:, None], _LOWER_SYM[None, :]].T.reshape(-1)
+
 
 def char_perplexity(text: str) -> float:
     """Bigram perplexity over UTF-8 bytes of the lowercased text; 0.0 for
@@ -117,6 +140,9 @@ class QualityStats(NamedTuple):
     perplexity: float
 
 
+_NO_TOKENS = QualityStats(0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0)
+
+
 def quality_stats(text: str) -> QualityStats:
     # str.split() splits on the same whitespace set as sre's \s
     # (Py_UNICODE_ISSPACE) and drops empty tokens, as split-on-\s+ did
@@ -124,7 +150,7 @@ def quality_stats(text: str) -> QualityStats:
     n = len(tokens)
     n_chars = len(text)
     if n == 0:
-        return QualityStats(0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0)
+        return _NO_TOKENS
     # map(len)/Counter are the C-speed forms of the old per-token Python
     # loops — identical counts, same floats
     mean_len = sum(map(len, tokens)) / n
@@ -141,6 +167,84 @@ def quality_stats(text: str) -> QualityStats:
     else:
         dup = 0.0
     return QualityStats(n, mean_len, alpha, symbols, top, dup, char_perplexity(text))
+
+
+def _top_and_distinct(tokens: Tokens) -> Tuple[np.ndarray, np.ndarray]:
+    """Per row of *tokens*: the count of its most frequent token and the
+    number of its distinct token bigrams, from one sort each."""
+    codes, rows, n_words = tokens.codes, tokens.rows, len(tokens.words)
+    top = np.zeros(tokens.n_rows, dtype=np.int64)
+    distinct = np.zeros(tokens.n_rows, dtype=np.int64)
+    key = rows.astype(np.int64) * n_words + codes  # (row, token)
+    order = np.argsort(key)
+    key = key[order]
+    run_start = np.empty(len(key), dtype=bool)
+    run_start[:1] = True
+    np.not_equal(key[1:], key[:-1], out=run_start[1:])
+    starts = np.flatnonzero(run_start)
+    run_row = key[starts] // n_words  # each (row, token) run's row
+    del key
+    np.maximum.at(top, run_row, np.diff(starts, append=len(order)))
+    # a token's run number times n_words plus the next token's code is the
+    # bigram's key: below n_tokens ** 2, so within int64
+    run_no = np.empty(len(order), dtype=np.int64)
+    run_no[order] = np.cumsum(run_start) - 1
+    same_row = rows[1:] == rows[:-1]
+    bigrams = np.unique(run_no[:-1][same_row] * n_words + codes[1:][same_row])
+    np.add.at(distinct, run_row[bigrams // n_words], 1)
+    return top, distinct
+
+
+def quality_stats_batch(batch: AsciiBatch) -> List[QualityStats]:
+    """:func:`quality_stats` of every text of *batch*.  The ASCII rows come
+    from their whitespace tokens: per-token length, letter and symbol
+    counts summed per row, the top-token count and the distinct bigrams
+    from one sort each, and the perplexity as one gather and ``sum`` per
+    row of its byte pairs' logprobs (the floats, in the order, that
+    :func:`char_perplexity` sums).  The other rows run
+    :func:`quality_stats`."""
+    out: List[QualityStats] = [None] * len(batch.texts)  # type: ignore[list-item]
+    for i in np.flatnonzero(~batch.ascii):
+        out[i] = quality_stats(batch.texts[i])
+    ascii_rows = np.flatnonzero(batch.ascii).tolist()
+    offsets, data = batch.buffers()
+    # each byte and the next as one little-endian uint16 (the last byte
+    # pairs with none)
+    pairs = np.ndarray((max(len(data) - 1, 0),), dtype="<u2", buffer=data, strides=(1,))
+    for tokens in batch.tokens(SPACE_BYTES):
+        lo, hi = tokens.lo, tokens.lo + tokens.n_rows
+        words = tokens.words
+        # per distinct token: length, [A-Za-z] count, '#' and '...' count
+        # (none spans whitespace, so a row's counts are its tokens' sums)
+        ends = np.frombuffer(words.buffers()[1], dtype=np.int32)[: len(words) + 1]
+        chars = np.frombuffer(words.buffers()[2], dtype=np.uint8)[: ends[-1]]
+        alpha_upto = np.concatenate(([0], np.cumsum(_ALPHA_BYTES[chars])))
+        symbols = pc.add(pc.count_substring(words, "#"), pc.count_substring(words, "..."))
+        per_row = [
+            np.bincount(tokens.rows, weights=per_token[tokens.codes], minlength=tokens.n_rows)
+            .astype(np.int64)
+            .tolist()
+            for per_token in (np.diff(ends), np.diff(alpha_upto[ends]), symbols.to_numpy())
+        ]
+        n_tokens = np.bincount(tokens.rows, minlength=tokens.n_rows).tolist()
+        top, distinct = _top_and_distinct(tokens)
+        cols = zip(
+            ascii_rows[lo:hi], n_tokens, *per_row, top.tolist(), distinct.tolist(),
+            offsets[lo:hi].tolist(), np.diff(offsets[lo : hi + 1]).tolist(),
+        )
+        for i, n, n_token_chars, n_alpha, n_sym, n_top, n_distinct, start, n_chars in cols:
+            if n == 0:
+                out[i] = _NO_TOKENS
+                continue
+            ppl = 0.0
+            if n_chars >= 2:
+                total = _PAIR_LOGPROB[pairs[start : start + n_chars - 1]].sum()
+                ppl = math.exp(-total / (n_chars - 1))
+            dup = 1.0 - n_distinct / (n - 1) if n >= 2 else 0.0
+            out[i] = QualityStats(
+                n, n_token_chars / n, n_alpha / max(n_chars, 1), n_sym / n, n_top / n, dup, ppl
+            )
+    return out
 
 
 # Conservative gates: only degenerate text trips the flag.

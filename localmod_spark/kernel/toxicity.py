@@ -23,6 +23,7 @@ from typing import Callable, Mapping, Optional
 
 import numpy as np
 
+from localmod_spark.kernel.prefilter import AsciiBatch, gate
 from localmod_spark.kernel.types import CRITICAL, HIGH, LOW, MEDIUM, NONE, KernelResult, is_blank
 
 DEFAULT_THRESHOLD = 0.17  # ensemble flag threshold, `toxicity.py:46`
@@ -98,6 +99,10 @@ _LEXICON = {
 }
 
 _TOKEN_RE = re.compile(r"[a-z']+")
+# A lexicon word as a whole ``_TOKEN_RE`` token of the lowered text: the
+# texts it matches are exactly those surrogate_prob scores above 0.0
+_LEXICON_TOKEN = re.compile(r"(?<![a-z'])(?:" + "|".join(sorted(_LEXICON)) + r")(?![a-z'])")
+_LEXICON_GATE = gate(_LEXICON_TOKEN, lowered=True)
 
 
 def surrogate_prob(text: str) -> float:
@@ -110,6 +115,16 @@ def surrogate_prob(text: str) -> float:
     for tok in tokens & _LEXICON.keys():
         prod *= 1.0 - _LEXICON[tok]
     return 1.0 - prod
+
+
+def surrogate_prob_batch(batch: AsciiBatch) -> np.ndarray:
+    """:func:`surrogate_prob` of every text of *batch*: 0.0 where
+    ``_LEXICON_GATE`` finds no lexicon token (decided in RE2 for the
+    ASCII rows), :func:`surrogate_prob` on the rest."""
+    out = np.zeros(len(batch.texts))
+    idx = np.flatnonzero(batch.search(_LEXICON_GATE))
+    out[idx] = [surrogate_prob(t) for t in batch.texts[idx]]
+    return out
 
 
 def _toxicity_severity(confidence: float, threshold: float) -> str:

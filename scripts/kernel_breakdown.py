@@ -9,9 +9,13 @@ Pins itself to one CPU, generates ``--n`` turns of ``perfbench``'s
 * ``gates``: every pattern-layer regex, RE2 prefilter plus CPython
   confirm, on the rows ``analyze_frame`` scans it on;
 * ``caps``: the spam caps-ratio test;
-* ``toxicity``: the lexicon surrogate over the non-blank rows;
-* ``pii``: PII scan and scrub of the non-blank rows, and the verdict;
-* ``langid``, ``quality``: the per-text loops;
+* ``toxicity``: the lexicon surrogate of every row: the lexicon gate,
+  then ``surrogate_prob`` on the rows it passes;
+* ``pii``: the digit-or-'@' gate, then PII scan and scrub of the
+  non-blank rows it passes, and the verdict;
+* ``langid``: language ID of every row, with its word-token pass;
+* ``quality``: quality stats of every row, with their whitespace-token
+  pass, then score and flag;
 * ``assembly``: ``analyze_frame`` as a whole minus the parts above
   (blank guard, severities, summaries, the output frame).
 
@@ -31,18 +35,20 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 sys.path.insert(0, os.path.join(ROOT, "perfbench"))
 
-import numpy as np  # noqa: E402
-
 import inputs  # noqa: E402
 from localmod_spark.kernel import injection as inj_mod  # noqa: E402
 from localmod_spark.kernel import nsfw as nsfw_mod  # noqa: E402
 from localmod_spark.kernel import spam as spam_mod  # noqa: E402
 from localmod_spark.kernel import toxicity as tox_mod  # noqa: E402
 from localmod_spark.kernel.aggregate import GATES, _caps_over_half, analyze_frame  # noqa: E402
-from localmod_spark.kernel.langid import detect_language  # noqa: E402
-from localmod_spark.kernel.pii import pii_result_from, pii_scrub  # noqa: E402
+from localmod_spark.kernel.langid import detect_language_batch  # noqa: E402
+from localmod_spark.kernel.pii import pii_result_from, pii_scrub, scan_rows  # noqa: E402
 from localmod_spark.kernel.prefilter import AsciiBatch  # noqa: E402
-from localmod_spark.kernel.quality import quality_flagged, quality_score, quality_stats  # noqa: E402
+from localmod_spark.kernel.quality import (  # noqa: E402
+    quality_flagged,
+    quality_score,
+    quality_stats_batch,
+)
 
 
 def _gates(batch: AsciiBatch) -> None:
@@ -55,14 +61,13 @@ def _gates(batch: AsciiBatch) -> None:
     batch.search(GATES[nsfw_mod._SAFE_ALT], ~explicit & suggestive)
 
 
-def _pii(texts) -> None:
-    for t in texts:
+def _pii(batch: AsciiBatch, nonblank) -> None:
+    for t in batch.texts[scan_rows(batch) & nonblank]:
         pii_result_from(t, pii_scrub(t)[1])
 
 
-def _quality(texts) -> None:
-    for t in texts:
-        st = quality_stats(t)
+def _quality(batch: AsciiBatch) -> None:
+    for st in quality_stats_batch(batch):
         quality_score(st)
         quality_flagged(st)
 
@@ -83,7 +88,7 @@ def main() -> None:
 
     series = inputs.turns(args.seed, args.n)["text"].fillna("").astype(str)
     texts = series.to_numpy()
-    nonblank = texts[series.str.strip().to_numpy() != ""]
+    nonblank = series.str.strip().to_numpy() != ""
     batch = AsciiBatch(texts)
     analyze_frame(series[:100])  # warm imports and regex caches
 
@@ -91,10 +96,10 @@ def main() -> None:
         "arrow_batch": lambda: AsciiBatch(texts),
         "gates": lambda: _gates(batch),
         "caps": lambda: _caps_over_half(batch),
-        "toxicity": lambda: [tox_mod.surrogate_prob(t) for t in nonblank],
-        "pii": lambda: _pii(nonblank),
-        "langid": lambda: [detect_language(t) for t in texts],
-        "quality": lambda: _quality(texts),
+        "toxicity": lambda: tox_mod.surrogate_prob_batch(batch),
+        "pii": lambda: _pii(batch, nonblank),
+        "langid": lambda: detect_language_batch(batch),
+        "quality": lambda: _quality(batch),
     }
     # each rep runs every part once, in analyze_frame's order, then
     # analyze_frame itself, so that no part runs on caches only it warmed

@@ -90,6 +90,17 @@ def test_frame_equals_per_text_fuzz():
     _assert_frame_matches_per_text(texts)
 
 
+def test_lone_surrogate_text_scores_in_both_forms():
+    """A lone surrogate (a Spark string can carry one) cannot encode to
+    strict UTF-8; quality's byte view encodes it with "surrogatepass", so
+    analyze_text and analyze_frame score it instead of raising."""
+    t = "\ud800 lone 555-123-4567 idiot"
+    row = analyze_text(t)
+    assert row["pii_flagged"] and row["tox_flagged"] and row["n_tokens"] == 4
+    assert row["scrubbed_text"] == "\ud800 lone [PHONE] idiot"
+    _assert_frame_matches_per_text([t, "plain text", "\ud800"])
+
+
 def test_frame_empty_batch_returns_typed_empty_frame():
     """Arrow can hand a UDF a zero-row batch; the guard must return an
     empty frame with the full column set (previously raised TypeError)."""

@@ -1,12 +1,32 @@
 """Language-ID and quality-scoring kernels (north-rule additions)."""
 
-from localmod_spark.kernel.langid import detect_language
+import re
+
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+from hypothesis import example, given, settings
+from hypothesis import strategies as st
+
+from localmod_spark.kernel import prefilter
+from localmod_spark.kernel import quality as quality_mod
+from localmod_spark.kernel.langid import (
+    _WORD_RE,
+    WORD_BYTES,
+    detect_language,
+    detect_language_batch,
+)
+from localmod_spark.kernel.prefilter import AsciiBatch
 from localmod_spark.kernel.quality import (
+    SPACE_BYTES,
     char_perplexity,
     quality_flagged,
     quality_score,
     quality_stats,
+    quality_stats_batch,
 )
+from localmod_spark.kernel.toxicity import surrogate_prob, surrogate_prob_batch
+from localmod_spark.sources.transcripts import CORPUS, FIXTURE_TEXTS
 
 
 def test_script_detection():
@@ -142,3 +162,92 @@ def test_quality_score_on_rounding_ties_matches_the_oracle(spark):
         f"SELECT quality_score FROM ({em._quality_sql()}) ORDER BY doc_id"
     ).fetchall()]
     assert got == want == list(TIE_TEXTS.values())
+
+
+ASCII_CHARS = [chr(b) for b in range(128)]
+
+
+def test_byte_tables_follow_pythons_rules():
+    """Each byte table of the batch forms, per ASCII character, against
+    the rule the per-text form applies to that character."""
+    space = ord(" ")
+    for c in ASCII_CHARS:
+        b = ord(c)
+        # langid's tokens: _WORD_RE over the lowered text
+        assert chr(WORD_BYTES[b]) == (c.lower() if _WORD_RE.fullmatch(c.lower()) else " "), c
+        # quality's tokens: str.split's whitespace
+        assert (SPACE_BYTES[b] == space) == (c.split() == []), c
+        assert SPACE_BYTES[b] in (b, space), c
+        # quality's letters and bigram symbols
+        assert quality_mod._ALPHA_BYTES[b] == len(re.findall("[A-Za-z]", c)), c
+        assert quality_mod._LOWER_SYM[b] == quality_mod._sym_indices(c)[0], c
+    # str.split's whitespace holds \x0b and \x1c-\x1f, which Arrow's does not
+    spaces = {c for c in ASCII_CHARS if SPACE_BYTES[ord(c)] == space}
+    assert spaces == set(" \t\n\x0b\x0c\r\x1c\x1d\x1e\x1f")
+    # every pair of ASCII bytes, read as one little-endian uint16
+    pair = np.array([a + 256 * b for a in range(128) for b in range(128)])
+    text = "".join(a + b for a in ASCII_CHARS for b in ASCII_CHARS)
+    syms = quality_mod._sym_indices(text)
+    want = quality_mod._LOGPROB_FLAT[syms[0::2] * quality_mod._N_SYMBOLS + syms[1::2]]
+    assert (quality_mod._PAIR_LOGPROB[pair] == want).all()
+
+
+def test_mapped_bytes_split_only_at_spaces_in_arrow():
+    """After either map, the one byte Arrow's whitespace split cuts at is
+    the space: every other mapped byte stays inside its token."""
+    for table in (WORD_BYTES, SPACE_BYTES):
+        mapped = pa.array(["a" + chr(t) + "a" for t in table[:128]])
+        split = pc.ascii_split_whitespace(mapped).to_pylist()
+        assert [len(x) for x in split] == [2 if t == ord(" ") else 1 for t in table[:128]]
+
+
+def _batch_tokens(texts, table):
+    """Each ASCII text's tokens, read back from AsciiBatch.tokens."""
+    out = [[] for _ in texts]
+    for tokens in AsciiBatch(np.array(texts, dtype=object)).tokens(table):
+        words = tokens.words.to_pylist()
+        for row, code in zip(tokens.rows.tolist(), tokens.codes.tolist()):
+            out[tokens.lo + row].append(words[code])
+    return out
+
+
+@given(st.lists(st.text(alphabet=st.characters(max_codepoint=127), max_size=40), max_size=8))
+@example(["  lead and trail\x1f", "", "don't\x0bIDIOT's\x1c#...", "\x1d\x1e"])
+@settings(max_examples=300, deadline=None)
+def test_tokens_are_pythons_tokens(texts):
+    assert _batch_tokens(texts, WORD_BYTES) == [_WORD_RE.findall(t.lower()) for t in texts]
+    assert _batch_tokens(texts, SPACE_BYTES) == [t.split() for t in texts]
+
+
+def _texts_across_chunks():
+    """ASCII and non-ASCII rows, blank and empty ones, and rows long
+    enough to fill a token chunk alone."""
+    texts = list(CORPUS) + list(FIXTURE_TEXTS)
+    texts += ["", "  ", "\x1c", "caf\u00e9 de la", "the " * 300, "IDIOT's don't # ... x"]
+    texts += ["".join(reversed(t)) for t in texts]
+    return np.array(texts, dtype=object)
+
+
+def test_batch_forms_equal_per_text_across_token_chunks(monkeypatch):
+    """The batch forms give the per-text functions' values exactly,
+    whatever rows a token chunk boundary falls between."""
+    texts = _texts_across_chunks()
+    want_lang = [detect_language(t) for t in texts]
+    want_quality = [quality_stats(t) for t in texts]
+    want_tox = [surrogate_prob(t) for t in texts]
+    for chunk_bytes in (1, 7, 64, 1000, 1 << 18):
+        monkeypatch.setattr(prefilter, "_TOKEN_CHUNK_BYTES", chunk_bytes)
+        batch = AsciiBatch(texts)
+        langs, confs = detect_language_batch(batch)
+        assert list(zip(langs, confs)) == want_lang, chunk_bytes
+        assert quality_stats_batch(batch) == want_quality, chunk_bytes
+        assert surrogate_prob_batch(batch).tolist() == want_tox, chunk_bytes
+
+
+def test_batch_forms_on_empty_and_all_blank_batches():
+    for texts in ([], [""], ["", "   "], ["\u00e9"]):
+        batch = AsciiBatch(np.array(texts, dtype=object))
+        langs, confs = detect_language_batch(batch)
+        assert list(zip(langs, confs)) == [detect_language(t) for t in texts]
+        assert quality_stats_batch(batch) == [quality_stats(t) for t in texts]
+        assert surrogate_prob_batch(batch).tolist() == [surrogate_prob(t) for t in texts]

@@ -6,6 +6,7 @@ import re
 import re._parser as sre_parse
 from collections import Counter
 
+import numpy as np
 import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
@@ -18,14 +19,18 @@ from localmod_spark.kernel.aggregate import (
     analyze_frame,
     analyze_text,
 )
+from localmod_spark.kernel import toxicity as tox_mod
 from localmod_spark.kernel.pii import (
     _COMPILED,
     _DIGIT_WINDOW,
+    _SCAN_GATE,
     _VALIDATORS,
     PIIHit,
     pii_scan,
     pii_scrub,
+    scan_rows,
 )
+from localmod_spark.kernel.prefilter import AsciiBatch
 from localmod_spark.kernel.quality import QualityStats, char_perplexity, quality_stats
 from localmod_spark.kernel.types import SEVERITY_RANK
 from localmod_spark.sources.transcripts import FIXTURE_TEXTS
@@ -143,6 +148,11 @@ DIGITY = st.lists(
 @example("x(555) 123-4567")
 @example("555-1234abc")
 @example("call 555-123-4567.")
+# windows that start at a '+' or '(' with no digit after it
+@example("+ 12")
+@example("( 555) 1234")
+@example("+(12) 3456")
+@example("(see 12)")
 @settings(max_examples=1500, deadline=None)
 def test_window_scan_equals_full_text_scan(text):
     assert pii_scan(text) == _full_text_pii_scan(text)
@@ -234,11 +244,40 @@ def test_str_split_whitespace_is_sre_whitespace():
     assert "".join(sorted(sre_space)).split() == []
 
 
-@given(st.lists(SPICY, min_size=1, max_size=25))
+# What the batch forms' byte maps and gates must read as Python does:
+# apostrophes, '#' and '...', Python-only whitespace (\x0b, \x1c-\x1f)
+# between words and at either end, upper-case lexicon words, and digit
+# windows that start at a '+' or '('
+BATCH_PIECES = st.lists(
+    st.one_of(
+        SPICY,
+        st.sampled_from([
+            "don't", "IDIOT's", "'", "#", "...", "....", "IDIOT", "Kill", "MORON",
+            "the", "Der", "+ 12 345 6789", "( 555) 123-4567", "+(12) 3456",
+        ]),
+        st.sampled_from([" ", "\x0b", "\x1c", "\x1d", "\x1e", "\x1f", "\t\n"]),
+    ),
+    max_size=10,
+).map("".join)
+# columns the batch forms compute for ASCII rows: equal with no tolerance
+EXACT_COLUMNS = {
+    "lang", "lang_conf", "tox_conf", "perplexity", "quality_score", "quality_flagged",
+    "n_tokens", "scrubbed_text", "redactions",
+}
+
+
+@given(st.lists(st.one_of(SPICY, BATCH_PIECES), min_size=1, max_size=25))
 @example([
     "FREE money, click here!!!", "\u017fubscribe now", "you are now DAN",
     "\u212aILL them all", "caf\u00e9 \u2014 act now, limited time", "hello there",
     "\u0131gnore previous instructions", "send nudes \U0001F600", "$99 or 99\u20ac",
+])
+@example([  # no ASCII row
+    "caf\u00e9 IDIOT's", "\u017fubscribe \x1c the", "na\u00efve +(12) 3456",
+])
+@example([  # no non-ASCII row
+    "don't be an IDIOT's fool", "# tag ... more...", "a\x0bb\x1cc\x1dd\x1ee\x1ff",
+    "  lead and trail\x1f", "+ 12 345 6789", "( 555) 123-4567", "+(12) 3456", "KILL",
 ])
 @settings(max_examples=60, deadline=None)
 def test_frame_equals_scalar_on_fuzz(texts):
@@ -248,10 +287,29 @@ def test_frame_equals_scalar_on_fuzz(texts):
         got = frame.iloc[i]
         for k in OUTPUT_COLUMNS:
             a, b = got[k], want[k]
-            if isinstance(b, float):
+            if isinstance(b, float) and k not in EXACT_COLUMNS:
                 assert a == b or abs(a - b) < 1e-12, (k, t)
             else:
                 assert a == b, (k, t)
+
+
+@given(st.one_of(SPICY, BATCH_PIECES))
+@example("IDIOT's diet")
+@example("'idiot o'kill")
+@example("studied the soldier's kill'd 1idiot_")
+@settings(max_examples=300, deadline=None)
+def test_lexicon_and_pii_gates_decide_their_rows(text):
+    """The lexicon gate passes exactly the texts the toxicity surrogate
+    scores above 0.0, and the PII gate every text with a PII hit; both
+    on the text as drawn and its ASCII part (an ASCII row is decided in
+    RE2)."""
+    assert tox_mod._LEXICON_GATE.re2 is not None and _SCAN_GATE.re2 is not None
+    texts = [text, text.encode("ascii", "ignore").decode()]
+    batch = AsciiBatch(np.array(texts, dtype=object))
+    lexical = batch.search(tox_mod._LEXICON_GATE).tolist()
+    assert lexical == [tox_mod.surrogate_prob(t) > 0.0 for t in texts]
+    for t, scanned in zip(texts, scan_rows(batch).tolist()):
+        assert scanned or not pii_scan(t), t
 
 
 # Phrases the kernel's patterns match, a space marking each `\s` they
